@@ -1,13 +1,20 @@
+"""Run named driver queries on Spark and on their DuckDB oracle, and compare.
+
+    SF=<testdata tier dir> PYTHONPATH=. python scripts/debug_oracle.py <query>...
+
+Prints match / MISMATCH / an error per query and exits 1 unless every named
+query matched its oracle.
+"""
+
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as em
 from slower_whisper_spark.session import get_spark
-
-import os
 
 SF = os.environ.get("SF", "/root/testdata/sf0.001")
 # oracles with data-derived literals (kll_drift_psi) must build them from
@@ -17,7 +24,7 @@ con = duckdb.connect()
 for t in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
     con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
 
-spark = get_spark(master="local[8]", shuffle_partitions=8)
+spark = get_spark(shuffle_partitions=8)
 spark.sparkContext.setLogLevel("ERROR")
 
 names = sys.argv[1:]
@@ -40,28 +47,36 @@ def norm(df):
         rows.append("|".join(vals))
     return sorted(rows)
 
-for name in names:
+
+def check(name):
+    """Print the comparison for one query; True iff it matched its oracle."""
     print(f"===== {name}")
     try:
         spdf = Q[name](spark, SF).toPandas()
     except Exception as e:
         print("SPARK ERROR:", type(e).__name__, str(e)[:300])
-        continue
+        return False
     if name not in O:
         print("no oracle; rows:", len(spdf))
-        continue
+        return False
     try:
         odf = con.sql(O[name]).df()
     except Exception as e:
         print("DUCKDB ERROR:", str(e)[:300])
-        continue
+        return False
     spdf.columns = [c.lower() for c in spdf.columns]
     odf.columns = [c.lower() for c in odf.columns]
     if sorted(spdf.columns) != sorted(odf.columns):
         print("COLS spark:", sorted(spdf.columns), "oracle:", sorted(odf.columns))
-        continue
+        return False
     if len(spdf) != len(odf):
         print("ROWS spark:", len(spdf), "oracle:", len(odf))
     l, r = norm(spdf), norm(odf)
     bad = [(a, b) for a, b in zip(l, r) if a != b]
     print("match" if (l == r) else f"MISMATCH {len(bad)}; first: {bad[:3]}")
+    return l == r
+
+
+failed = [name for name in names if not check(name)]
+print(f"{len(names) - len(failed)}/{len(names)} match" + (f"; failed: {' '.join(failed)}" if failed else ""))
+sys.exit(1 if failed else 0)

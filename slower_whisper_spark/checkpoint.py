@@ -17,10 +17,9 @@ Semantics:
     rule_hash == current suite hash AND snapshot_id == current snapshot —
     changing the rules or the data invalidates the checkpoint, exactly like
     the reference's lockfile hash check.
-  * resume = set-difference driver-side (the manifest is per-partition,
-    i.e. thousands of rows at 10^12-doc scale — it lives comfortably on the
-    driver; at larger partition counts it can be read as a DataFrame and
-    anti-joined instead, see ``pending_partitions_df``).
+  * resume = set-difference driver-side over the latest entry per
+    partition (the manifest is per-partition, i.e. thousands of rows at
+    10^12-doc scale — it lives comfortably on the driver).
 
 Storage is newline-delimited JSON, append-only, one file per run (atomic on
 any filesystem; an Iceberg manifest table is a drop-in swap).
@@ -124,12 +123,9 @@ class CheckpointManifest:
     def completed_partitions(self, rule_hash: str, snapshot_id: str | None = None) -> set[str]:
         """Latest-entry-wins per partition; done iff that entry is a success
         under the SAME rule hash (and snapshot, when given)."""
-        latest: dict[str, ManifestEntry] = {}
-        for e in self.load():  # files are time-ordered; later overwrites
-            latest[e.partition] = e
         return {
             p
-            for p, e in latest.items()
+            for p, e in self.latest_per_partition().items()
             if e.status == STATUS_SUCCESS
             and e.rule_hash == rule_hash
             and (snapshot_id is None or e.snapshot_id == snapshot_id)
@@ -143,25 +139,11 @@ class CheckpointManifest:
         THAT PARTITION equals its current per-partition snapshot — appends
         to one partition no longer invalidate the rest (Iceberg per-
         partition manifest semantics)."""
-        latest: dict[str, ManifestEntry] = {}
-        for e in self.load():
-            latest[e.partition] = e
         return {
             p
-            for p, e in latest.items()
+            for p, e in self.latest_per_partition().items()
             if e.status == STATUS_SUCCESS
             and e.rule_hash == rule_hash
             and p in snapshots
             and e.snapshot_id == snapshots[p]
         }
-
-    def as_df(self, spark):
-        """Manifest as a DataFrame — the anti-join resume path for very
-        large partition counts."""
-        rows = [e.to_dict() for e in self.load()]
-        schema = (
-            "partition string, snapshot_id string, partition_spec string, rule_hash string, "
-            "status string, metrics map<string,double>, completed_at string, run_id string, "
-            "sketches map<string,string>"
-        )
-        return spark.createDataFrame(rows, schema) if rows else spark.createDataFrame([], schema)

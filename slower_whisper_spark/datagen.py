@@ -193,60 +193,6 @@ def generate_docs(
     return docs, expected, ref_domains
 
 
-def write_docs_dataset(
-    out_dir: str,
-    n_rows: int,
-    spark=None,
-    seed: int = 42,
-    partition_by_day: bool = True,
-    **kwargs,
-) -> dict[str, str]:
-    """Materialize docs/expected_text/ref_domains as parquet under out_dir.
-
-    When a SparkSession is given, docs are written partitioned by
-    ``warc_day`` (the engine's Iceberg-style partition column); otherwise a
-    single arrow parquet file is written.
-    """
-    import os
-
-    import pyarrow.parquet as pq
-
-    docs, expected, ref = generate_docs(n_rows, seed=seed, **kwargs)
-    paths = {
-        "docs": os.path.join(out_dir, "docs"),
-        "expected_text": os.path.join(out_dir, "expected_text.parquet"),
-        "ref_domains": os.path.join(out_dir, "ref_domains.parquet"),
-    }
-    os.makedirs(out_dir, exist_ok=True)
-    # small row groups: a parquet file parallelizes only across row groups —
-    # default 1M-row groups would cap the expected-hash join scan at
-    # n_rows/1M tasks no matter how many cores the cluster has
-    pq.write_table(
-        pa.Table.from_pandas(expected, preserve_index=False),
-        paths["expected_text"],
-        row_group_size=50_000,
-    )
-    pq.write_table(pa.Table.from_pandas(ref, preserve_index=False), paths["ref_domains"])
-
-    if spark is not None and partition_by_day:
-        sdf = spark.createDataFrame(docs)
-        from pyspark.sql import functions as F
-
-        (
-            sdf.withColumn("warc_day", F.to_date("warc_ts"))
-            .repartition("warc_day")
-            .write.mode("overwrite")
-            # several files per day so a straggler day can't stall a stage
-            .option("maxRecordsPerFile", 40_000)
-            .partitionBy("warc_day")
-            .parquet(paths["docs"])
-        )
-    else:
-        pq.write_table(pa.Table.from_pandas(docs, preserve_index=False), paths["docs"] + ".parquet")
-        paths["docs"] = paths["docs"] + ".parquet"
-    return paths
-
-
 def write_docs_dataset_chunked(
     out_dir: str,
     n_rows: int,

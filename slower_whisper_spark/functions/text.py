@@ -180,20 +180,6 @@ def hashed_shingle_rows(df, id_col: str, text_col: str, n: int = 3):
     return th.select("id", F.explode(grams).alias("sh"))
 
 
-def hashed_gram_arrays(df, id_col: str, text_col: str, n: int = 3):
-    """(id, __grams array<bigint>) — the per-document hashed-shingle array
-    ``hashed_shingle_rows`` explodes, exposed so row-local consumers
-    (e.g. contamination containment's per-doc SET via array_distinct) can
-    dedup/size the grams with ZERO shuffle before any explode.
-
-    WARNING: never ``F.explode()`` the returned ``__grams`` column — see the
-    InferFiltersFromGenerate note on ``hashed_shingle_rows``. Use
-    ``hashed_shingle_rows`` (or explode the expression via
-    ``_hashed_token_grams`` / ``F.explode_outer``) instead."""
-    th, grams = _hashed_token_grams(df, id_col, text_col, n=n)
-    return th.select("id", grams.alias("__grams"))
-
-
 def _hashed_token_grams(df, id_col: str, text_col: str, n: int = 3):
     """Internal shared core of the hashed-shingle builders: returns
     ``(th, grams)`` where ``th`` is the (id, __th, __n) frame with the

@@ -556,17 +556,3 @@ def decode_media(
 
     narrow = df.select(key_col, binary_col)
     return narrow.mapInPandas(decode_batches, schema=DECODE_OUTPUT_SCHEMA)
-
-
-def frame_sample_plan(n_frames_expr: str = "cast(meta.duration_sec as int)"):
-    """Placeholder for video frame sampling: the plan-side contract (explode
-    frame indices, one row per sampled frame) without a codec."""
-    from pyspark.sql import functions as F
-
-    def apply(decoded: DataFrame, fps: float = 1.0) -> DataFrame:
-        n = F.greatest(F.expr(n_frames_expr), F.lit(0))
-        return decoded.select(
-            "url", F.explode(F.sequence(F.lit(0), n)).alias("frame_idx")
-        )
-
-    return apply

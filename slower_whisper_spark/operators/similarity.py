@@ -28,18 +28,6 @@ def _dot(a, b) -> F.Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v)
 
 
-def _norm(a) -> F.Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda s, v: s + v * v))
-
-
-def cosine(a, b) -> F.Column:
-    """Expression-form cosine (higher-order functions). Kept for inline/
-    declarative use; the ANN re-rank paths use the Arrow-batch numpy kernel
-    (``_pair_cos``) — the HOF form runs interpreted and stops scaling with
-    cores once candidates reach millions of pairs."""
-    return (_dot(a, b) / (_norm(a) * _norm(b))).cast("double")
-
-
 def _pair_cos(a, b, compute_dtype: str = "float64") -> F.Column:
     from slower_whisper_spark.functions.vectorized import make_cosine_pair
 

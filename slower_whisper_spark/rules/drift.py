@@ -9,10 +9,14 @@ per-partition histogram to the checkpointed baseline histogram with PSI
 (Population Stability Index) or KS (max CDF distance), and fail partitions
 whose statistic exceeds the threshold.
 
-Everything is declarative Spark: ``width_bucket`` → ``groupBy(partition,
-bucket).count()`` → broadcast-join the (tiny) baseline histogram → windowed
-cumulative sums for KS. The baseline itself is a small JSON-able dict that
-lives in the checkpoint manifest (mergeable across runs by summing counts).
+There is one computation. Each bucket's count is a conditional-sum
+aggregate (``fold_agg_exprs``), which ConstraintSuite folds into its pass-1
+``groupBy(partition).agg(...)``; PSI/KS are then SQL-text projections over
+that one wide row per partition (``fold_verdict``). ``evaluate`` and
+``statistic_df`` run the same aggregate on their own, so every entry point
+costs one aggregation and no joins. The baseline itself is a small
+JSON-able dict that lives in the checkpoint manifest (mergeable across runs
+by summing counts).
 """
 
 from __future__ import annotations
@@ -20,10 +24,11 @@ from __future__ import annotations
 from dataclasses import dataclass, field, asdict
 from typing import Any
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from slower_whisper_spark.rules.base import TableRule
+from slower_whisper_spark.sqltext import sql_double, sql_ident, sql_str
 
 _EPS = 1e-6
 
@@ -39,22 +44,7 @@ def _expr_or_col(name: str):
 def _sql_ref(name: str) -> str:
     """SQL text for the same reference `_expr_or_col` builds: expressions
     pass through, plain names are backtick-quoted."""
-    return name if "(" in name else "`" + name.replace("`", "``") + "`"
-
-
-def _sql_str(s: str) -> str:
-    # backslashes first: Spark's SQL parser treats \ as an escape inside
-    # string literals by default, so an unescaped category value containing
-    # one would parse to a different literal than the F.lit Column path it
-    # replaced (ADVICE r5 #4)
-    return "'" + s.replace("\\", "\\\\").replace("'", "''") + "'"
-
-
-def _dlit(v: float) -> str:
-    """Exact double literal: repr round-trips the float and CAST(string AS
-    DOUBLE) parses with Double.parseDouble, so the SQL-text plan computes on
-    bit-identical constants to the old F.lit(float) Column path."""
-    return f"CAST('{float(v)!r}' AS DOUBLE)"
+    return name if "(" in name else sql_ident(name)
 
 
 @dataclass
@@ -204,9 +194,9 @@ class Drift(TableRule):
         }
 
     # ------------------------------------------------------------------ #
-    # fold-into-scan path: bucket counts become pass-1 aggregates; PSI/KS
-    # are then pure projections over the (tiny, cached) wide row — the
-    # drift check costs ZERO extra scans of the table.
+    # bucket counts are aggregates (folded into the suite's pass-1 scan, or
+    # run alone by evaluate/statistic_df); PSI/KS are then pure projections
+    # over the (tiny) wide row — inside a suite, drift costs ZERO extra scans.
     # ------------------------------------------------------------------ #
     def _bucket_ids(self) -> list[int]:
         b = self.baseline
@@ -218,19 +208,19 @@ class Drift(TableRule):
         return ids + [-1]  # -1 = unseen category
 
     def _row_bucket_sql(self) -> str:
-        """The per-row bucket id as SQL TEXT — the fold path ships one parsed
-        string per bucket aggregate instead of a py4j round-trip per Column
-        operator (plan construction for a 40-rule suite is driver-SERIAL at
-        both ends of a scaling run, so it is sized like any other phase)."""
+        """The per-row bucket id as SQL TEXT — one parsed string per bucket
+        aggregate instead of a py4j round-trip per Column operator (plan
+        construction for a 40-rule suite is driver-SERIAL at both ends of a
+        scaling run, so it is sized like any other phase)."""
         b = self.baseline
         if b.kind == "hist":
             x = f"CAST({_sql_ref(self.column)} AS DOUBLE)"
-            return f"width_bucket({x}, {_dlit(b.lo)}, {_dlit(b.hi)}, {int(b.n_buckets)})"
+            return f"width_bucket({x}, {sql_double(b.lo)}, {sql_double(b.hi)}, {int(b.n_buckets)})"
         if b.kind == "quantile":
             # equi-depth bucket = #edges strictly below the value (0..k-1);
             # a ~20-element literal-array HOF, stays in codegen
             x = f"CAST({_sql_ref(self.column)} AS DOUBLE)"
-            edges = ", ".join(_dlit(e) for e in b.edges)
+            edges = ", ".join(sql_double(e) for e in b.edges)
             return (
                 f"CASE WHEN {x} IS NULL THEN -1 "
                 f"ELSE size(filter(array({edges}), e -> {x} > e)) END"
@@ -238,29 +228,26 @@ class Drift(TableRule):
         known = f"CAST({_sql_ref(self.column)} AS STRING)"
         cats = list(b.categories)
         null_idx = cats.index("<NULL>") if "<NULL>" in cats else -1
-        arr = ", ".join(_sql_str(c) for c in cats)
+        arr = ", ".join(sql_str(c) for c in cats)
         # array_position returns 0 (not NULL) when absent → -1 after the
-        # shift; coalesce keeps the old Column path's NULL belt-and-braces
+        # shift, so unseen categories collapse into one drift bucket
         return (
             f"CASE WHEN {known} IS NULL THEN {null_idx} "
-            f"ELSE coalesce(array_position(array({arr}), {known}) - 1, -1) END"
+            f"ELSE array_position(array({arr}), {known}) - 1 END"
         )
-
-    def _row_bucket_expr(self):
-        return F.expr(self._row_bucket_sql())
 
     def fold_agg_exprs(self) -> list:
         bucket = self._row_bucket_sql()
         return [
             F.expr(
                 f"sum(CASE WHEN ({bucket}) = {i} THEN 1 ELSE 0 END) "
-                f"AS `drift__{self.rule_id}__{i}`"
+                f"AS {sql_ident(f'drift__{self.rule_id}__{i}')}"
             )
             for i in self._bucket_ids()
         ]
 
-    def fold_verdict(self, wide: DataFrame) -> DataFrame:
-        """Compute the per-partition verdict from the wide pass-1 row.
+    def _stat(self, wide: DataFrame) -> DataFrame:
+        """(partition, __tot, __stat) from the wide row of bucket counts.
 
         Intermediates (total, per-bucket probabilities, KS cumulative sums)
         are materialized as NAMED columns step by step — inlining them would
@@ -275,21 +262,20 @@ class Drift(TableRule):
 
         # Every projection ships as SQL TEXT (one selectExpr = one py4j
         # round-trip, parsed JVM-side) instead of per-operator Column calls;
-        # arithmetic keeps the exact shape/association of the old Column
-        # plan ('a + b + c' parses left-assoc like reduce(+)), and _dlit
-        # round-trips constants, so results are bit-identical.
+        # sums are left-associative ('a + b + c') and sql_double round-trips
+        # constants, so results equal the Column-API formulas bit for bit.
         ks = range(len(ids))
         rid = self.rule_id
         w = wide.selectExpr(
             "partition",
             *[
-                f"CAST(`drift__{rid}__{i}` AS DOUBLE) AS __c{k}"
+                f"CAST({sql_ident(f'drift__{rid}__{i}')} AS DOUBLE) AS __c{k}"
                 for k, i in enumerate(ids)
             ],
         )
         tot = " + ".join(f"__c{k}" for k in ks)
         w = w.selectExpr("partition", *[f"__c{k}" for k in ks], f"{tot} AS __tot")
-        eps = _dlit(_EPS)
+        eps = sql_double(_EPS)
         w = w.selectExpr(
             "partition",
             "__tot",
@@ -299,13 +285,12 @@ class Drift(TableRule):
         if self.metric == "psi":
             contribs = []
             for k, i in enumerate(ids):
-                q = _dlit((base_counts[i] + _EPS) / (qtot + _EPS))
+                q = sql_double((base_counts[i] + _EPS) / (qtot + _EPS))
                 contribs.append(f"((__p{k} - {q}) * ln(__p{k} / {q}))")
             stat = " + ".join(contribs)
         else:  # ks over ascending bucket order, cumulative sums stay NAMED
             # (inlining them would nest quadratically; the cum TEXT reuses
-            # the previous step's parenthesized sum, matching the old
-            # left-assoc column chain)
+            # the previous step's parenthesized sum, left-assoc)
             order = sorted(range(len(ids)), key=lambda k: ids[k])
             cq = 0.0
             diffs = []
@@ -313,84 +298,43 @@ class Drift(TableRule):
             for k in order:
                 cum = f"__p{k}" if cum is None else f"({cum} + __p{k})"
                 cq += (base_counts[ids[k]] + _EPS) / (qtot + _EPS)
-                diffs.append(f"abs(({cum}) - {_dlit(cq)})")
+                diffs.append(f"abs(({cum}) - {sql_double(cq)})")
             stat = f"greatest({', '.join(diffs)})" if len(diffs) > 1 else diffs[0]
 
-        w = w.selectExpr("partition", "__tot", f"{stat} AS __stat")
-        small = f"(__tot < {_dlit(float(self.min_rows))})"
+        return w.selectExpr("partition", "__tot", f"{stat} AS __stat")
+
+    def fold_verdict(self, wide: DataFrame) -> DataFrame:
+        """Per-partition verdict rows from the wide row of bucket counts."""
+        w = self._stat(wide)
+        small = f"(__tot < {sql_double(float(self.min_rows))})"
         obs_small = (
             "concat('skipped: n=', CAST(CAST(__tot AS BIGINT) AS STRING), "
-            + _sql_str(f" < min_rows={self.min_rows}")
+            + sql_str(f" < min_rows={self.min_rows}")
             + ")"
         )
-        obs_stat = f"concat({_sql_str(self.metric + '=')}, CAST(round(__stat, 6) AS STRING))"
+        obs_stat = f"concat({sql_str(self.metric + '=')}, CAST(round(__stat, 6) AS STRING))"
         return w.selectExpr(
             "partition",
-            f"{_sql_str(rid)} AS rule_id",
-            f"({small} OR (__stat <= {_dlit(self.threshold)})) AS passed",
+            f"{sql_str(self.rule_id)} AS rule_id",
+            f"({small} OR (__stat <= {sql_double(self.threshold)})) AS passed",
             "CAST(0 AS BIGINT) AS violations",
             f"CASE WHEN {small} THEN {obs_small} ELSE {obs_stat} END AS observed",
-            f"{_sql_str(f'{self.metric} <= {self.threshold}')} AS expected",
+            f"{sql_str(f'{self.metric} <= {self.threshold}')} AS expected",
         )
 
-    def _bucketed(self, df: DataFrame, partition_col: str) -> DataFrame:
-        b = self.baseline
-        if b.kind in ("hist", "quantile"):
-            bucket = self._row_bucket_expr()
-        else:
-            known = _expr_or_col(self.column).cast("string")
-            cats = list(b.categories)
-            # unseen categories collapse into one drift bucket
-            bucket = (
-                F.when(known.isNull(), F.lit(cats.index("<NULL>") if "<NULL>" in cats else -1))
-                .otherwise(
-                    F.coalesce(
-                        F.array_position(F.lit(cats), known) - 1, F.lit(-1)
-                    )
-                )
-            )
-        return (
-            df.select(F.col(partition_col).cast("string").alias("__part"), bucket.alias("__bucket"))
-            .groupBy("__part", "__bucket")
-            .agg(F.count(F.lit(1)).alias("__cnt"))
+    def _wide(self, df: DataFrame, partition_col: str) -> DataFrame:
+        """The pass-1 fold run alone: one row of bucket counts per partition."""
+        return df.groupBy(F.col(partition_col).cast("string").alias("partition")).agg(
+            *self.fold_agg_exprs()
         )
-
-    def _baseline_df(self, spark) -> DataFrame:
-        b = self.baseline
-        rows = [(int(i), int(c)) for i, c in enumerate(b.counts)]
-        if b.kind in ("cat", "quantile"):
-            rows.append((-1, 0))  # unseen-category / NULL bucket, zero baseline mass
-        return spark.createDataFrame(rows, "__bucket int, __base long")
 
     def statistic_df(self, df: DataFrame, partition_col: str) -> DataFrame:
         """Per-partition drift statistic as DATA: (__part, __stat, __n).
-        This is the numeric core of ``evaluate`` — exposed so callers (e.g.
+        The same computation as the verdict — exposed so callers (e.g.
         drift dashboards, oracle-checked queries) can consume the statistic
         directly instead of parsing it back out of the verdict string."""
-        spark = df.sparkSession
-        cur = self._bucketed(df, partition_col)
-        base = F.broadcast(self._baseline_df(spark))
-
-        # full (partition × bucket) grid so zero-count buckets still contribute
-        parts = cur.select("__part").distinct()
-        grid = parts.crossJoin(base)
-        joined = grid.join(cur, ["__part", "__bucket"], "left").fillna({"__cnt": 0})
-
-        tot = Window.partitionBy("__part")
-        joined = joined.withColumn("__p", (F.col("__cnt") + _EPS) / (F.sum("__cnt").over(tot) + _EPS))
-        joined = joined.withColumn("__q", (F.col("__base") + _EPS) / (F.sum("__base").over(tot) + _EPS))
-
-        if self.metric == "psi":
-            contrib = (F.col("__p") - F.col("__q")) * F.log(F.col("__p") / F.col("__q"))
-            return joined.groupBy("__part").agg(
-                F.sum(contrib).alias("__stat"), F.sum("__cnt").alias("__n")
-            )
-        # ks: max |CDF_p - CDF_q| over ordered buckets
-        w = Window.partitionBy("__part").orderBy("__bucket")
-        cdf = joined.withColumn("__cp", F.sum("__p").over(w)).withColumn("__cq", F.sum("__q").over(w))
-        return cdf.groupBy("__part").agg(
-            F.max(F.abs(F.col("__cp") - F.col("__cq"))).alias("__stat"),
-            F.sum("__cnt").alias("__n"),
+        return self._stat(self._wide(df, partition_col)).selectExpr(
+            "partition AS __part", "__stat", "CAST(__tot AS BIGINT) AS __n"
         )
 
     def evaluate(
@@ -402,19 +346,4 @@ class Drift(TableRule):
         violation_limit: int,
         persisted: list[DataFrame] | None = None,
     ) -> tuple[DataFrame, DataFrame | None]:
-        stat = self.statistic_df(df, partition_col)
-        small = F.col("__n") < F.lit(self.min_rows)
-        verdicts = stat.select(
-            F.col("__part").alias("partition"),
-            F.lit(self.rule_id).alias("rule_id"),
-            (small | (F.col("__stat") <= F.lit(self.threshold))).alias("passed"),
-            F.lit(0).cast("long").alias("violations"),
-            F.when(
-                small,
-                F.concat(F.lit("skipped: n="), F.col("__n").cast("string"), F.lit(f" < min_rows={self.min_rows}")),
-            )
-            .otherwise(F.concat(F.lit(f"{self.metric}="), F.round(F.col("__stat"), 6).cast("string")))
-            .alias("observed"),
-            F.lit(f"{self.metric} <= {self.threshold}").alias("expected"),
-        )
-        return verdicts, None
+        return self.fold_verdict(self._wide(df, partition_col)), None

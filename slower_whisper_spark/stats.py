@@ -21,12 +21,13 @@ across runs — the property SURVEY §4.2 calls out as missing from plain
 
 from __future__ import annotations
 
-import base64
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from slower_whisper_spark.sqltext import sql_double, sql_ident, sql_str
 
 NUMERIC_TYPES = (
     T.ByteType, T.ShortType, T.IntegerType, T.LongType,
@@ -53,10 +54,6 @@ def _profiles_for(df: DataFrame, columns: list[str] | None) -> list[ColumnProfil
     return out
 
 
-def _bt(name: str) -> str:
-    return "`" + name.replace("`", "``") + "`"
-
-
 def stat_agg_exprs(
     df: DataFrame,
     profiles: list[ColumnProfile],
@@ -75,7 +72,7 @@ def stat_agg_exprs(
     aggs = []
     for p in profiles:
         dt = by_type[p.column]
-        c = _bt(p.column)
+        c = sql_ident(p.column)
         if isinstance(dt, NUMERIC_TYPES):
             num = f"CAST({c} AS DOUBLE)"
         elif isinstance(dt, (T.TimestampType, T.DateType)):
@@ -89,16 +86,16 @@ def stat_agg_exprs(
         n = p.column
         # binary min/max as raw bytes would produce non-UTF8 strings; use lengths
         ordered = f"length({c})" if isinstance(dt, T.BinaryType) else c
-        qs = ", ".join(f"CAST('{float(q)!r}' AS DOUBLE)" for q in quantiles)
+        qs = ", ".join(sql_double(q) for q in quantiles)
         aggs += [
-            F.expr(f"sum(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END) AS {_bt(f'nulls__{n}')}"),
-            F.expr(f"CAST(min({ordered}) AS STRING) AS {_bt(f'min__{n}')}"),
-            F.expr(f"CAST(max({ordered}) AS STRING) AS {_bt(f'max__{n}')}"),
-            F.expr(f"avg({num}) AS {_bt(f'mean__{n}')}"),
-            F.expr(f"stddev_samp({num}) AS {_bt(f'stddev__{n}')}"),
+            F.expr(f"sum(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END) AS {sql_ident(f'nulls__{n}')}"),
+            F.expr(f"CAST(min({ordered}) AS STRING) AS {sql_ident(f'min__{n}')}"),
+            F.expr(f"CAST(max({ordered}) AS STRING) AS {sql_ident(f'max__{n}')}"),
+            F.expr(f"avg({num}) AS {sql_ident(f'mean__{n}')}"),
+            F.expr(f"stddev_samp({num}) AS {sql_ident(f'stddev__{n}')}"),
             F.expr(
                 f"percentile_approx({num}, array({qs}), {int(quantile_accuracy)})"
-                f" AS {_bt(f'q__{n}')}"
+                f" AS {sql_ident(f'q__{n}')}"
             ),
         ]
         if p.distinct:
@@ -107,7 +104,7 @@ def stat_agg_exprs(
                 sk_src = c
             else:
                 sk_src = f"CAST({c} AS STRING)"
-            aggs.append(F.expr(f"hll_sketch_agg({sk_src}, 14) AS {_bt(f'hll__{n}')}"))
+            aggs.append(F.expr(f"hll_sketch_agg({sk_src}, 14) AS {sql_ident(f'hll__{n}')}"))
     return aggs
 
 
@@ -130,24 +127,19 @@ def unpivot_stats(
     if include_sketches:
         names.append("hll_sketch_b64")
 
-    def _q(s: str) -> str:
-        # backslashes first: \ is an escape in Spark SQL string literals
-        # (ADVICE r5 #4 — same fix as rules/drift._sql_str)
-        return "'" + s.replace("\\", "\\\\").replace("'", "''") + "'"
-
     tuples = []
     for p in profiles:
         n = p.column
-        nulls, q_arr, hll = _bt(f"nulls__{n}"), _bt(f"q__{n}"), _bt(f"hll__{n}")
+        nulls, q_arr, hll = sql_ident(f"nulls__{n}"), sql_ident(f"q__{n}"), sql_ident(f"hll__{n}")
         row = [
-            _q(n),
-            _q(p.dtype),
+            sql_str(n),
+            sql_str(p.dtype),
             f"CAST({nulls} AS BIGINT)",
             f"{nulls} / rows",
-            _bt(f"min__{n}"),
-            _bt(f"max__{n}"),
-            _bt(f"mean__{n}"),
-            _bt(f"stddev__{n}"),
+            sql_ident(f"min__{n}"),
+            sql_ident(f"max__{n}"),
+            sql_ident(f"mean__{n}"),
+            sql_ident(f"stddev__{n}"),
         ]
         row += [f"{q_arr}[{i}]" for i in range(len(quantiles))]
         row.append(f"CAST(hll_sketch_estimate({hll}) AS BIGINT)")
@@ -210,7 +202,3 @@ def merge_partition_sketches(stats_df: DataFrame) -> DataFrame:
             ).cast("long").alias("approx_distinct_merged"),
         )
     )
-
-
-def sketch_to_b64(b: bytes) -> str:
-    return base64.b64encode(b).decode("ascii")

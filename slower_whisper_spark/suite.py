@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from slower_whisper_spark.functions.hashing import canonical_hash, spec_hash
 from slower_whisper_spark.rules.base import RowRule, Rule, TableRule
+from slower_whisper_spark.sqltext import sql_ident, sql_str
 
 VERDICT_COLS = ["partition", "rule_id", "passed", "rows", "violations", "observed", "expected"]
 VIOLATION_COLS = ["key", "rule_id", "observed", "expected"]
@@ -253,7 +254,7 @@ class ConstraintSuite:
                 "rows",
                 F.expr(
                     f"stack({len(counted_ids)}, "
-                    + ", ".join(f"'{_sql_quote(rid)}', `viol__{rid}`" for rid in counted_ids)
+                    + ", ".join(f"{sql_str(rid)}, {sql_ident(f'viol__{rid}')}" for rid in counted_ids)
                     + ") as (rule_id, violations)"
                 ),
             )
@@ -274,7 +275,7 @@ class ConstraintSuite:
             #      mostly-clean 10^12-row table pays pass 2 only for its bad
             #      partitions; ref first-N-errors: transcript_io.py:27-30) --- #
             any_fail = reduce(
-                lambda a, b: a | b, [F.col(f"viol__{rid}") > 0 for rid in counted_ids]
+                lambda a, b: a | b, [F.col(sql_ident(f"viol__{rid}")) > 0 for rid in counted_ids]
             )
             if pass2_prune and not always_collect_violations:
                 # ONE collect decides the prune AND yields the partition
@@ -413,10 +414,6 @@ class ConstraintSuite:
             stats=stats_df,
             persisted=persisted,
         )
-
-
-def _sql_quote(s: str) -> str:
-    return s.replace("'", "''")
 
 
 def _empty_verdicts(spark) -> DataFrame:

@@ -7,6 +7,8 @@ that (SURVEY §4.2).
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -296,6 +298,26 @@ def test_drift_fold_verdict_matches_column_semantics(spark):
         psi += (p - qq) * math.log(p / qq)
     assert row["passed"] is False
     assert row["observed"] == f"psi={round(psi, 6)}"
+
+
+def test_drift_evaluate_is_one_aggregate(spark):
+    """Drift.evaluate is the pass-1 fold run alone: one groupBy, so one
+    shuffle Exchange, and no Window, cross join or join of any kind."""
+    from slower_whisper_spark.rules.drift import Baseline, Drift
+
+    df = spark.createDataFrame(
+        [(f"p{i % 3}", float(i % 7)) for i in range(300)], "part string, v double"
+    )
+    for base, metric in [
+        (Baseline(column="v", kind="hist", counts=[1] * 6, lo=0.0, hi=7.0, n_buckets=4), "ks"),
+        (Baseline(column="v", kind="cat", counts=[5, 5], categories=["1.0", "2.0"]), "psi"),
+    ]:
+        rule = Drift("v", base, metric=metric, min_rows=1)
+        verdicts, _ = rule.evaluate(df, key_col="v", partition_col="part", violation_limit=10)
+        plan = verdicts._jdf.queryExecution().executedPlan().toString()
+        assert len(re.findall(r"(?<!Broadcast)Exchange ", plan)) == 1, plan
+        for node in ("Window", "CartesianProduct", "BroadcastNestedLoopJoin", "Join"):
+            assert node not in plan, plan
 
 
 def test_quality_filter_chain_is_shuffle_free(docs_parquet):

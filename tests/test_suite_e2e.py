@@ -222,3 +222,15 @@ def test_overlapped_materialize_matches_sequential(docs_small):
     assert vset(par.violations.collect()) == vset(seq.violations.collect())
     seq.unpersist()
     par.unpersist()
+
+
+def test_rule_ids_with_backslash_and_backtick(spark):
+    """Rule ids are user text: a backslash or backtick in one must reach the
+    verdict and violation rows unchanged, not be read as a SQL escape or
+    end the quoted column name."""
+    df = spark.createDataFrame([("a", None), ("b", "x")], "url string, text string")
+    ids = ["nn\\text", "nn`text"]
+    res = ConstraintSuite("ids", [NotNull("text", rule_id=i) for i in ids]).validate(df, key_col="url")
+    verd = {r["rule_id"]: r["violations"] for r in res.verdicts.collect()}
+    assert verd == {i: 1 for i in ids}
+    assert sorted(r["rule_id"] for r in res.violations.collect()) == sorted(ids)

@@ -324,3 +324,44 @@ def test_drift_categorical_backslash_category(docs_small, spark):
     # the escape bug every backslash category fell into the absent bucket
     # and the PSI breached
     assert len(scored) > 0 and scored["passed"].all()
+
+
+@pytest.mark.parametrize(
+    "kind,metric", [("hist", "psi"), ("hist", "ks"), ("cat", "psi"), ("quantile", "psi"), ("quantile", "ks")]
+)
+def test_drift_evaluate_matches_suite_fold(docs_small, kind, metric):
+    """Drift.evaluate (what the CLI drift gate calls) and the suite's
+    pass-1 fold must give the same verdict rows for every baseline kind
+    and metric — one PSI/KS definition, whichever entry point runs it."""
+    import numpy as np
+
+    from slower_whisper_spark.functions.kll import KLLSketch
+    from slower_whisper_spark.rules.drift import baseline_from_kll
+
+    docs, _, _ = docs_small
+    even_day = F.dayofmonth("warc_day") % 2 == 0
+    if kind == "cat":
+        column = "lang"
+        base = compute_baseline(docs, column, "cat")
+        df = docs.withColumn(column, F.when(even_day & (F.col("lang") == "en"), "zh").otherwise(F.col("lang")))
+    else:
+        column = "tl"
+        tl = docs.withColumn(column, F.length("text"))
+        if kind == "hist":
+            base = compute_baseline(tl, column, "hist", n_buckets=20)
+        else:
+            sk = KLLSketch()
+            sk.update_batch(np.array([r[0] for r in tl.select(column).collect() if r[0] is not None], dtype=float))
+            base = baseline_from_kll(sk, column, n_buckets=10)
+        # shift half the days so both verdicts occur
+        df = tl.withColumn(column, F.when(even_day, (F.col(column) * 1.3).cast("long")).otherwise(F.col(column)))
+    rule = Drift(column, base, metric=metric, threshold=0.1 if metric == "ks" else 0.25, rule_id="d")
+
+    cols = ["partition", "rule_id", "passed", "violations", "observed", "expected"]
+    direct, extra = rule.evaluate(df, key_col="url", partition_col="warc_day", violation_limit=10)
+    assert extra is None
+    folded = ConstraintSuite("parity", [rule]).validate(df, key_col="url", partition_col="warc_day").verdicts
+    got = sorted(tuple(r) for r in direct.select(*cols).collect())
+    want = sorted(tuple(r) for r in folded.select(*cols).collect())
+    assert got == want
+    assert {r[2] for r in got} == {True, False}, got
