@@ -77,7 +77,10 @@ def cosine_topk(
     qid_t = queries.schema[query_id_col].dataType.simpleString()
     nid_t = corpus.schema[id_col].dataType.simpleString()
     out_schema = f"query_id {qid_t}, neighbor_id {nid_t}, cos double"
-    narrow = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv"))
+    # a NULL id cannot be a neighbour (and would break the kernel's id sort)
+    narrow = corpus.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")
+    ).filter(F.col("neighbor_id").isNotNull())
     spark = corpus.sparkSession
     if not q_rows:
         scored = spark.createDataFrame([], out_schema)
@@ -453,29 +456,36 @@ def train_ivf_centroids(
 _KMEANS_FXP_SCALE = float(2**40)
 
 
-def _kmeans_exact_partial(X: np.ndarray, C: np.ndarray):
-    """One batch's mergeable partial in exact fixed-point arithmetic:
-    (cells present, int64 counts, int64 per-dim quantized sums). Because
-    int64 addition is associative, merging partials — in ANY batching or
-    order — yields bit-identical sums to a single-pass computation, making
-    the trained centroids a pure function of the vector multiset (the
-    deterministic-KLL trick applied to kmeans state)."""
+def _kmeans_partial(X: np.ndarray, C: np.ndarray, exact: bool = True):
+    """One batch's mergeable partial: (cells present, int64 counts, per-dim
+    sums of the normalized vectors). ``exact`` sums them in fixed-point
+    int64: because int64 addition is associative, merging partials — in ANY
+    batching or order — yields bit-identical sums to a single-pass
+    computation, making the trained centroids a pure function of the vector
+    multiset (the deterministic-KLL trick applied to kmeans state).
+    Otherwise the sums are float64."""
     X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
     assign = np.argmax(X @ C.T, axis=1)
-    Q = np.round(X * _KMEANS_FXP_SCALE).astype(np.int64)
     cells, inv = np.unique(assign, return_inverse=True)
-    sums = np.zeros((len(cells), X.shape[1]), dtype=np.int64)
-    np.add.at(sums, inv, Q)
+    if exact:
+        X = np.round(X * _KMEANS_FXP_SCALE).astype(np.int64)
+    sums = np.zeros((len(cells), X.shape[1]), dtype=X.dtype)
+    np.add.at(sums, inv, X)
     counts = np.bincount(inv, minlength=len(cells)).astype(np.int64)
     return cells, counts, sums
 
 
-def _kmeans_exact_update(
-    sums: np.ndarray, counts: np.ndarray, d: int, n_centroids: int, seed: int
-) -> np.ndarray:
-    """Centroid update from merged exact partials: row-normalized mean
-    (scale cancels in the normalization), empty cells re-seeded
+def _kmeans_update(partials, d: int, n_centroids: int, seed: int, exact: bool = True) -> np.ndarray:
+    """Centroid update from (cell, count, sums) partials: merge in sorted
+    cell order (deterministic for float sums; int64 sums are
+    order-independent anyway), then row-normalized mean (the fixed-point
+    scale cancels in the normalization); empty cells re-seed
     deterministically."""
+    sums = np.zeros((n_centroids, d), dtype=np.int64 if exact else np.float64)
+    counts = np.zeros(n_centroids, dtype=np.int64)
+    for cell, n, part in sorted(partials, key=lambda p: p[0]):
+        sums[cell] += part
+        counts[cell] += n
     reseed = _ivf_centroids(d, n_centroids, seed + 1)
     C = np.empty((n_centroids, d), dtype=float)
     for j in range(n_centroids):
@@ -499,12 +509,7 @@ def train_ivf_centroids_exact_local(
     d = X.shape[1]
     C = _ivf_centroids(d, n_centroids, seed)
     for _ in range(n_iter):
-        cells, counts_p, sums_p = _kmeans_exact_partial(X, C)
-        sums = np.zeros((n_centroids, d), dtype=np.int64)
-        counts = np.zeros(n_centroids, dtype=np.int64)
-        sums[cells] += sums_p
-        counts[cells] += counts_p
-        C = _kmeans_exact_update(sums, counts, d, n_centroids, seed)
+        C = _kmeans_update(zip(*_kmeans_partial(X, C)), d, n_centroids, seed)
     return C
 
 
@@ -538,7 +543,7 @@ def train_ivf_centroids_distributed(
     robust to it at test tolerance).
 
     ``exact=True`` switches the partials to fixed-point int64 sums
-    (``_kmeans_exact_partial``): integer addition is associative, so the
+    (``_kmeans_partial``): integer addition is associative, so the
     merged sums — and therefore the trained centroids — are bit-identical
     regardless of batch boundaries, partition count, or merge order: a pure
     function of the vector multiset. That is what lets a local single-pass
@@ -558,50 +563,22 @@ def train_ivf_centroids_distributed(
     sum_t = "array<long>" if exact else "array<double>"
     out_schema = f"cell int, n long, s {sum_t}"
     for _ in range(n_iter):
-        Cb = C.copy()
-
-        def partials(batches, _C=Cb, _exact=exact):
+        def partials(batches, _C=C, _exact=exact):
             for pdf in batches:
                 if not len(pdf):
                     continue
                 X = np.array(pdf["v"].tolist(), dtype=np.float64)
-                if _exact:
-                    cells, counts, sums = _kmeans_exact_partial(X, _C)
-                else:
-                    X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-                    assign = np.argmax(X @ _C.T, axis=1)
-                    cells, inv = np.unique(assign, return_inverse=True)
-                    sums = np.zeros((len(cells), X.shape[1]))
-                    np.add.at(sums, inv, X)
-                    counts = np.bincount(inv, minlength=len(cells))
+                cells, counts, sums = _kmeans_partial(X, _C, _exact)
                 yield pd.DataFrame(
                     {
                         "cell": cells.astype("int32"),
-                        "n": counts.astype("int64"),
+                        "n": counts,
                         "s": [row.tolist() for row in sums],
                     }
                 )
 
         rows = vecs.mapInPandas(partials, schema=out_schema).collect()
-        if exact:
-            sums = np.zeros((n_centroids, d), dtype=np.int64)
-            counts = np.zeros(n_centroids, dtype=np.int64)
-            for r in rows:  # int64 addition: order-independent
-                sums[r["cell"]] += np.asarray(r["s"], dtype=np.int64)
-                counts[r["cell"]] += r["n"]
-            C = _kmeans_exact_update(sums, counts, d, n_centroids, seed)
-            continue
-        sums = np.zeros((n_centroids, d))
-        counts = np.zeros(n_centroids)
-        for r in sorted(rows, key=lambda r: r["cell"]):  # deterministic merge order
-            sums[r["cell"]] += np.asarray(r["s"])
-            counts[r["cell"]] += r["n"]
-        reseed = _ivf_centroids(d, n_centroids, seed + 1)
-        for j in range(n_centroids):
-            if counts[j]:
-                C[j] = sums[j] / max(np.linalg.norm(sums[j]), 1e-12)
-            else:
-                C[j] = reseed[j]
+        C = _kmeans_update(rows, d, n_centroids, seed, exact)
     return C
 
 
@@ -616,9 +593,7 @@ def embedding_near_duplicates(
     seed: int = 42,
     dim: int | None = None,
     max_bucket_size: int | None = 200,
-    persisted: list[DataFrame] | None = None,
     stats_out: dict | None = None,
-    warn_on_drop: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b, cos ≥ threshold) via LSH candidate
     buckets + exact verification. As in ``lsh_bucketed_topk``, the
@@ -637,19 +612,14 @@ def embedding_near_duplicates(
     pair through their OTHER n_tables-1 tables; pass ``None`` for the
     unguarded exact-candidate path at test scale.
 
-    ``warn_on_drop`` (default True): when the cap is active, an eager probe
-    counts the buckets the cap will drop and logs a WARNING if any — recall
-    loss on near-identical-vector corpora must never be silent (ADVICE r4).
-    The probe is one bounded extra job whose shuffle carries only DISTINCT
-    (table, bucket) partials (map-side combine), far below the join itself;
-    100-TB callers that track drops through ``stats_out`` dashboards can
-    pass ``warn_on_drop=False`` to keep the default path job-free.
+    When the cap is active, an eager probe counts the buckets the cap will
+    drop and logs a WARNING if any — recall loss on near-identical-vector
+    corpora must never be silent (ADVICE r4). The probe is one bounded extra
+    job whose shuffle carries only DISTINCT (table, bucket) partials
+    (map-side combine), far below the join itself.
 
     ``stats_out``: pass a dict to capture the probe's exact count —
-    filled with ``{"buckets_dropped": n}`` (implies the probe runs).
-
-    ``persisted``: accepted for interface stability; the current plan
-    persists nothing, so the list stays empty."""
+    filled with ``{"buckets_dropped": n}``."""
     from slower_whisper_spark.functions.vectorized import make_lsh_buckets
 
     tables = _hyperplanes(_vec_dim(df, vec_col, dim), n_planes, n_tables, seed)
@@ -659,33 +629,30 @@ def embedding_near_duplicates(
         F.posexplode(bucket_udf(F.col(vec_col))).alias("table", "bucket"),
     )
     if max_bucket_size:
-        # always-visible cap notice (no job): the exact dropped count needs
-        # an extra aggregation, so it is opt-in via stats_out — but the cap
-        # being ACTIVE is never silent, and the driver-checked oracle replays
-        # the cap so its effect is correctness-visible
+        # the cap being ACTIVE is never silent, and the driver-checked
+        # oracle replays the cap so its effect is correctness-visible
         _log.info(
             "embedding_near_duplicates: max_bucket_size=%d active — buckets "
             "above the cap are excluded from candidate generation",
             max_bucket_size,
         )
-        if warn_on_drop or stats_out is not None:
-            n_big = (
-                b.groupBy("table", "bucket")
-                .agg(F.count(F.lit(1)).alias("__n"))
-                .filter(F.col("__n") > max_bucket_size)
-                .count()
+        n_big = (
+            b.groupBy("table", "bucket")
+            .agg(F.count(F.lit(1)).alias("__n"))
+            .filter(F.col("__n") > max_bucket_size)
+            .count()
+        )
+        if stats_out is not None:
+            stats_out["buckets_dropped"] = int(n_big)
+        if n_big:
+            _log.warning(
+                "embedding_near_duplicates: dropping %d bucket(s) larger "
+                "than max_bucket_size=%d from candidate generation — "
+                "members may still pair via their other %d table(s)",
+                n_big,
+                max_bucket_size,
+                n_tables - 1,
             )
-            if stats_out is not None:
-                stats_out["buckets_dropped"] = int(n_big)
-            if n_big:
-                _log.warning(
-                    "embedding_near_duplicates: dropping %d bucket(s) larger "
-                    "than max_bucket_size=%d from candidate generation — "
-                    "members may still pair via their other %d table(s)",
-                    n_big,
-                    max_bucket_size,
-                    n_tables - 1,
-                )
         w = Window.partitionBy("table", "bucket")
         b = (
             b.withColumn("__bn", F.count(F.lit(1)).over(w))

@@ -75,10 +75,14 @@ class TableRule(Rule):
 
     ``evaluate`` returns ``(verdicts, violations)`` where
 
-    * verdicts: DataFrame(partition string, rule_id string, rows long,
-      violations long, observed string, expected string)
+    * verdicts: DataFrame(partition string, rule_id string, passed boolean,
+      violations long, observed string, expected string); a partition
+      with no row has passed — the suite fills those in, and joins
+      ``rows`` in from its pass-1 row counts
     * violations: DataFrame(key string, rule_id string, observed string,
       expected string) or None
+
+    Join/aggregate rules build both with ``failure_result``.
 
     ``persisted``: optional sink list — any DataFrame the rule persists must
     be appended so SuiteResult.unpersist() can release it (streaming /
@@ -102,6 +106,37 @@ class TableRule(Rule):
         persisted: list[DataFrame] | None = None,
     ) -> tuple[DataFrame, DataFrame | None]:
         ...
+
+
+def failure_result(
+    rule_id: str,
+    counts: DataFrame,
+    rows: DataFrame,
+    noun: str,
+    expected: str,
+    violation_limit: int,
+) -> tuple[DataFrame, DataFrame]:
+    """Render a table rule's failures in the suite's verdict and violation
+    shapes (ref violation-row shape: transcription/schema/validator.py:128-136).
+
+    ``counts``: (__part, violations), one row per failing partition →
+    verdicts with ``observed`` = "<violations> <noun>" and ``expected``.
+    ``rows``: (key, observed, expected), one row per violation → violation
+    rows, the first ``violation_limit`` by key."""
+    verdicts = counts.select(
+        F.col("__part").alias("partition"),
+        F.lit(rule_id).alias("rule_id"),
+        F.lit(False).alias("passed"),
+        F.col("violations").cast("long").alias("violations"),
+        F.concat(F.col("violations").cast("string"), F.lit(f" {noun}")).alias("observed"),
+        F.lit(expected).alias("expected"),
+    )
+    violations = (
+        rows.select("key", F.lit(rule_id).alias("rule_id"), "observed", "expected")
+        .orderBy("key")
+        .limit(violation_limit)
+    )
+    return verdicts, violations
 
 
 def _str(col: Column) -> Column:

@@ -20,7 +20,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from slower_whisper_spark.rules.base import RowRule, TableRule
+from slower_whisper_spark.rules.base import RowRule, TableRule, _str, content_fingerprint, failure_result
 
 
 class HashInvariant(TableRule):
@@ -51,8 +51,6 @@ class HashInvariant(TableRule):
         self.missing_is_violation = missing_is_violation
         self.rule_id = rule_id or f"hash_invariant({column})"
         if expected_version is None:
-            from slower_whisper_spark.rules.base import content_fingerprint
-
             expected_version = content_fingerprint(
                 expected_df, [expected_key, expected_hash_col]
             )
@@ -102,29 +100,16 @@ class HashInvariant(TableRule):
         if persisted is not None:
             persisted.append(bad)
 
-        verdicts = (
-            bad.groupBy("__part")
-            .agg(F.count(F.lit(1)).alias("violations"))
-            .select(
-                F.col("__part").alias("partition"),
-                F.lit(self.rule_id).alias("rule_id"),
-                F.lit(False).alias("passed"),
-                F.col("violations").cast("long").alias("violations"),
-                F.concat(F.col("violations").cast("string"), F.lit(" rows with hash mismatch")).alias("observed"),
-                F.lit(f"sha256({self.column}) == expected").alias("expected"),
-            )
+        counts = bad.groupBy("__part").agg(F.count(F.lit(1)).alias("violations"))
+        rows = bad.select(
+            F.col("__key").alias("key"),
+            F.coalesce(F.col("__actual"), F.lit("NULL")).alias("observed"),
+            F.coalesce(F.col("__expected"), F.lit("<no expected row>")).alias("expected"),
         )
-        violations = (
-            bad.select(
-                F.col("__key").alias("key"),
-                F.lit(self.rule_id).alias("rule_id"),
-                F.coalesce(F.col("__actual"), F.lit("NULL")).alias("observed"),
-                F.coalesce(F.col("__expected"), F.lit("<no expected row>")).alias("expected"),
-            )
-            .orderBy("key")
-            .limit(violation_limit)
+        return failure_result(
+            self.rule_id, counts, rows, "rows with hash mismatch",
+            f"sha256({self.column}) == expected", violation_limit,
         )
-        return verdicts, violations
 
 
 class ExtractionInvariant(RowRule):
@@ -174,8 +159,6 @@ class ExtractionInvariant(RowRule):
         return F.expr(f"({self._extract_sql}) <=> {self.text_col}")
 
     def observed(self) -> Column:
-        from slower_whisper_spark.rules.base import _str
-
         return _str(F.expr(f"substring({self._extract_sql}, 1, 64)"))
 
     def expected(self) -> Column:

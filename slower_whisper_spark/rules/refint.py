@@ -27,7 +27,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from slower_whisper_spark.rules.base import TableRule
+from slower_whisper_spark.rules.base import TableRule, _str, content_fingerprint, failure_result
 
 
 def _bloom_params(n_items: int, fp_rate: float) -> tuple[int, int]:
@@ -86,8 +86,6 @@ class ForeignKey(TableRule):
         self.rule_id = rule_id or f"fk({fk_expr})"
         self._cached_bloom_udf = None
         if dim_version is None:
-            from slower_whisper_spark.rules.base import content_fingerprint
-
             dim_version = content_fingerprint(dim_df, [dim_col])
         self._dim_version = dim_version
 
@@ -142,8 +140,6 @@ class ForeignKey(TableRule):
         return F.when(fk.isNull(), F.lit(False)).otherwise(ok)
 
     def fold_observed(self):
-        from slower_whisper_spark.rules.base import _str
-
         return _str(F.expr(self.fk_expr))
 
     def fold_expected(self):
@@ -151,24 +147,20 @@ class ForeignKey(TableRule):
 
     def _violating_rows(self, df: DataFrame, key_col: str, partition_col: str) -> DataFrame:
         fk = F.expr(self.fk_expr)
-        fact = df.select(
+        cols = [
             F.col(partition_col).cast("string").alias("__part"),
             F.col(key_col).cast("string").alias("__key"),
             fk.alias("__fk"),
-        )
+        ]
+        if self.mode == "bloom":
+            # the same membership predicate the suite folds into its scans
+            return df.filter(~self.row_predicate(df)).select(*cols)
+
+        fact = df.select(*cols)
         if self.allow_null:
             fact = fact.filter(F.col("__fk").isNotNull())
-
-        if self.mode == "bloom":
-            return self._bloom_filter_misses(fact)
-
         dim = self.dim_df.select(F.col(self.dim_col).alias("__fk")).distinct()
         return fact.join(F.broadcast(dim), "__fk", "left_anti")
-
-    def _bloom_filter_misses(self, fact: DataFrame) -> DataFrame:
-        might_contain = self._build_bloom_udf(fact.sparkSession)
-        hashed = fact.withColumn("__h", F.xxhash64(F.col("__fk")))
-        return hashed.filter(~might_contain(F.col("__h"))).drop("__h")
 
     def evaluate(
         self,
@@ -185,26 +177,13 @@ class ForeignKey(TableRule):
         if persisted is not None:
             persisted.append(viol_rows)
 
-        verdicts = (
-            viol_rows.groupBy("__part")
-            .agg(F.count(F.lit(1)).alias("violations"))
-            .select(
-                F.col("__part").alias("partition"),
-                F.lit(self.rule_id).alias("rule_id"),
-                F.lit(False).alias("passed"),
-                F.col("violations").cast("long").alias("violations"),
-                F.concat(F.col("violations").cast("string"), F.lit(" rows with unknown reference")).alias("observed"),
-                F.lit(f"{self.fk_expr} in dim.{self.dim_col}").alias("expected"),
-            )
+        counts = viol_rows.groupBy("__part").agg(F.count(F.lit(1)).alias("violations"))
+        rows = viol_rows.select(
+            F.col("__key").alias("key"),
+            F.col("__fk").cast("string").alias("observed"),
+            self.fold_expected().alias("expected"),
         )
-        violations = (
-            viol_rows.select(
-                F.col("__key").alias("key"),
-                F.lit(self.rule_id).alias("rule_id"),
-                F.col("__fk").cast("string").alias("observed"),
-                F.lit(f"member of dim.{self.dim_col}").alias("expected"),
-            )
-            .orderBy("key")
-            .limit(violation_limit)
+        return failure_result(
+            self.rule_id, counts, rows, "rows with unknown reference",
+            f"{self.fk_expr} in dim.{self.dim_col}", violation_limit,
         )
-        return verdicts, violations

@@ -31,7 +31,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from slower_whisper_spark.rules.base import TableRule
+from slower_whisper_spark.rules.base import TableRule, failure_result
 
 
 class Unique(TableRule):
@@ -91,27 +91,13 @@ class Unique(TableRule):
             persisted.append(dup_keys)
         attributed = per_part.join(dup_keys, "__key")
 
-        verdicts = (
-            attributed.groupBy("__part")
-            .agg(F.sum("__cnt_part").alias("violations"))
-            .select(
-                F.col("__part").alias("partition"),
-                F.lit(self.rule_id).alias("rule_id"),
-                F.lit(False).alias("passed"),
-                F.col("violations").cast("long").alias("violations"),
-                F.concat(F.col("violations").cast("string"), F.lit(" rows with duplicated key")).alias("observed"),
-                F.lit(f"{self.column} unique").alias("expected"),
-            )
+        counts = attributed.groupBy("__part").agg(F.sum("__cnt_part").alias("violations"))
+        rows = dup_keys.select(
+            F.col("__key").cast("string").alias("key"),
+            F.concat(F.lit("count="), F.col("__cnt").cast("string")).alias("observed"),
+            F.lit("count=1").alias("expected"),
         )
-
-        violations = (
-            dup_keys.select(
-                F.col("__key").cast("string").alias("key"),
-                F.lit(self.rule_id).alias("rule_id"),
-                F.concat(F.lit("count="), F.col("__cnt").cast("string")).alias("observed"),
-                F.lit("count=1").alias("expected"),
-            )
-            .orderBy("key")
-            .limit(violation_limit)
+        return failure_result(
+            self.rule_id, counts, rows, "rows with duplicated key",
+            f"{self.column} unique", violation_limit,
         )
-        return verdicts, violations

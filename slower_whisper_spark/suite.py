@@ -184,6 +184,11 @@ class ConstraintSuite:
         everywhere (dense-failure benches, ingest quarantines) → False
         (skip the barrier).
 
+        ``always_collect_violations`` (default False): True means the same
+        as ``pass2_prune=False`` — pass 2 always runs, over every partition,
+        and validate() stays lazy. It is the name used by callers that want
+        every violation row (with ``violation_limit=10**9``).
+
         ``stats_columns``: fold a column-stats profile into the pass-1 scan
         (count/null-rate/min/max/mean/stddev/quantiles/HLL) — the result
         lands in ``SuiteResult.stats`` at zero extra scans.
@@ -277,23 +282,17 @@ class ConstraintSuite:
             any_fail = reduce(
                 lambda a, b: a | b, [F.col(sql_ident(f"viol__{rid}")) > 0 for rid in counted_ids]
             )
+            scan: DataFrame | None = df
             if pass2_prune and not always_collect_violations:
                 # ONE collect decides the prune AND yields the partition
                 # total (a second wide.count() job would be pure overhead)
                 flags = wide.select("partition", any_fail.alias("__fail")).collect()
                 failing_parts = [r["partition"] for r in flags if r["__fail"]]
-                n_parts_total = len(flags)
-            else:
-                failing_parts, n_parts_total = None, None
-            if failing_parts or failing_parts is None or always_collect_violations:
-                scan = df
-                if (
-                    partition_col is not None
-                    and failing_parts
-                    and len(failing_parts) < n_parts_total
-                    and not always_collect_violations
-                ):
+                if not failing_parts:
+                    scan = None
+                elif partition_col is not None and len(failing_parts) < len(flags):
                     scan = df.filter(F.col(pcol).cast("string").isin(failing_parts))
+            if scan is not None:
                 structs = F.array(
                     *(
                         [

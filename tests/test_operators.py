@@ -106,6 +106,21 @@ def test_cosine_topk_matches_duckdb(spark):
     assert (abs(got["cos"].values - oracle["cos"].values) < 1e-7).all()
 
 
+def test_cosine_topk_skips_null_string_ids(spark):
+    """A corpus row with a NULL id is never a neighbour, and must not break
+    the kernel's (cos, id) sort when ids are strings."""
+    corpus = spark.createDataFrame(
+        [("a", [1.0, 0.0]), ("b", [0.9, 0.1]), (None, [0.95, 0.05]), ("c", [0.0, 1.0])],
+        "vec_id string, embedding array<double>",
+    ).coalesce(1)
+    queries = corpus.filter(F.col("vec_id") == "a")
+    got = cosine_topk(corpus, queries, k=3).orderBy("rank").collect()
+    assert [(r["query_id"], r["neighbor_id"], r["rank"]) for r in got] == [
+        ("a", "b", 1),
+        ("a", "c", 2),
+    ]
+
+
 def test_lsh_ann_recall_vs_bruteforce(spark):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").cache()
     queries = emb.filter(F.col("vec_id") < 20)

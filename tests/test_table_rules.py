@@ -100,6 +100,29 @@ def test_fk_bloom_reports_only_real_violations(docs_small):
     assert n_bloom >= 0.95 * n_exact
 
 
+def test_fk_bloom_evaluate_matches_suite_fold(docs_small):
+    """Bloom ``evaluate`` and the suite's pass-1 fold test membership with
+    one predicate: same failing partitions and counts, and with
+    allow_null=False a NULL foreign key is a violation on both paths."""
+    docs, _, ref = docs_small
+    # no scheme → parse_url(..., 'HOST') is NULL
+    df = docs.unionByName(docs.limit(1).withColumn("url", F.lit("no-host-row")))
+    rule = ForeignKey(HOST_EXPR, ref, "host", rule_id="fk_bloom_nn", mode="bloom", allow_null=False)
+    ev_v, ev_rows = rule.evaluate(
+        df, key_col="url", partition_col="warc_day", violation_limit=100_000
+    )
+    res = ConstraintSuite("bloom", [rule]).validate(
+        df, key_col="url", partition_col="warc_day", violation_limit=100_000
+    )
+    ev = {(r["partition"], r["violations"]) for r in ev_v.collect()}
+    folded = {
+        (r["partition"], r["violations"])
+        for r in res.verdicts.filter(~F.col("passed")).collect()
+    }
+    assert ev and ev == folded
+    assert "no-host-row" in {r["key"] for r in ev_rows.collect()}
+
+
 # --------------------------------------------------------------------- #
 # HashInvariant
 # --------------------------------------------------------------------- #
@@ -365,3 +388,84 @@ def test_drift_evaluate_matches_suite_fold(docs_small, kind, metric):
     want = sorted(tuple(r) for r in folded.select(*cols).collect())
     assert got == want
     assert {r[2] for r in got} == {True, False}, got
+
+
+# --------------------------------------------------------------------- #
+# Rendered verdict / violation rows of the join- and aggregate-based rules
+# --------------------------------------------------------------------- #
+def _tiny(spark):
+    return spark.createDataFrame(
+        [
+            ("u1", "d1", "a", "a.org"),
+            ("u1", "d2", "b", "b.org"),
+            ("u2", "d1", "c", "a.org"),
+            ("u3", "d2", None, None),
+            ("u4", "d1", "d", "c.org"),
+        ],
+        "url string, day string, text string, host string",
+    )
+
+
+def _render(rule, df, violation_limit=100):
+    verdicts, violations = rule.evaluate(
+        df, key_col="url", partition_col="day", violation_limit=violation_limit
+    )
+    return sorted(tuple(r) for r in verdicts.collect()), [tuple(r) for r in violations.collect()]
+
+
+def test_unique_rendered_rows(spark):
+    verdicts, violations = _render(Unique("url"), _tiny(spark))
+    assert verdicts == [
+        ("d1", "unique(url)", False, 1, "1 rows with duplicated key", "url unique"),
+        ("d2", "unique(url)", False, 1, "1 rows with duplicated key", "url unique"),
+    ]
+    assert violations == [("u1", "unique(url)", "count=2", "count=1")]
+
+
+def test_hash_invariant_rendered_rows(spark):
+    import hashlib
+
+    def sha(s):
+        return hashlib.sha256(s.encode()).hexdigest()
+
+    expected = spark.createDataFrame(
+        [("u1", sha("a")), ("u2", sha("x")), ("u3", sha("z"))], "url string, text_sha256 string"
+    )
+    rule = HashInvariant("text", expected, rule_id="text_bytes", expected_version="v1")
+    verdicts, violations = _render(rule, _tiny(spark))
+    exp = "sha256(text) == expected"
+    assert verdicts == [
+        ("d1", "text_bytes", False, 1, "1 rows with hash mismatch", exp),
+        ("d2", "text_bytes", False, 2, "2 rows with hash mismatch", exp),
+    ]
+    assert violations == [
+        ("u1", "text_bytes", sha("b"), sha("a")),
+        ("u2", "text_bytes", sha("c"), sha("x")),
+        ("u3", "text_bytes", "NULL", sha("z")),
+    ]
+    # the violation rows are capped at violation_limit, first keys first
+    _, capped = _render(rule, _tiny(spark), violation_limit=2)
+    assert capped == violations[:2]
+
+    # missing_is_violation: u4 has no expected row
+    rule = HashInvariant(
+        "text", expected, rule_id="text_bytes", expected_version="v1", missing_is_violation=True
+    )
+    verdicts, violations = _render(rule, _tiny(spark))
+    assert verdicts[0] == ("d1", "text_bytes", False, 2, "2 rows with hash mismatch", exp)
+    assert violations[-1] == ("u4", "text_bytes", sha("d"), "<no expected row>")
+
+
+def test_fk_broadcast_rendered_rows(spark):
+    dim = spark.createDataFrame([("a.org",)], "host string")
+    rule = ForeignKey("host", dim, "host", rule_id="host_known", dim_version="v1")
+    verdicts, violations = _render(rule, _tiny(spark))
+    exp = "host in dim.host"
+    assert verdicts == [
+        ("d1", "host_known", False, 1, "1 rows with unknown reference", exp),
+        ("d2", "host_known", False, 1, "1 rows with unknown reference", exp),
+    ]
+    assert violations == [
+        ("u1", "host_known", "b.org", "member of dim.host"),
+        ("u4", "host_known", "c.org", "member of dim.host"),
+    ]
