@@ -3575,7 +3575,7 @@ def _ann_lsh_oracle() -> str:
     """Replay the seeded-hyperplane LSH bucketing + exact cosine re-rank in
     DuckDB. The hyperplanes are emitted as full-precision (repr round-trip)
     DOUBLE literals, so sign bits — and therefore buckets — are identical to
-    the Spark side (operators/similarity.py lsh_bucket_expr)."""
+    the Spark side (functions/vectorized.py make_lsh_buckets)."""
     from slower_whisper_spark.operators.similarity import _hyperplanes
 
     tables = _hyperplanes(dim=64, n_planes=4, n_tables=16, seed=42)
@@ -4726,7 +4726,7 @@ def oracle_sql() -> dict[str, str]:
             ORDER BY url
         """,
         # DuckDB list-algebra re-implementation of every chain signal;
-        # reason order mirrors operators/quality.py REASONS.
+        # reason order mirrors quality_filter's checks in operators/quality.py.
         "quality_filter": """
             WITH t AS (
               SELECT doc_id, lang,

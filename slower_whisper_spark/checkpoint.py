@@ -54,7 +54,8 @@ class ManifestEntry:
     partition_spec: str
     rule_hash: str
     status: str
-    metrics: dict[str, float] = field(default_factory=dict)
+    # numbers for success/partial; error entries carry error_type + error
+    metrics: dict[str, Any] = field(default_factory=dict)
     completed_at: str = ""
     run_id: str = ""
     # mergeable per-partition sketches (column → b64): KLL quantiles / HLL

@@ -3,8 +3,7 @@
 The recipe — ``sha256(json.dumps(obj, sort_keys=True, separators=(",", ":")))``
 — reproduces the reference's schema-hash normalization
 (ref: transcription/schema/registry.py:104-113) so rule hashes are stable
-across Python versions and dict orderings. The 12-hex short form mirrors the
-reference's config_hash (ref: transcription/receipt.py:100-115).
+across Python versions and dict orderings.
 """
 
 from __future__ import annotations
@@ -21,11 +20,6 @@ def canonical_json(obj: Any) -> str:
 def canonical_hash(obj: Any) -> str:
     """Full sha256 hex digest of the canonical JSON form of ``obj``."""
     return hashlib.sha256(canonical_json(obj).encode("utf-8")).hexdigest()
-
-
-def short_hash(obj: Any, n: int = 12) -> str:
-    """Truncated canonical hash (default 12 hex chars)."""
-    return canonical_hash(obj)[:n]
 
 
 # Keys that mark the spec's on-disk FORMAT, not its semantics. They are

@@ -10,7 +10,7 @@ whitespace runs collapsed to single spaces — so for single-spaced source
 text the round trip is byte-identical. The reference ancestor is its
 content-hash integrity verification (ref: transcription/schema/
 integrity.py:222-335) and its HTML exporter's entity escaping
-(ref: transcription/exporters shape, see sources/sinks.py here).
+(ref: transcription/exporters shape).
 
 Supported HTML subset (documented contract, all regexes RE2-safe so the
 same steps run verbatim on Spark's Java regex and DuckDB's RE2):

@@ -1,11 +1,10 @@
 """Text-analysis column functions for webtext pipelines — all JVM-side
-Spark expressions (no UDFs): language-ID heuristic, quality scoring, token
-counting, shingling, fingerprinting.
+Spark expressions (no UDFs): language-ID heuristic, quality signals, token
+counting, shingling, fingerprinting, PII redaction.
 
 These are the "training-data pipeline" primitives layered on the documents
 table. The reference's ancestors are its text folds (word_count/full_text,
-ref: transcription/models.py:616-727) and keyword extraction
-(ref: transcription/streaming_semantic.py:452-521).
+ref: transcription/models.py:616-727).
 """
 
 from __future__ import annotations
@@ -33,16 +32,6 @@ def token_count(c: Column | str) -> Column:
     return F.size(tokens(c)).cast("long")
 
 
-def bpe_ish_token_count(c: Column | str) -> Column:
-    """BPE-flavored token estimate: split on word boundaries AND count
-    punctuation/digit runs separately (a cheap proxy for subword tokenizers;
-    deliberately deterministic and JVM-side)."""
-    c = F.col(c) if isinstance(c, str) else c
-    pieces = F.split(F.trim(c), r"(?<=\W)|(?=\W)")
-    nonblank = F.filter(pieces, lambda p: F.trim(p) != "")
-    return F.size(nonblank).cast("long")
-
-
 def punct_ratio(c: Column | str) -> Column:
     c = F.col(c) if isinstance(c, str) else c
     n_punct = F.length(F.regexp_replace(c, r"[^.,;:!?\"'()\[\]{}]", ""))
@@ -56,15 +45,9 @@ def stopword_ratio(c: Column | str, lang: str = "en") -> Column:
     return (hits / F.greatest(F.size(toks), F.lit(1))).cast("double")
 
 
-def mean_word_length(c: Column | str) -> Column:
-    toks = tokens(c)
-    total = F.aggregate(toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t))
-    return (total / F.greatest(F.size(toks), F.lit(1))).cast("double")
-
-
 def word_ngrams(c: Column | str, n: int = 3) -> Column:
-    """Word n-grams WITH multiplicity (unlike shingles(), which is the
-    distinct set for Jaccard): array of space-joined n-token windows.
+    """Word n-grams WITH multiplicity: array of space-joined n-token
+    windows.
     Pure JVM transform over the token array — no explode, no shuffle."""
     toks = tokens(c)
     idx = F.sequence(F.lit(0), F.size(toks) - n)
@@ -88,23 +71,6 @@ def duplicate_ngram_fraction(c: Column | str, n: int = 3) -> Column:
         total > 0,
         (F.lit(1.0) - F.size(F.array_distinct(grams)) / total).cast("double"),
     )
-
-
-def quality_score(c: Column | str) -> Column:
-    """[0,1] heuristic quality score: rewards 50-2000 tokens, mean word
-    length 3-12, some stopwords, low punctuation excess. Weights are fixed
-    and documented so the score is reproducible."""
-    n = token_count(c).cast("double")
-    len_score = F.when(n <= 0, 0.0).otherwise(
-        F.least(n / F.lit(50.0), F.lit(1.0)) * F.least(F.lit(2000.0) / F.greatest(n, F.lit(1.0)), F.lit(1.0))
-    )
-    mwl = mean_word_length(c)
-    wl_score = F.when((mwl >= 3) & (mwl <= 12), 1.0).otherwise(0.3)
-    sw = stopword_ratio(c, "en")
-    sw_score = F.least(sw * F.lit(5.0), F.lit(1.0))
-    p = punct_ratio(c)
-    p_score = F.when(p <= 0.1, 1.0).otherwise(F.greatest(F.lit(1.0) - (p - 0.1) * 3.0, F.lit(0.0)))
-    return (0.4 * len_score + 0.2 * wl_score + 0.2 * sw_score + 0.2 * p_score).cast("double")
 
 
 def lang_id(c: Column | str) -> Column:
@@ -133,23 +99,6 @@ def normalize_text(c: Column | str) -> Column:
 def fingerprint(c: Column | str) -> Column:
     """Deterministic 128-bit document fingerprint: md5 of normalized text."""
     return F.md5(normalize_text(c))
-
-
-def shingles(c: Column | str, n: int = 3) -> Column:
-    """Word n-gram shingles of the normalized text (array<string>;
-    documents shorter than n tokens get a single whole-text shingle).
-
-    PERFORMANCE: as a pure Column expression the tokenizer subtree sits
-    inside the transform lambda and is re-evaluated PER ELEMENT (O(L²)
-    regex work). For bulk pipelines use ``shingle_rows`` below, which
-    materializes the token array into a real column first."""
-    toks = tokens(normalize_text(c))
-    k = F.size(toks)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(k - n + 1, F.lit(1))),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-    )
-    return F.when(k <= 0, F.array().cast("array<string>")).otherwise(grams)
 
 
 def hashed_shingle_rows(df, id_col: str, text_col: str, n: int = 3):
@@ -210,12 +159,12 @@ def _hashed_token_grams(df, id_col: str, text_col: str, n: int = 3):
 
 
 def shingle_rows(df, id_col: str, text_col: str, n: int = 3):
-    """Exploded (id, shingle) rows with the token array materialized ONCE
-    per document (same semantics as ``shingles``: short docs yield one
+    """Exploded (id, shingle) rows: word n-grams of the normalized text, with
+    the token array materialized ONCE per document (short docs yield one
     whole-text shingle; blank docs yield nothing). The intermediate token
     column is referenced multiple times, so Catalyst keeps it materialized
     instead of inlining the tokenizer into the per-element lambda — 30x
-    faster than exploding the pure-Column form."""
+    faster than exploding a pure-Column shingle expression."""
     tok = df.select(
         F.col(id_col).alias("id"),
         F.split(normalize_text(F.col(text_col)), " ").alias("__tk"),
@@ -252,24 +201,6 @@ def redact_pii(c: Column | str, kinds: list[str] | None = None) -> Column:
     for kind in order:
         out = F.regexp_replace(out, PII_PATTERNS[kind], f"[{kind}]")
     return out
-
-
-def pii_counts(c: Column | str) -> Column:
-    """Map of PII kind → match count (the reference's redaction report
-    counts, ref: privacy.py report shape)."""
-    c = F.col(c) if isinstance(c, str) else c
-    return F.map_from_arrays(
-        F.array(*[F.lit(k) for k in PII_PATTERNS]),
-        F.array(*[F.size(F.regexp_extract_all(c, F.lit(p), F.lit(0))) for p in PII_PATTERNS.values()]),
-    )
-
-
-def extract_keywords(c: Column | str, patterns: list[str]) -> Column:
-    """All matches of the given regex alternatives (ref keyword/action
-    extraction: transcription/streaming_semantic.py:452-521)."""
-    c = F.col(c) if isinstance(c, str) else c
-    alternation = "(" + "|".join(patterns) + ")"
-    return F.regexp_extract_all(F.lower(c), F.lit(alternation), F.lit(0))
 
 
 def vocab_topk(df, text_col: str = "text", k: int = 100, normalize: bool = True):

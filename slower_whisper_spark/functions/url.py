@@ -43,14 +43,6 @@ def url_path(c: Column | str) -> Column:
     return F.try_parse_url(_c(c), F.lit("PATH"))
 
 
-def url_query_param(c: Column | str, key: str) -> Column:
-    return F.try_parse_url(_c(c), F.lit("QUERY"), F.lit(key))
-
-
-def url_scheme(c: Column | str) -> Column:
-    return F.lower(F.regexp_extract(_c(c), r"^([A-Za-z][A-Za-z0-9+.-]*):", 1))
-
-
 def path_depth(c: Column | str) -> Column:
     """Number of non-empty path segments ('/a/b/' → 2; '' or '/' → 0)."""
     p = F.coalesce(url_path(_c(c)), F.lit(""))
@@ -111,28 +103,3 @@ def normalize_url(c: Column | str) -> Column:
     r = F.regexp_replace(r, r"^([a-z0-9+.-]+://[^/?#]+)/$", "$1")
     # scheme-less strings pass through (fragment still stripped)
     return F.when(scheme == "", u).otherwise(r)
-
-
-def url_stats(df, url_col: str = "url", approx: bool = False):
-    """Per-registered-domain rollup: page count, distinct hosts, mean path
-    depth — the skew diagnostic for choosing salting factors. One shuffle
-    on the (low-cardinality) domain key.
-
-    ``approx=False`` uses exact countDistinct (deterministic — the oracle
-    path), which Catalyst plans as a two-phase expand aggregate;
-    ``approx=True`` swaps in HLL ``approx_count_distinct``, which is fully
-    partial-aggregable — one ~1.5 KB sketch per (partition, domain) crosses
-    the shuffle — the 10^12-row path."""
-    d = registered_domain(url_col).alias("domain")
-    n_hosts = (
-        F.approx_count_distinct("host") if approx else F.countDistinct("host")
-    ).alias("n_hosts")
-    return (
-        df.select(d, url_host(url_col).alias("host"), path_depth(url_col).alias("depth"))
-        .groupBy("domain")
-        .agg(
-            F.count(F.lit(1)).alias("n_pages"),
-            n_hosts,
-            F.round(F.avg("depth"), 6).alias("mean_path_depth"),
-        )
-    )

@@ -4,19 +4,16 @@ from slower_whisper_spark.operators.dedup import (
     exact_duplicate_groups,
     jaccard_pairs,
     minhash_lsh_candidates,
-    minhash_signature,
     minhash_signatures_df,
     neardup_clusters,
-    simhash64,
     simhash_near_duplicates,
     simhash_signatures_df,
 )
-from slower_whisper_spark.operators.nested import child_suite_verdicts, explode_child
+from slower_whisper_spark.operators.nested import explode_child
 from slower_whisper_spark.operators.sessionize import (
     adjacent_pairs,
     asof_join,
     monotonic_gaps,
-    session_stats,
     sessionize,
 )
 from slower_whisper_spark.operators.similarity import (
@@ -26,7 +23,6 @@ from slower_whisper_spark.operators.similarity import (
     ivf_topk,
     ivf_topk_partitioned,
     lsh_bucketed_topk,
-    train_ivf_centroids,
     train_ivf_centroids_distributed,
 )
 
@@ -36,18 +32,14 @@ __all__ = [
     "exact_duplicate_groups",
     "jaccard_pairs",
     "minhash_lsh_candidates",
-    "minhash_signature",
     "minhash_signatures_df",
     "neardup_clusters",
-    "simhash64",
     "simhash_near_duplicates",
     "simhash_signatures_df",
-    "child_suite_verdicts",
     "explode_child",
     "adjacent_pairs",
     "asof_join",
     "monotonic_gaps",
-    "session_stats",
     "sessionize",
     "cosine_topk",
     "embedding_near_duplicates",
@@ -55,6 +47,5 @@ __all__ = [
     "ivf_topk",
     "ivf_topk_partitioned",
     "lsh_bucketed_topk",
-    "train_ivf_centroids",
     "train_ivf_centroids_distributed",
 ]

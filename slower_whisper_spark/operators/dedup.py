@@ -4,12 +4,10 @@ All candidate generation is shuffle-frugal and JVM-side:
 
   * exact        — sha2 of (normalized) content, two-phase groupBy (the same
                    salted pattern as rules/unique.py).
-  * minhash LSH  — k seeded xxhash64 minima over word shingles (one
-                   projection, no explode), banded; candidates are pairs
-                   sharing a band bucket; verified with exact Jaccard on the
-                   shingle sets. The classic shingle→minhash→band→bucket-join
-                   pipeline expressed entirely in higher-order array
-                   functions.
+  * minhash LSH  — k seeded xxhash64 minima over hashed word shingles
+                   (explode → one MIN aggregate per seed), banded;
+                   candidates are pairs sharing a band bucket; verified with
+                   exact Jaccard on the shingle sets.
   * simhash      — 64-bit sign-aggregated token-hash fingerprint; near-dups
                    = fingerprints within a Hamming radius, bucketed by
                    16-bit chunks (Charikar-style).
@@ -32,7 +30,6 @@ from slower_whisper_spark.functions.text import (
     hashed_shingle_rows,
     normalize_text,
     shingle_rows,
-    shingles,
 )
 
 
@@ -82,20 +79,6 @@ def drop_exact_duplicates(df: DataFrame, text_col: str, id_col: str, normalize: 
 # --------------------------------------------------------------------- #
 # minhash + LSH
 # --------------------------------------------------------------------- #
-def minhash_signature(text_col: str, num_hashes: int = 64, shingle_n: int = 3):
-    """array<bigint> minhash signature column: for seed j, the minimum of
-    xxhash64(shingle, j) over the document's shingles. One JVM projection,
-    no explode, no Python."""
-    sh = shingles(F.col(text_col), n=shingle_n)
-    sig = F.array(
-        *[
-            F.array_min(F.transform(sh, lambda s, j=j: F.xxhash64(s, F.lit(j))))
-            for j in range(num_hashes)
-        ]
-    )
-    return F.when(F.size(sh) > 0, sig)
-
-
 def minhash_signatures_df(
     df: DataFrame,
     text_col: str,
@@ -104,11 +87,10 @@ def minhash_signatures_df(
     shingle_n: int = 3,
 ) -> DataFrame:
     """(id, __sig array<bigint>) via explode → groupBy with one MIN aggregate
-    per seed. The column-expression form (``minhash_signature``) duplicates
-    the whole shingle-construction tree per hash — 64 copies blow past
-    codegen limits and run interpreted. Exploding materializes each shingle
-    ONCE; the 64 minima are plain partial-aggregable MIN()s (map-side
-    combine, shuffles only |ids|×1 rows).
+    per seed: for seed j, the minimum of xxhash64(shingle, j) over the
+    document's shingles. Exploding materializes each shingle ONCE; the 64
+    minima are plain partial-aggregable MIN()s (map-side combine, shuffles
+    only |ids|×1 rows).
 
     Shingles enter as 64-bit HASHES (``hashed_shingle_rows``): per-seed
     re-hash is ``xxhash64(long, seed)`` over fixed-width data — no shingle
@@ -355,29 +337,6 @@ def jaccard_pairs(
 # --------------------------------------------------------------------- #
 # simhash
 # --------------------------------------------------------------------- #
-def simhash64(text_col: str) -> F.Column:
-    """64-bit Charikar simhash of the normalized token stream, entirely in
-    higher-order array expressions: per token, xxhash64 bits vote ±1 per bit
-    position; the fingerprint takes the sign of each position's sum."""
-    toks = F.split(normalize_text(F.col(text_col)), " ")
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))  # hash each token ONCE
-
-    def vote_for(i: int):
-        # closure (NOT a default arg: pyspark introspects lambda params and
-        # would turn a default into a third lambda variable)
-        return F.aggregate(
-            hashes,
-            F.lit(0).cast("long"),
-            lambda acc, h: acc + (F.shiftright(h, i).bitwiseAND(F.lit(1)) * 2 - 1),
-        )
-
-    packed = F.lit(0).cast("long")
-    for i in range(64):  # python loop builds 64 JVM expressions, no per-row python
-        bit = F.when(vote_for(i) > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        packed = packed.bitwiseOR(F.shiftleft(bit, i))
-    return packed
-
-
 def hamming64(a: F.Column, b: F.Column) -> F.Column:
     return F.bit_count(a.bitwiseXOR(b))
 
@@ -408,8 +367,9 @@ def simhash_signatures_df(
     df: DataFrame, text_col: str, id_col: str, hash_fn: str = "xxhash64"
 ) -> DataFrame:
     """(id, sim_lo, sim_hi, sim) simhash via explode → groupBy: per token one
-    hash, then 64 partial-aggregable bit-vote SUMs — avoids duplicating the
-    tokenizer expression per bit (same blowup as the inline minhash form).
+    hash, then 64 partial-aggregable bit-vote SUMs (64-bit Charikar simhash:
+    each token hash votes ±1 per bit position, and the fingerprint takes the
+    sign of each position's sum).
     ``sim_lo``/``sim_hi`` are the fingerprint's 32-bit halves; ``sim`` packs
     them into one signed 64-bit value for compactness."""
     narrow = _fanned_out(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__txt")))

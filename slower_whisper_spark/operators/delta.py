@@ -66,8 +66,3 @@ def snapshot_delta(
         .otherwise("changed")
     )
     return j.select("url", verdict.alias("verdict"), "old_fp", "new_fp")
-
-
-def snapshot_delta_stats(delta: DataFrame) -> DataFrame:
-    """Verdict counts in one aggregate — the recrawl report line."""
-    return delta.groupBy("verdict").agg(F.count(F.lit(1)).alias("n")).orderBy("verdict")

@@ -120,9 +120,8 @@ def harmonic_centrality(
     round and re-minimizes, so a revisit never shortens below the true
     distance. Exact form is for host-graph scale (nodes ≪ pages; the
     distance table is O(reachable pairs within D)); at 10^9-node scale the
-    standard swap-in is HyperBall (per-node HLL neighborhood counters —
-    the package's mergeable-sketch pattern), which this bounded-depth API
-    is shaped to accept. Output: ``(node, harmonic)`` for nodes with at
+    standard swap-in is HyperBall (Boldi–Vigna: per-node HLL neighborhood
+    counters), which this bounded-depth API is shaped to accept. Output: ``(node, harmonic)`` for nodes with at
     least one in-path; 1/d sums as double — consumers round for
     comparisons."""
     e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_t")).distinct()
@@ -144,72 +143,4 @@ def harmonic_centrality(
         dist.where(F.col("u") != F.col("v"))
         .groupBy(F.col("v").alias("node"))
         .agg(F.sum(F.lit(1.0) / F.col("d")).alias("harmonic"))
-    )
-
-
-def hyperball_harmonic(
-    edges: DataFrame,
-    *,
-    src: str = "src",
-    dst: str = "dst",
-    max_depth: int = 8,
-    lgk: int = 12,
-    transpose: bool = True,
-) -> DataFrame:
-    """HyperBall (Boldi–Vigna) — the algorithm that actually computes
-    harmonic centrality on 10^9-node web graphs (it is how Common Crawl's
-    published host ranks are made): each node carries an HLL counter of
-    its ball, one hop is ball_{t+1}(v) = ball_t(v) ∪ ⋃_{v→w} ball_t(w),
-    and H(v) accumulates (|B_t| − |B_{t-1}|)/t as the ball grows.
-
-    Entirely JVM-side: the counters are Spark's built-in Apache
-    DataSketches HLL (``hll_sketch_agg`` to seed one node per sketch,
-    ``hll_union_agg`` for the hop union, ``hll_sketch_estimate`` for ball
-    sizes) — no Python, ~2^lgk bytes per node, one shuffle per hop.
-    ``transpose=True`` (default) runs on reversed edges so H counts nodes
-    REACHING v — the same orientation as ``harmonic_centrality``; the
-    estimates converge on it within HLL error (exact in HLL sparse mode
-    at test scale). For depths ≫ 8 checkpoint the state every ~5 hops
-    (lineage discipline, as with ``pagerank``)."""
-    a, b = (dst, src) if transpose else (src, dst)
-    e = edges.select(F.col(a).alias("_s"), F.col(b).alias("_t")).distinct()
-    nodes = (
-        e.select(F.col("_s").alias("node"))
-        .unionByName(e.select(F.col("_t").alias("node")))
-        .distinct()
-    )
-    state = nodes.groupBy("node").agg(
-        F.expr(f"hll_sketch_agg(node, {int(lgk)})").alias("ball")
-    )
-    state = state.select(
-        "node",
-        "ball",
-        F.expr("hll_sketch_estimate(ball)").cast("double").alias("n_prev"),
-        F.lit(0.0).alias("h"),
-    )
-    for t in range(1, int(max_depth) + 1):
-        nb = e.join(state, e["_t"] == state["node"]).select(
-            F.col("_s").alias("node"), "ball"
-        )
-        merged = (
-            state.select("node", "ball")
-            .unionByName(nb)
-            .groupBy("node")
-            .agg(F.expr("hll_union_agg(ball)").alias("ball"))
-        )
-        est = F.expr("hll_sketch_estimate(ball)").cast("double")
-        state = (
-            merged.join(state.select("node", "n_prev", "h"), "node")
-            .select(
-                "node",
-                "ball",
-                est.alias("n_new"),
-                (F.col("h") + (est - F.col("n_prev")) / F.lit(float(t))).alias("h"),
-            )
-            .withColumnRenamed("n_new", "n_prev")
-        )
-    return state.select(
-        "node",
-        F.col("h").alias("harmonic_est"),
-        F.col("n_prev").alias("ball_size"),
     )

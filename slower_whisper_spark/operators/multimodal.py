@@ -1,29 +1,20 @@
-"""Multimodal (image/audio/video) column plumbing.
+"""Multimodal (image) payload decoding with stdlib + numpy only.
 
-Media are opaque ``binary`` columns with a typed metadata struct; decode /
-feature-extract / resize / frame-sample run as Arrow-batched pandas
-functions over ``mapInPandas`` (per-partition batch iteration — the
-amortized-setup pattern the reference uses for its shared
-AudioSegmentExtractor, ref: transcription/audio_enrichment.py:327-333).
+The container has no media libraries, so these parse real container bytes
+directly:
 
-Decoder tiers (the container has no media libraries; everything here is
-stdlib + numpy):
+* ``parse_media_header`` — media type, format, dimensions and duration from
+  the actual headers: PNG IHDR, JPEG SOF marker scan, GIF logical-screen
+  descriptor, BMP BITMAPINFOHEADER, WAV RIFF fmt/data chunks. The ingest
+  probe (``sources/ingest.py``) runs it on every payload that passes its
+  SQL tier.
+* ``decode_png_pixels`` — full PNG pixel decode (zlib + per-spec
+  un-filtering).
+* ``decode_gif_pixels`` — full GIF pixel decode (pure-Python LZW).
 
-* ``decoder="headers"`` — REAL metadata extraction: PNG/JPEG/GIF/BMP
-  dimensions parsed from the actual container headers (IHDR, SOF marker
-  scan, logical-screen descriptor, BITMAPINFOHEADER) and WAV
-  channels/sample-rate/duration from the RIFF fmt/data chunks. Features are
-  real where the payload is decodable with stdlib + numpy: PCM
-  RMS/zero-crossings for WAV, per-band pixel stats for uncompressed 24-bit
-  BMP, full PNG pixel decode (zlib + per-spec un-filtering, see
-  decode_png_pixels), full GIF pixel decode (pure-Python LZW, see
-  decode_gif_pixels), and baseline-JPEG pixel decode (Huffman + IDCT, see
-  operators/jpeg.py); progressive JPEG falls back to a content-hash
-  feature, documented — that is where a codec library would slot in.
-* ``decoder="fake"`` — deterministic stub (stable synthetic dims/features),
-  for plumbing tests.
-* ``decoder="pillow"``/``"ffmpeg"`` — raise NotImplementedError until the
-  real libs are present; swapping one in changes ONE function.
+Baseline JPEG pixel decode (Huffman + IDCT) lives in ``operators/jpeg.py``.
+The decode queries in ``__spark_entry__.py`` run these inside Arrow-batched
+``mapInPandas`` functions, so a codec library would replace one function each.
 """
 
 from __future__ import annotations
@@ -31,54 +22,8 @@ from __future__ import annotations
 import hashlib
 import struct
 import zlib
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import types as T
-
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("media_type", T.StringType()),  # image | audio | video
-        T.StructField("format", T.StringType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("duration_sec", T.DoubleType()),
-        T.StructField("sha256", T.StringType()),
-    ]
-)
-
-DECODE_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("meta", MEDIA_META_SCHEMA),
-        T.StructField("feature", T.ArrayType(T.FloatType())),
-    ]
-)
-
-
-def _fake_decode(payload: bytes) -> dict:
-    """Deterministic fake decoder: dims/duration derived from the content
-    hash so tests are stable; marks format from magic bytes when present."""
-    h = hashlib.sha256(payload).digest()
-    fmt = "png" if payload[:4] == b"\x89PNG" else ("jpeg" if payload[:2] == b"\xff\xd8" else "bin")
-    return {
-        "media_type": "image",
-        "format": fmt,
-        "n_bytes": len(payload),
-        "width": 64 + h[0] % 192,
-        "height": 64 + h[1] % 192,
-        "duration_sec": 0.0,
-        "sha256": hashlib.sha256(payload).hexdigest(),
-    }
-
-
-def _fake_feature(payload: bytes, dim: int = 8) -> list[float]:
-    """Deterministic fake embedding: normalized bytes of the content hash."""
-    h = hashlib.sha256(payload).digest()
-    return [h[i] / 255.0 for i in range(dim)]
 
 
 # --------------------------------------------------------------------- #
@@ -462,97 +407,3 @@ def decode_gif_pixels(b: bytes) -> np.ndarray | None:
         return None
     except (struct.error, IndexError):
         return None
-
-
-def _headers_feature(b: bytes, meta: dict, dim: int) -> list[float]:
-    """Real features where the payload is decodable without a codec library
-    (WAV PCM, raw BMP, zlib-compressed PNG, LZW-compressed GIF,
-    baseline-Huffman JPEG); hash-fallback for the rest (progressive JPEG,
-    unknown containers)."""
-    if meta["format"] == "wav":
-        i, data = 12, None
-        while i + 8 <= len(b):
-            cid, csz = b[i : i + 4], struct.unpack("<I", b[i + 4 : i + 8])[0]
-            if cid == b"data":
-                data = b[i + 8 : i + 8 + csz]
-                break
-            i += 8 + csz + (csz & 1)
-        if data:
-            s = np.frombuffer(data[: len(data) // 2 * 2], dtype="<i2").astype(np.float64)
-            if s.size:
-                rms = float(np.sqrt(np.mean(s**2)) / 32768.0)
-                zc = float(np.mean(np.abs(np.diff(np.signbit(s).astype(np.int8)))))
-                peak = float(np.max(np.abs(s)) / 32768.0)
-                mean = float(np.mean(s) / 32768.0)
-                base = [rms, zc, peak, mean]
-                return (base + [0.0] * dim)[:dim]
-    if meta["format"] in ("png", "gif", "jpeg"):
-        if meta["format"] == "png":
-            px = decode_png_pixels(b)
-        elif meta["format"] == "gif":
-            px = decode_gif_pixels(b)
-        else:
-            from slower_whisper_spark.operators.jpeg import decode_jpeg_pixels
-
-            px = decode_jpeg_pixels(b)  # None for progressive → hash fallback
-        if px is not None:
-            flat = px.reshape(-1, px.shape[2]).astype(np.float64) / 255.0
-            means, stds = flat.mean(axis=0), flat.std(axis=0)
-            base = [float(x) for x in means] + [float(x) for x in stds]
-            return (base + [0.0] * dim)[:dim]
-    if meta["format"] == "bmp" and meta["width"]:
-        off = struct.unpack("<I", b[10:14])[0]
-        bits = struct.unpack("<H", b[28:30])[0]
-        if bits == 24:
-            px = np.frombuffer(b[off : off + (len(b) - off) // 3 * 3], dtype=np.uint8)
-            if px.size >= 3:
-                px = px[: px.size // 3 * 3].reshape(-1, 3).astype(np.float64) / 255.0
-                means, stds = px.mean(axis=0), px.std(axis=0)
-                base = [*means, *stds]
-                return ([float(x) for x in base] + [0.0] * dim)[:dim]
-    return _fake_feature(b, dim)
-
-
-def decode_media(
-    df: DataFrame,
-    *,
-    key_col: str = "url",
-    binary_col: str = "html",
-    decoder: str = "fake",
-    feature_dim: int = 8,
-) -> DataFrame:
-    """mapInPandas decode + feature-extract over a binary column.
-
-    Arrow batches in, arrow batches out; per-partition the decoder is
-    constructed ONCE (amortized init), then applied per batch. Only the
-    key + binary columns are read (column pruning keeps the scan narrow).
-    """
-    if decoder not in ("fake", "headers", "pillow", "ffmpeg"):
-        raise ValueError(f"unknown decoder {decoder!r}")
-    if decoder in ("pillow", "ffmpeg"):
-        raise NotImplementedError(
-            f"decoder {decoder!r} requires media libraries not present in this "
-            "environment; use decoder='headers' (real container-header parse + "
-            "raw-sample features) or 'fake' (deterministic stub)"
-        )
-
-    dim = feature_dim
-    use_headers = decoder == "headers"
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # per-partition one-time decoder setup would go here
-        for pdf in batches:
-            metas, feats = [], []
-            for payload in pdf[binary_col]:
-                b = bytes(payload) if payload is not None else b""
-                if use_headers:
-                    m = parse_media_header(b)
-                    metas.append(m)
-                    feats.append(_headers_feature(b, m, dim))
-                else:
-                    metas.append(_fake_decode(b))
-                    feats.append(_fake_feature(b, dim))
-            yield pd.DataFrame({"url": pdf[key_col], "meta": metas, "feature": feats})
-
-    narrow = df.select(key_col, binary_col)
-    return narrow.mapInPandas(decode_batches, schema=DECODE_OUTPUT_SCHEMA)

@@ -1,17 +1,17 @@
-"""Explode-child-validate-rejoin helpers for nested arrays-of-structs.
+"""Explode helper for nested arrays-of-structs.
 
 The child-table half of nested validation (rules/nested.py holds the
 zero-shuffle HOF half): flatten ``parent(key, segments[])`` into one row per
-element — ``(key, pos, <element fields...>)`` — run ANY ConstraintSuite or
-aggregate at element grain, and attribute results back by parent key.
+element — ``(key, pos, <element fields...>)`` — so ANY ConstraintSuite or
+aggregate runs at element grain; validating with ``partition_col="key"``
+attributes the verdicts back to the parent key.
 
 Reference semantics: per-segment / per-word contracts and rollups
 (ref: transcription/models.py:524-579, transcription/turns.py:46-148).
 
 Scale notes: ``posexplode`` is narrow (no shuffle) — the child table
 inherits the parent's partitioning, so a suite over it shuffles exactly as
-it would over a flat table of the same size. Rejoin by parent key is an
-aggregation (child verdicts → per-parent), not a row join.
+it would over a flat table of the same size.
 """
 
 from __future__ import annotations
@@ -42,30 +42,3 @@ def explode_child(
         fields = [F.col(f"__elem.{f.name}").alias(f.name) for f in elem_type.elementType.fields]
         return out.select("key", *(keep_cols or []), "pos", *fields)
     return out.select("key", *(keep_cols or []), "pos", F.col("__elem").alias("value"))
-
-
-def child_suite_verdicts(
-    df: DataFrame,
-    suite,
-    *,
-    key_col: str,
-    array_col: str,
-    element_key: str | None = None,
-    violation_limit: int = 100,
-) -> tuple[DataFrame, DataFrame]:
-    """Explode → validate the child table with ``suite`` → element-grain
-    verdicts PER PARENT KEY (partition = parent key) and violation rows
-    keyed ``parent[pos]`` (or the element's own key column).
-
-    Returns (verdicts, violations) in the suite's standard shapes."""
-    child = explode_child(df, key_col=key_col, array_col=array_col)
-    ek = (
-        F.col(element_key)
-        if element_key
-        else F.concat(F.col("key"), F.lit("["), F.col("pos").cast("string"), F.lit("]"))
-    )
-    child = child.withColumn("__ckey", ek.cast("string"))
-    res = suite.validate(
-        child, key_col="__ckey", partition_col="key", violation_limit=violation_limit
-    )
-    return res.verdicts, res.violations

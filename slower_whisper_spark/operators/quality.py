@@ -1,6 +1,6 @@
 """Training-corpus quality-filter chain (C4 / Gopher / RefinedWeb shape):
 compose the package's row-local text signals into one keep/drop verdict
-with named reasons, plus a one-pass drop-accounting rollup.
+with named reasons, plus the CCNet-style unigram-LM score.
 
 Engine analog of the reference's per-file acceptance pipeline (ref:
 transcription/service_validation.py — a fixed chain of named rejection
@@ -12,15 +12,12 @@ Scale design: every signal is a row-local JVM expression (token counts,
 punctuation/stopword ratios, duplicate-n-gram fraction, eTLD+1 blocklist
 — see functions/text.py, functions/url.py), so the whole chain folds into
 the scan: zero shuffle, zero Python, whole-stage codegen, and Catalyst
-prunes unreferenced columns. At 10^12 rows the filter costs one pass;
-``quality_filter_stats`` adds a single global aggregate of booleans (a
-few hundred bytes per task of partial sums) — reason accounting never
-explodes the reasons array.
+prunes unreferenced columns. At 10^12 rows the filter costs one pass.
 
 Reason vocabulary (evaluation order is the output order, all evaluated —
 a row reports EVERY reason it trips, the Gopher-report convention):
-``too_short | too_long | high_punct | low_stopword | repetitive |
-bad_lang | blocked_domain``.
+``null_text | too_short | too_long | high_punct | low_stopword |
+repetitive | bad_lang | blocked_domain``.
 """
 
 from __future__ import annotations
@@ -33,11 +30,6 @@ from slower_whisper_spark.functions.text import (
     punct_ratio,
     stopword_ratio,
     token_count,
-)
-
-REASONS = (
-    "null_text", "too_short", "too_long", "high_punct", "low_stopword",
-    "repetitive", "bad_lang", "blocked_domain",
 )
 
 
@@ -102,55 +94,6 @@ def quality_filter(
     return df.withColumn("reasons", reasons).withColumn(
         "verdict", F.when(F.size("reasons") == 0, "keep").otherwise("drop")
     )
-
-
-def quality_filter_stats(filtered: DataFrame) -> DataFrame:
-    """One-row drop accounting from ``quality_filter`` output in a single
-    global aggregate: total, kept, dropped, and a per-reason trip count
-    (rows can trip several reasons, so reason counts exceed dropped —
-    documented Gopher-report semantics). No explode; booleans sum as ints."""
-    aggs = [
-        F.count(F.lit(1)).alias("total"),
-        F.sum((F.col("verdict") == "keep").cast("long")).alias("kept"),
-        F.sum((F.col("verdict") == "drop").cast("long")).alias("dropped"),
-    ]
-    for r in REASONS:
-        aggs.append(
-            F.sum(F.array_contains("reasons", r).cast("long")).alias(f"n_{r}")
-        )
-    return filtered.agg(*aggs)
-
-
-def compression_ratio(c: Column | str) -> Column:
-    """CCNet-style compressibility signal: deflate(text) bytes / text
-    bytes. Templated/repetitive documents compress far below prose (~0.3
-    vs ~0.6+); a very low ratio is a strong spam/boilerplate tell that the
-    n-gram signals miss on long-range repetition.
-
-    This is the chain's one genuinely-Python signal (no SQL zlib):
-    a scalar Arrow pandas_udf — batched, zero per-row py4j — and the
-    intended use is on quality_filter SURVIVORS, so the Python cost scales
-    with the accept set, not the corpus. NULL/empty text → NULL.
-    Deterministic: zlib level 6, raw deflate length, round 6."""
-    from pyspark.sql.functions import pandas_udf
-
-    # no type hints: under `from __future__ import annotations` they are
-    # strings pandas_udf cannot resolve (pd is function-local here)
-    @pandas_udf("double")
-    def _ratio(s):
-        import zlib
-
-        def one(t):
-            if t is None:
-                return None
-            b = t.encode("utf-8")
-            if not b:
-                return None
-            return round(len(zlib.compress(b, 6)) / len(b), 6)
-
-        return s.map(one)
-
-    return _ratio(F.col(c) if isinstance(c, str) else c)
 
 
 def unigram_logprob_table(

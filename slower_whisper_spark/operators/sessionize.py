@@ -51,20 +51,6 @@ def sessionize(
     return df.withColumn("session_id", F.sum(is_new).over(running))
 
 
-def session_stats(
-    df: DataFrame, *, key_col: str, ts_col: str, gap_seconds: float
-) -> DataFrame:
-    """Per-session rollup (the Turn/Chunk aggregate analog): start, end,
-    duration, n_events."""
-    s = sessionize(df, key_col=key_col, ts_col=ts_col, gap_seconds=gap_seconds)
-    return s.groupBy(key_col, "session_id").agg(
-        F.min(ts_col).alias("session_start"),
-        F.max(ts_col).alias("session_end"),
-        (_ts_sec(F.max(F.col(ts_col))) - _ts_sec(F.min(F.col(ts_col)))).alias("duration_sec"),
-        F.count(F.lit(1)).alias("n_events"),
-    )
-
-
 def adjacent_pairs(df: DataFrame, *, key_col: str, ts_col: str, value_cols: list[str]) -> DataFrame:
     """Adds prev_<col> + gap_sec columns via lag over (key, ts) — the
     response-latency / interruption primitive."""

@@ -24,10 +24,6 @@ from pyspark.sql import functions as F
 _log = logging.getLogger(__name__)
 
 
-def _dot(a, b) -> F.Column:
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v)
-
-
 def _pair_cos(a, b, compute_dtype: str = "float64") -> F.Column:
     from slower_whisper_spark.functions.vectorized import make_cosine_pair
 
@@ -53,6 +49,11 @@ def cosine_topk(
     """Exact top-k neighbours per query: (query_id, neighbor_id, cos, rank).
 
     queries is expected to be small (broadcast); corpus streams.
+
+    Eager: the query set is collected to the Spark driver when this
+    function is CALLED (one Spark job before the returned DataFrame runs),
+    and the cap bounds it in rows, not bytes — wide vectors make it
+    proportionally larger.
 
     Plan shape (guide §4.1/§2.3): the query set is collected once (bounded —
     ≤ ``_QUERY_MATRIX_CAP`` rows, the broadcast-dimension pattern) into a
@@ -169,25 +170,6 @@ def _vec_dim(df: DataFrame, vec_col: str, dim: int | None) -> int:
     return len(df.select(vec_col).first()[0])
 
 
-def lsh_bucket_expr(vec_col: str, planes: np.ndarray) -> F.Column:
-    """Sign-bit bucket id for ONE table as a pure Column expression. Kept as
-    the didactic/declarative form; the bucketed operators below use
-    ``make_lsh_buckets`` instead — the HOF dot runs interpreted (memory-
-    bound, poor core scaling) and the unrolled-arithmetic alternative
-    explodes the Catalyst tree to ~10^5 nodes at 64 dims × many tables
-    (driver OOM during codegen). One numpy matmul per Arrow batch computes
-    ALL tables' buckets with a tiny plan."""
-    vec = F.col(vec_col).cast("array<double>")
-    bits = []
-    for i, h in enumerate(planes):
-        lit_h = F.array(*[F.lit(float(x)) for x in h])
-        bits.append(F.when(_dot(vec, lit_h) >= 0, F.lit(1 << i)).otherwise(F.lit(0)))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out.cast("long")
-
-
 def lsh_bucketed_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -258,9 +240,10 @@ def lsh_bucketed_topk(
 
 def _ivf_centroids(dim: int, n_centroids: int, seed: int) -> np.ndarray:
     """Training-free IVF centroids: seeded gaussian directions, row-
-    normalized. Production IVF trains kmeans centroids on a sample; the
-    cell-routing plan (assign → probe → re-rank) is identical, so the
-    centroid source is swappable without touching the operator."""
+    normalized. Trained centroids come from
+    ``train_ivf_centroids_distributed``; the cell-routing plan (assign →
+    probe → re-rank) is identical, so the centroid source is swappable
+    without touching the operator."""
     rng = np.random.RandomState(seed)
     c = rng.normal(size=(n_centroids, dim))
     return c / np.linalg.norm(c, axis=1, keepdims=True)
@@ -289,8 +272,9 @@ def ivf_topk(
     touches n_probe/n_centroids of the data. Assignment is one numpy matmul
     per Arrow batch; recall grows with n_probe (tested vs brute force).
 
-    ``centroids`` swaps in trained cells (see ``train_ivf_centroids`` for the
-    sampled-kmeans path) — the routing plan is identical either way."""
+    ``centroids`` swaps in trained cells (see
+    ``train_ivf_centroids_distributed``) — the routing plan is identical
+    either way."""
     from slower_whisper_spark.functions.vectorized import make_ivf_assign
 
     if centroids is not None:
@@ -402,53 +386,6 @@ def ivf_topk_partitioned(
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
-def train_ivf_centroids(
-    df: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    n_centroids: int = 16,
-    sample_size: int = 100_000,
-    n_iter: int = 10,
-    seed: int = 42,
-) -> np.ndarray:
-    """Spherical-kmeans IVF centroids from a bounded sample.
-
-    A ≤``sample_size`` uniform sample is collected to the driver (one count +
-    one sample job — training-time cost, not query-time) and Lloyd-iterated
-    in numpy: assign = argmax(X·Cᵀ), update = row-normalized mean, empty
-    cells re-seed from the sample. Deterministic for a fixed seed. At 100 TB
-    the sample stays 10^5 rows regardless of corpus size — training cost is
-    O(sample · n_centroids · dim) on the driver, and the resulting centroids
-    feed ``ivf_topk(..., centroids=...)`` unchanged. Trained cells track the
-    corpus's real cluster structure, so probes recover far more true
-    neighbours than seeded random directions at the same n_probe (asserted
-    in tests vs the brute-force oracle)."""
-    n = df.count()
-    frac = min(1.0, sample_size / max(n, 1) * 1.2)  # slight over-sample, then cap
-    rows = (
-        df.select(F.col(vec_col).cast("array<double>").alias("v"))
-        .sample(fraction=frac, seed=seed)
-        .limit(sample_size)
-        .collect()
-    )
-    X = np.array([r.v for r in rows], dtype=float)
-    X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-    rng = np.random.RandomState(seed)
-    C = X[rng.choice(len(X), size=min(n_centroids, len(X)), replace=False)].copy()
-    if len(C) < n_centroids:  # degenerate tiny sample: pad with random directions
-        C = np.vstack([C, _ivf_centroids(X.shape[1], n_centroids - len(C), seed + 1)])
-    for _ in range(n_iter):
-        assign = np.argmax(X @ C.T, axis=1)
-        for j in range(n_centroids):
-            members = X[assign == j]
-            if len(members):
-                m = members.mean(axis=0)
-                C[j] = m / max(np.linalg.norm(m), 1e-12)
-            else:
-                C[j] = X[rng.randint(len(X))]
-    return C
-
-
 # Fixed-point scale for exact-mode kmeans partials: normalized components
 # are in [-1, 1], so quantized values fit 2^40 and int64 partial sums stay
 # exact up to ~2^23 (≈8M) rows per cell per batch-tree — far beyond any
@@ -523,10 +460,8 @@ def train_ivf_centroids_distributed(
     dim: int | None = None,
     exact: bool = False,
 ) -> np.ndarray:
-    """Spherical-kmeans IVF centroids with NO driver-side data collection —
-    the cluster-scale twin of ``train_ivf_centroids`` (which stays the
-    default: its ≤10⁵ sample transfer is one bounded job and trains in
-    milliseconds).
+    """Spherical-kmeans IVF centroids with NO vectors collected to the Spark
+    driver.
 
     Exact distributed Lloyd, the KLL-manifest pattern applied to kmeans
     state: each iteration is ONE ``mapInPandas`` pass where every Arrow
@@ -550,10 +485,9 @@ def train_ivf_centroids_distributed(
     replay (``train_ivf_centroids_exact_local``) reproduce the cluster-
     trained centroids exactly for oracle checking. Float mode (default)
     keeps full precision for production training, where 1e-16 batch-order
-    wobble is irrelevant.
-
-    Reference analog: the trained-vs-seeded routing recall contract of
-    ``train_ivf_centroids`` (same assertion runs against both paths)."""
+    wobble is irrelevant. Trained cells track the corpus's real cluster
+    structure, so probes recover more true neighbours than seeded random
+    directions at the same n_probe (asserted in tests vs brute force)."""
     d = dim or _vec_dim(df, vec_col, None)
     vecs = df.select(F.col(vec_col).cast("array<double>").alias("v"))
     C = _ivf_centroids(d, n_centroids, seed)

@@ -24,7 +24,6 @@ from __future__ import annotations
 import struct
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
@@ -174,19 +173,3 @@ def encode_avi_mjpeg(
     )
     riff_body = b"AVI " + hdrl + movi + idx1
     return b"RIFF" + struct.pack("<I", len(riff_body)) + riff_body
-
-
-def video_header_meta(b: bytes) -> dict | None:
-    """Header-only probe (no frame decode): dims + fps + duration from avih
-    — the ffprobe-analog used by ingest guards."""
-    meta = parse_avi_mjpeg(b)
-    if meta is None:
-        return None
-    return {
-        "media_type": "video",
-        "format": "avi",
-        "width": meta["width"],
-        "height": meta["height"],
-        "n_frames": meta["total_frames"],
-        "duration_sec": meta["total_frames"] * meta["us_per_frame"] / 1e6,
-    }

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from slower_whisper_spark.checkpoint import (
+    STATUS_ERROR,
     STATUS_PARTIAL,
     STATUS_SUCCESS,
     CheckpointManifest,
@@ -28,6 +29,11 @@ from slower_whisper_spark.checkpoint import (
     new_run_id,
 )
 from slower_whisper_spark.suite import ConstraintSuite, SuiteResult
+
+
+# an error entry keeps the head of the exception message: a Spark error can
+# carry a whole plan, and every later resume reads the manifest
+_ERROR_CHARS = 2000
 
 
 class GateFailure(Exception):
@@ -91,7 +97,11 @@ class ValidationRunner:
         mode: a partition re-validates only when ITS OWN snapshot changed,
         so appending one day to a 10^4-partition table re-runs one
         partition, not all of them. Manifest entries are stamped with the
-        per-partition snapshot."""
+        per-partition snapshot.
+
+        When validation raises, every pending partition gets an ``error``
+        entry (exception type and message in ``metrics``) before the
+        exception propagates, so the next run retries exactly those."""
         run_id = new_run_id()
         t0 = time.monotonic()
 
@@ -150,31 +160,59 @@ class ValidationRunner:
         pruned = len(pending) < len(partitions)
         scoped = df.filter(F.col(self.partition_col).cast("string").isin(pending))
 
-        result = self.suite.validate(
-            scoped,
-            key_col=self.key_col,
-            partition_col=self.partition_col,
-            violation_limit=self.violation_limit,
-            global_df=df if pruned else None,
-        )
-        status_rows = result.partition_status().collect()
-        wall = time.monotonic() - t0
-        rows_total = int(sum(r["rows"] for r in status_rows))
-        dps = rows_total / wall if wall > 0 else 0.0
+        def snapshot_of(part: str) -> str:
+            if partition_snapshots is not None:
+                return partition_snapshots.get(part, snapshot_id)
+            return snapshot_id
 
-        # mergeable per-partition KLL sketches for the manifest baseline
-        # store: one grouped-Arrow pass per column over PENDING partitions
-        sketches_by_part: dict[str, dict[str, str]] = {}
-        if self.sketch_columns:
-            import base64
+        try:
+            result = self.suite.validate(
+                scoped,
+                key_col=self.key_col,
+                partition_col=self.partition_col,
+                violation_limit=self.violation_limit,
+                global_df=df if pruned else None,
+            )
+            status_rows = result.partition_status().collect()
+            wall = time.monotonic() - t0
+            rows_total = int(sum(r["rows"] for r in status_rows))
+            dps = rows_total / wall if wall > 0 else 0.0
 
-            from slower_whisper_spark.functions.kll import kll_profile
+            # mergeable per-partition KLL sketches for the manifest baseline
+            # store: one grouped-Arrow pass per column over PENDING partitions
+            sketches_by_part: dict[str, dict[str, str]] = {}
+            if self.sketch_columns:
+                import base64
 
-            for col in self.sketch_columns:
-                for sr in kll_profile(scoped, col, partition_col=self.partition_col).collect():
-                    sketches_by_part.setdefault(sr["partition"], {})[col] = base64.b64encode(
-                        bytes(sr["sketch"])
-                    ).decode("ascii")
+                from slower_whisper_spark.functions.kll import kll_profile
+
+                for col in self.sketch_columns:
+                    for sr in kll_profile(scoped, col, partition_col=self.partition_col).collect():
+                        sketches_by_part.setdefault(sr["partition"], {})[col] = base64.b64encode(
+                            bytes(sr["sketch"])
+                        ).decode("ascii")
+        except Exception as exc:
+            # a crashed run leaves a record: one error entry per pending
+            # partition (resume treats non-success entries as pending)
+            now = datetime.now(timezone.utc).isoformat()
+            error = {"error_type": type(exc).__name__, "error": str(exc)[:_ERROR_CHARS]}
+            self.manifest.append(
+                [
+                    ManifestEntry(
+                        partition=p,
+                        snapshot_id=snapshot_of(p),
+                        partition_spec=self.partition_col,
+                        rule_hash=self.suite.suite_hash,
+                        status=STATUS_ERROR,
+                        metrics=error,
+                        completed_at=now,
+                        run_id=run_id,
+                    )
+                    for p in pending
+                ],
+                run_id,
+            )
+            raise
 
         now = datetime.now(timezone.utc).isoformat()
         entries = []
@@ -185,11 +223,7 @@ class ValidationRunner:
             entries.append(
                 ManifestEntry(
                     partition=r["partition"],
-                    snapshot_id=(
-                        partition_snapshots.get(r["partition"], snapshot_id)
-                        if partition_snapshots is not None
-                        else snapshot_id
-                    ),
+                    snapshot_id=snapshot_of(r["partition"]),
                     partition_spec=self.partition_col,
                     rule_hash=self.suite.suite_hash,
                     status=STATUS_SUCCESS if not failed else STATUS_PARTIAL,

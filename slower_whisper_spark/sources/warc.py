@@ -305,26 +305,3 @@ def cdx_index(records: DataFrame, *, num_shards: int | None = None) -> DataFrame
         else idx.repartitionByRange("surt", "url")
     )
     return parts.sortWithinPartitions("surt", "url")
-
-
-def cdx_lookup(
-    spark: SparkSession, index_path: str, url: str
-) -> list[tuple[str, int, int]]:
-    """Resolve one url to its ``[(file, offset, length)]`` locators via a
-    written CDX index (parquet from ``cdx_index``): the SURT key filter
-    prunes shards/row-groups by min/max stats (the index is range-ordered
-    on surt), so the lookup touches one shard's worth of index — never the
-    corpus. Driver-side by design: it answers "fetch me THIS record"."""
-    from pyspark.sql import functions as F
-
-    from slower_whisper_spark.functions.url import surt_key
-
-    idx = spark.read.parquet(index_path)
-    # evaluate the literal's SURT on a 1-row range — no index scan for it
-    key = spark.range(1).select(surt_key(F.lit(url)).alias("k")).collect()[0].k
-    rows = (
-        idx.where((F.col("surt") == key) & (F.col("url") == url))
-        .select("file", "rec_offset", "length")
-        .collect()
-    )
-    return [(r.file, int(r.rec_offset), int(r.length)) for r in rows]

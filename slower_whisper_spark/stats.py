@@ -186,19 +186,3 @@ def profile(
     )
     wide = df.groupBy(F.col(pcol).cast("string").alias("partition")).agg(*aggs).cache()
     return unpivot_stats(wide, profiles, quantiles, include_sketches)
-
-
-def merge_partition_sketches(stats_df: DataFrame) -> DataFrame:
-    """Merge per-partition HLL sketches into table-level distinct counts —
-    proves the sketches are mergeable (the checkpoint-manifest use case)."""
-    if "hll_sketch_b64" not in stats_df.columns:
-        raise ValueError("profile(...) must be called with include_sketches=True")
-    return (
-        stats_df.groupBy("column")
-        .agg(
-            F.sum("rows").alias("rows"),
-            F.hll_sketch_estimate(
-                F.hll_union_agg(F.unbase64(F.col("hll_sketch_b64")))
-            ).cast("long").alias("approx_distinct_merged"),
-        )
-    )

@@ -1,104 +1,20 @@
-"""Incremental (streaming) validation of a docs stream.
+"""Streaming turn lifecycle and its batch twin.
 
-The engine is batch-first (the north rule is a batch suite over a table);
-streaming carries over exactly the concepts SURVEY §2.9 maps:
-
-  * per-micro-batch suite evaluation via ``foreachBatch`` — each micro-batch
-    gets the same verdict/violation tables, appended to sinks with a
-    ``batch_id`` lineage column (the EventEnvelope/SessionStats analog).
-  * watermark + monotonicity: late rows beyond the watermark are dropped by
-    Spark itself; in-order violations are caught by the suite's rules.
-  * checkpointLocation gives exactly-once sink semantics — the streaming
-    twin of the batch checkpoint manifest (ref: replay buffer + RESUME_GAP,
-    transcription/streaming_ws.py:373-413,751-767).
+The engine is batch-first (the north rule is a batch suite over a table).
+Its streaming operator is the PARTIAL -> FINALIZED turn lifecycle (SURVEY
+§2.9): ``turn_lifecycle`` runs it on a stream with Spark's state store,
+``turn_lifecycle_batch`` computes the rows it converges to as a plain query
+(the ``turn_lifecycle`` query in ``__spark_entry__.py`` checks it against
+DuckDB), and ``merge_turn_updates`` is the sink-side merge rule for its
+output.
 """
 
 from __future__ import annotations
 
 import math
-from typing import Callable
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from slower_whisper_spark.suite import ConstraintSuite
-
-
-def validate_stream(
-    stream_df: DataFrame,
-    suite: ConstraintSuite,
-    *,
-    key_col: str = "url",
-    partition_col: str | None = None,
-    checkpoint_dir: str,
-    on_batch: Callable[[int, DataFrame, DataFrame], None],
-    violation_limit: int = 100,
-    trigger_once: bool = True,
-):
-    """Run ``suite`` on every micro-batch; ``on_batch(batch_id, verdicts,
-    violations)`` receives the per-batch results (both carry a batch_id
-    column). Returns the StreamingQuery."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        res = suite.validate(
-            batch_df,
-            key_col=key_col,
-            partition_col=partition_col,
-            violation_limit=violation_limit,
-        )
-        verdicts = res.verdicts.withColumn("batch_id", F.lit(batch_id))
-        violations = res.violations.withColumn("batch_id", F.lit(batch_id))
-        try:
-            on_batch(batch_id, verdicts, violations)
-        finally:
-            # release the suite's cached intermediates — a long-running
-            # stream would otherwise accumulate one set per micro-batch
-            res.unpersist()
-
-    writer = (
-        stream_df.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def session_window_turns(
-    stream_df: DataFrame,
-    *,
-    key_col: str = "url",
-    ts_col: str = "warc_ts",
-    gap: str = "30 seconds",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Gap-based session aggregation — the streaming twin of the reference's
-    turn-finalization triggers (speaker change / pause gap / max buffer,
-    ref: transcription/streaming_semantic.py:381-434): a turn closes when no
-    event arrives for ``gap``; the watermark bounds how late a straggler can
-    reopen it. Built on Spark's native ``session_window`` so state handling,
-    late-data semantics, and output finalization are the engine's, not ours.
-    Works identically on a batch DataFrame (tested both ways)."""
-    return (
-        stream_df.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(F.col(ts_col), gap).alias("w"), F.col(key_col))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min(ts_col).alias("turn_start"),
-            F.max(ts_col).alias("turn_end"),
-        )
-        .select(
-            key_col,
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "turn_start",
-            "turn_end",
-            "n_events",
-        )
-    )
 
 
 def turn_lifecycle(
@@ -336,45 +252,3 @@ def merge_turn_updates(df: DataFrame) -> DataFrame:
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def windowed_lang_counts(
-    stream_df: DataFrame,
-    *,
-    ts_col: str = "warc_ts",
-    watermark: str = "10 minutes",
-    window: str = "1 hour",
-) -> DataFrame:
-    """Watermarked windowed aggregation (late-data-tolerant lang mix) — the
-    streaming analog of the categorical-distribution stat."""
-    return (
-        stream_df.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("w"), F.col("lang"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("window_start"), "lang", "n")
-    )
-
-
-def stream_dedup(
-    df: DataFrame,
-    *,
-    key_cols: list[str] | None = None,
-    event_time_col: str = "warc_ts",
-    delay: str = "10 minutes",
-) -> DataFrame:
-    """Streaming exact-dedup: drop redeliveries of the same key arriving
-    within the watermark window (``dropDuplicatesWithinWatermark`` — state
-    per key is retained only until the watermark passes, so state size is
-    O(keys per window), not O(all keys ever) — the bounded-state contract
-    the rest of this module keeps).
-
-    The at-least-once ingest twin of ``operators/dedup.py``'s batch exact
-    dedup: upstream crawlers redeliver urls on retry; this keeps the first
-    arrival per url per window. Duplicates farther apart than ``delay``
-    are NOT caught (documented — that's the batch job's pass). Works on a
-    batch DataFrame too (falls back to plain dropDuplicates semantics over
-    the whole input, useful for parity tests).
-    """
-    keys = key_cols or ["url"]
-    wm = df.withWatermark(event_time_col, delay)
-    return wm.dropDuplicatesWithinWatermark(keys)

@@ -124,6 +124,46 @@ def test_failed_partitions_are_retried_not_skipped(docs_small, tmp_path):
     assert len(r2.processed_partitions) > 0
 
 
+def test_crashed_run_leaves_error_entries_and_resumes_them(spark, tmp_path):
+    """A rule that throws at execution time: the crashed run appends one
+    ``error`` entry per pending partition (run_id, exception type and
+    message) and re-raises; the next run on repaired data re-validates
+    exactly those partitions and skips the ones done before the crash."""
+    import pytest
+
+    from slower_whisper_spark import Expr
+
+    df = spark.createDataFrame(
+        [("u1", "d1"), ("u2", "d2"), ("u3", "d3"), ("boom", "d3")],
+        "url string, warc_day string",
+    )
+    suite = ConstraintSuite(
+        "crash", [Expr("assert_true(url <> 'boom', 'boom row') IS NULL", rule_id="r")]
+    )
+    mpath = str(tmp_path / "m")
+    runner = ValidationRunner(suite, mpath, partition_col="warc_day")
+    r1 = runner.run(df, snapshot_id="s", partitions=["d1"])
+    assert r1.processed_partitions == ["d1"] and r1.overall_passed
+
+    with pytest.raises(Exception, match="boom row"):
+        runner.run(df, snapshot_id="s")
+    m = CheckpointManifest(mpath)
+    latest = m.latest_per_partition()
+    errors = {p: e for p, e in latest.items() if e.status == "error"}
+    assert sorted(errors) == ["d2", "d3"]
+    assert latest["d1"].status == "success"
+    (run_id,) = {e.run_id for e in errors.values()}
+    assert run_id.startswith("run-") and run_id != r1.run_id
+    for e in errors.values():
+        assert e.rule_hash == suite.suite_hash and e.snapshot_id == "s"
+        assert e.metrics["error_type"] and "boom row" in e.metrics["error"]
+
+    r3 = runner.run(df.filter(F.col("url") != "boom"), snapshot_id="s")
+    assert r3.skipped_partitions == ["d1"]
+    assert r3.processed_partitions == ["d2", "d3"] and r3.overall_passed
+    assert m.completed_partitions(suite.suite_hash, "s") == {"d1", "d2", "d3"}
+
+
 def test_gate_mode_raises(docs_small, tmp_path):
     docs, _, _ = docs_small
     runner = ValidationRunner(

@@ -1,4 +1,4 @@
-"""Real container-header decoding (decoder='headers'): the test MEDIA FILES
+"""Real container-header and pixel decoding: the test MEDIA FILES
 are constructed byte-for-byte valid in pure python (PNG via zlib, JPEG with
 a SOF0 segment, GIF, 24-bit BMP, PCM WAV), so the parsed width/height/
 duration assertions are against ground truth, not against the parser."""
@@ -11,11 +11,7 @@ import zlib
 import numpy as np
 import pytest
 
-from slower_whisper_spark.operators.multimodal import (
-    _headers_feature,
-    decode_media,
-    parse_media_header,
-)
+from slower_whisper_spark.operators.multimodal import parse_media_header
 
 
 def make_png(w: int, h: int) -> bytes:
@@ -91,39 +87,6 @@ def test_header_parse_truncated_is_safe():
         for cut in (0, 1, 3, 9, len(full) // 2):
             parse_media_header(full[:cut])  # must not raise
     parse_media_header(make_wav(0.1)[:20])
-
-
-def test_real_features_wav_and_bmp():
-    wav = make_wav(0.25, rate=8000, freq=440)
-    meta = parse_media_header(wav)
-    feat = _headers_feature(wav, meta, 8)
-    # 0.5-amplitude sine: RMS ≈ 0.5/sqrt(2), peak ≈ 0.5
-    assert feat[0] == pytest.approx(0.3535, abs=0.01)
-    assert feat[2] == pytest.approx(0.5, abs=0.01)
-
-    bmp = make_bmp(4, 4, rgb=(255, 0, 0))  # pure red
-    meta = parse_media_header(bmp)
-    feat = _headers_feature(bmp, meta, 8)
-    # stored BGR: mean blue≈pad-skewed low, red channel high; stds near 0
-    assert max(feat[:3]) > 0.9
-
-
-def test_decode_media_headers_on_spark(spark):
-    rows = [
-        ("u1", make_png(32, 16)),
-        ("u2", make_wav(0.5)),
-        ("u3", make_bmp(3, 3)),
-        ("u4", b"plain bytes"),
-    ]
-    df = spark.createDataFrame(rows, "url string, payload binary")
-    out = decode_media(df, key_col="url", binary_col="payload", decoder="headers").toPandas()
-    by = {r["url"]: r for _, r in out.iterrows()}
-    assert by["u1"]["meta"]["width"] == 32 and by["u1"]["meta"]["format"] == "png"
-    assert by["u2"]["meta"]["media_type"] == "audio"
-    assert abs(by["u2"]["meta"]["duration_sec"] - 0.5) < 1e-3
-    assert by["u3"]["meta"]["format"] == "bmp"
-    assert by["u4"]["meta"]["format"] == "bin"
-    assert all(len(r["feature"]) == 8 for _, r in out.iterrows())
 
 
 # ---------------------------------------------------------------- #
@@ -251,24 +214,25 @@ def test_png_palette_decode_expands_plte():
     assert decode_png_pixels(encode_pal(0, include_plte=False)) is None
 
 
-def test_png_real_features_exact_channel_means(spark):
-    """decode_media(decoder='headers') must return REAL per-band means/stds
-    for PNG now (not the hash fallback): build a known RGB bitmap, assert
-    exact channel statistics."""
+def test_png_real_features_exact_channel_means():
+    """A decoded PNG gives REAL per-band means/stds: build a known RGB
+    bitmap, assert exact channel statistics of the decoded pixels."""
+    from slower_whisper_spark.operators.multimodal import decode_png_pixels
+
     img = np.zeros((10, 10, 3), dtype=np.uint8)
     img[..., 0] = 200  # R constant
     img[..., 1] = 50   # G constant
     img[:5, :, 2] = 0  # B: half 0, half 100 -> mean 50, std 50
     img[5:, :, 2] = 100
     png = encode_png(img, 2)
-    df = spark.createDataFrame([("u", bytearray(png))], "url string, html binary")
-    out = decode_media(df, decoder="headers", feature_dim=6).collect()[0]
-    f = out["feature"]
+    px = decode_png_pixels(png).reshape(-1, 3).astype(np.float64) / 255.0
+    f = [*px.mean(axis=0), *px.std(axis=0)]
     assert abs(f[0] - 200 / 255) < 1e-6 and abs(f[1] - 50 / 255) < 1e-6
     assert abs(f[2] - 50 / 255) < 1e-6      # B mean
     assert abs(f[3] - 0.0) < 1e-6 and abs(f[4] - 0.0) < 1e-6  # R,G std
     assert abs(f[5] - 50 / 255) < 1e-6      # B std
-    assert out["meta"]["width"] == 10 and out["meta"]["format"] == "png"
+    meta = parse_media_header(png)
+    assert meta["width"] == 10 and meta["format"] == "png"
 
 
 def _chunk(typ: bytes, data: bytes) -> bytes:

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from slower_whisper_spark import ConstraintSuite, Nested, TypeCheck
 from slower_whisper_spark.migrate import suite_from_spec
-from slower_whisper_spark.operators import child_suite_verdicts, explode_child
+from slower_whisper_spark.operators import explode_child
 
 
 @pytest.fixture(scope="module")
@@ -98,9 +98,11 @@ def test_child_suite_verdicts_rejoin(nested_df):
     inner = ConstraintSuite(
         "c", [Expr("end >= start AND id >= 0", rule_id="elem_ok")]
     )
-    verd, viol = child_suite_verdicts(
-        nested_df, inner, key_col="doc_id", array_col="segments"
+    child = explode_child(nested_df, key_col="doc_id", array_col="segments").withColumn(
+        "__ckey", F.concat(F.col("key"), F.lit("["), F.col("pos").cast("string"), F.lit("]"))
     )
+    res = inner.validate(child, key_col="__ckey", partition_col="key")
+    verd, viol = res.verdicts, res.violations
     by_parent = {r["partition"]: r for r in verd.collect()}
     assert by_parent["d1"]["violations"] == 0
     assert by_parent["d2"]["violations"] == 1

@@ -16,7 +16,6 @@ from slower_whisper_spark.operators import (
     lsh_bucketed_topk,
     minhash_lsh_candidates,
     monotonic_gaps,
-    session_stats,
     sessionize,
     simhash_near_duplicates,
 )
@@ -139,9 +138,9 @@ def test_lsh_ann_recall_vs_bruteforce(spark):
 def test_sessionize_matches_duckdb(spark):
     ev = spark.read.parquet(f"{SF}/events.parquet")
     got = (
-        session_stats(ev, key_col="user_id", ts_col="ts", gap_seconds=1800)
+        sessionize(ev, key_col="user_id", ts_col="ts", gap_seconds=1800)
         .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_sessions"))
+        .agg(F.countDistinct("session_id").alias("n_sessions"))
         .toPandas()
         .sort_values("user_id")
         .reset_index(drop=True)
@@ -210,25 +209,6 @@ def test_asof_join_matches_duckdb(spark):
     g = got["asof_signup_event_id"].astype("float")
     o = oracle["signup_event_id"].astype("float")
     assert ((g == o) | (g.isna() & o.isna())).all()
-
-
-def test_multimodal_decode_stub(docs_small):
-    from slower_whisper_spark.operators.multimodal import decode_media
-
-    docs, _, _ = docs_small
-    out = decode_media(docs.limit(200), key_col="url", binary_col="html", decoder="fake")
-    pdf = out.toPandas()
-    assert len(pdf) == 200
-    m = pdf["meta"].iloc[0]
-    m = m.asDict() if hasattr(m, "asDict") else dict(m)
-    assert set(m) == {"media_type", "format", "n_bytes", "width", "height", "duration_sec", "sha256"}
-    assert all(len(f) == 8 for f in pdf["feature"])
-    # deterministic: same input → same features
-    pdf2 = decode_media(docs.limit(200), key_col="url", binary_col="html").toPandas()
-    assert list(pdf["feature"].iloc[0]) == list(pdf2["feature"].iloc[0])
-
-    with pytest.raises(NotImplementedError):
-        decode_media(docs, decoder="pillow")
 
 
 def test_interval_bucketing_equals_plain_join(spark):
@@ -313,13 +293,13 @@ def test_degenerate_long_interval_no_bucket_blowup(spark):
 
 
 def test_trained_ivf_centroids_beat_seeded(spark):
-    """Sampled-kmeans centroids on a CLUSTERED corpus: recall@10 at
+    """Distributed-kmeans centroids on a CLUSTERED corpus: recall@10 at
     n_probe=1 must beat training-free seeded centroids — trained cells
     recover the true clusters (each query's whole neighbourhood lives in
     one cell), random directions split them. Deterministic seeds."""
     import numpy as np
     from slower_whisper_spark.operators import cosine_topk, ivf_topk
-    from slower_whisper_spark.operators.similarity import train_ivf_centroids
+    from slower_whisper_spark.operators.similarity import train_ivf_centroids_distributed
 
     rng = np.random.RandomState(3)
     centers = rng.normal(size=(16, 16)) * 4.0
@@ -341,23 +321,13 @@ def test_trained_ivf_centroids_beat_seeded(spark):
             len(exact_sets[q] & sets.get(q, set())) / 10 for q in exact_sets.index
         ) / len(exact_sets.index)
 
-    trained = train_ivf_centroids(emb, vec_col="embedding", n_centroids=16, n_iter=10, seed=7)
-    r_seeded, r_trained = recall(None), recall(trained)
-    assert r_trained > r_seeded, (r_trained, r_seeded)
-    assert r_trained >= 0.9, r_trained  # kmeans recovers the 16 true clusters
-
-    # distributed Lloyd (mapInPandas partials, zero driver data collection)
-    # must reach recall parity with the sampled path on the same fixture
-    from slower_whisper_spark.operators.similarity import train_ivf_centroids_distributed
-
+    # distributed Lloyd: mapInPandas partials, no vectors on the Spark driver
     dist = train_ivf_centroids_distributed(
         emb, vec_col="embedding", n_centroids=16, n_iter=10, seed=7, dim=16
     )
-    r_dist = recall(dist)
+    r_seeded, r_dist = recall(None), recall(dist)
     assert r_dist > r_seeded, (r_dist, r_seeded)
-    assert r_dist >= 0.9, r_dist
-    # parity-or-better: full-data Lloyd can only beat the sampled path
-    assert r_dist >= r_trained - 0.05, (r_dist, r_trained)
+    assert r_dist >= 0.9, r_dist  # kmeans recovers the 16 true clusters
 
 
 def test_distributed_kmeans_exact_mode_bit_identical(spark):

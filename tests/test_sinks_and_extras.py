@@ -1,55 +1,14 @@
-"""Sinks (S3-S7), PII redaction (V10), keyword extraction (V11),
-chunk packing (W2), interval overlap (J4)."""
+"""PII redaction (V10), chunk packing (W2), interval overlap (J4)."""
 
 from __future__ import annotations
-
-import glob
 
 import duckdb
 from pyspark.sql import functions as F
 
-from slower_whisper_spark.functions.text import extract_keywords, pii_counts, redact_pii
+from slower_whisper_spark.functions.text import redact_pii
 from slower_whisper_spark.operators.sessionize import interval_overlap_pairs, pack_chunks
-from slower_whisper_spark.sources.sinks import (
-    srt_timestamp,
-    write_csv,
-    write_json,
-    write_verdict_report,
-    write_violations_report,
-)
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_sinks_roundtrip(docs_small, tmp_path, spark):
-    from slower_whisper_spark import ConstraintSuite, NotNull, Pattern
-
-    docs, _, _ = docs_small
-    res = ConstraintSuite(
-        "sink", [NotNull("url"), Pattern("lang", "^[a-z]{2}(-[A-Z]{2})?$")]
-    ).validate(docs, key_col="url", partition_col="warc_day", violation_limit=50)
-
-    write_json(res.verdicts, str(tmp_path / "verdicts_json"))
-    write_csv(res.verdicts, str(tmp_path / "verdicts_csv"))
-    write_violations_report(res.violations, str(tmp_path / "viol_txt"))
-    write_verdict_report(res.verdicts, str(tmp_path / "verd_txt"))
-
-    back = spark.read.json(str(tmp_path / "verdicts_json"))
-    assert back.count() == res.verdicts.count()
-    txt = ""
-    for f in glob.glob(str(tmp_path / "viol_txt" / "part-*")):
-        txt += open(f).read()
-    assert "[viol] pattern(lang)" in txt
-    vtxt = ""
-    for f in glob.glob(str(tmp_path / "verd_txt" / "part-*")):
-        vtxt += open(f).read()
-    assert "[FAIL]" in vtxt and "[ok]" in vtxt
-
-
-def test_srt_timestamp(spark):
-    df = spark.createDataFrame([(3661.5,), (0.007,)], "s double")
-    got = [r[0] for r in df.select(srt_timestamp(F.col("s"))).collect()]
-    assert got == ["01:01:01,500", "00:00:00,007"]
 
 
 def test_pii_redaction(spark):
@@ -60,14 +19,6 @@ def test_pii_redaction(spark):
     red = df.select(redact_pii("t").alias("r")).first()["r"]
     assert "[EMAIL]" in red and "[PHONE]" in red and "[SSN]" in red and "[IPV4]" in red
     assert "bob@example.com" not in red and "123-45-6789" not in red
-    counts = df.select(pii_counts("t").alias("c")).first()["c"]
-    assert counts["EMAIL"] == 1 and counts["SSN"] == 1
-
-
-def test_keyword_extraction(spark):
-    df = spark.createDataFrame([("I will commit to the fix and TODO the rest",)], "t string")
-    got = df.select(extract_keywords("t", ["commit to", "todo"]).alias("k")).first()["k"]
-    assert got == ["commit to", "todo"]
 
 
 def test_pack_chunks_budget(spark):
@@ -111,54 +62,3 @@ def test_interval_overlap_matches_duckdb(spark):
         """
     ).fetchone()[0]
     assert got == oracle
-
-
-def test_vtt_html_textgrid_exporters(spark):
-    """S7 exporters assemble per-document payloads distributed (ref VTT/HTML/
-    TextGrid writers: transcription/exporters.py:66-201)."""
-    from slower_whisper_spark.sources.sinks import format_html, format_textgrid, format_vtt
-
-    segs = spark.createDataFrame(
-        [
-            ("d1", 0.0, 1.5, "hello <world>"),
-            ("d1", 1.5, 3.25, 'say "hi" & bye'),
-            ("d2", 10.0, 3671.042, "long one"),
-        ],
-        "doc string, s double, e double, t string",
-    )
-
-    vtt = {r["key"]: r["payload"] for r in format_vtt(
-        segs, key_col="doc", start_col="s", end_col="e", text_col="t").collect()}
-    assert vtt["d1"].startswith("WEBVTT\n\n00:00:00.000 --> 00:00:01.500\nhello <world>\n\n")
-    assert "00:00:01.500 --> 00:00:03.250" in vtt["d1"]
-    assert "00:00:10.000 --> 01:01:11.042" in vtt["d2"]  # hour rollover, dot ms
-
-    html = {r["key"]: r["payload"] for r in format_html(
-        segs, key_col="doc", start_col="s", end_col="e", text_col="t").collect()}
-    assert '<p data-start="0.000" data-end="1.500">hello &lt;world&gt;</p>' in html["d1"]
-    assert "&amp; bye" in html["d1"] and html["d1"].startswith("<!DOCTYPE html>")
-
-    tg = {r["key"]: r["payload"] for r in format_textgrid(
-        segs, key_col="doc", start_col="s", end_col="e", text_col="t").collect()}
-    assert tg["d1"].startswith('File type = "ooTextFile"')
-    assert "intervals: size = 2" in tg["d1"]
-    assert 'text = "say ""hi"" & bye"' in tg["d1"]  # Praat quote doubling
-    assert "xmax = 3671.042" in tg["d2"]
-
-
-def test_write_per_doc_text(spark, tmp_path):
-    import glob
-
-    from slower_whisper_spark.sources.sinks import format_vtt, write_per_doc_text
-
-    segs = spark.createDataFrame(
-        [("a", 0.0, 1.0, "x"), ("b", 0.0, 2.0, "y")], "doc string, s double, e double, t string"
-    )
-    out = str(tmp_path / "vtt")
-    write_per_doc_text(
-        format_vtt(segs, key_col="doc", start_col="s", end_col="e", text_col="t"), out
-    )
-    dirs = {p.split("key=")[1] for p in glob.glob(out + "/key=*")}
-    assert dirs == {"a", "b"}
-    body = open(glob.glob(out + "/key=a/part*")[0]).read()
-    assert body.startswith("WEBVTT")

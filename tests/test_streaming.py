@@ -1,112 +1,9 @@
-"""Streaming validation: per-micro-batch suite evaluation via foreachBatch."""
+"""Streaming: the PARTIAL → FINALIZED turn lifecycle, its batch twin and
+sink merge rule, and the quality-filter chain run as a stream."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-
-from slower_whisper_spark import ConstraintSuite, NotNull, Pattern
-from slower_whisper_spark.streaming.validate import validate_stream, windowed_lang_counts
-
-LANG_RE = r"^[a-z]{2}(-[A-Z]{2})?$"
-
-
-def test_stream_validation_available_now(docs_small, tmp_path, spark):
-    docs, _, _ = docs_small
-    src = str(tmp_path / "src")
-    docs.limit(2000).write.mode("overwrite").parquet(src)
-
-    stream = spark.readStream.schema(docs.schema).parquet(src)
-    suite = ConstraintSuite("stream-suite", [NotNull("url"), Pattern("lang", LANG_RE)])
-
-    collected: dict[int, tuple] = {}
-
-    def on_batch(batch_id, verdicts, violations):
-        collected[batch_id] = (verdicts.toPandas(), violations.toPandas())
-
-    q = validate_stream(
-        stream,
-        suite,
-        key_col="url",
-        partition_col="warc_day",
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        on_batch=on_batch,
-        violation_limit=10_000,
-    )
-    q.awaitTermination(120)
-
-    assert collected, "no micro-batches processed"
-    verd, viol = next(iter(collected.values()))
-    assert "batch_id" in verd.columns and "batch_id" in viol.columns
-    # totals equal a batch evaluation of the same data
-    batch_res = suite.validate(
-        spark.read.parquet(src), key_col="url", partition_col="warc_day"
-    )
-    assert (
-        sum(v["violations"].sum() for v, _ in collected.values())
-        == batch_res.verdicts.toPandas()["violations"].sum()
-    )
-
-
-def test_windowed_lang_counts_schema(docs_small, tmp_path, spark):
-    docs, _, _ = docs_small
-    src = str(tmp_path / "src2")
-    docs.limit(1000).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(docs.schema).parquet(src)
-    agg = windowed_lang_counts(stream)
-    out = (
-        agg.writeStream.format("memory")
-        .queryName("langcounts")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .start()
-    )
-    out.awaitTermination(120)
-    pdf = spark.sql("select * from langcounts").toPandas()
-    assert {"window_start", "lang", "n"} <= set(pdf.columns)
-    assert pdf["n"].sum() == 1000
-
-
-def test_session_window_turns_batch_and_stream(spark, tmp_path):
-    """Gap-based turn finalization via native session_window: correct turn
-    boundaries in batch mode, and the same query runs as a stream."""
-    from datetime import datetime
-
-    from slower_whisper_spark.streaming.validate import session_window_turns
-
-    rows = [
-        ("u1", datetime(2026, 7, 1, 10, 0, 0)),
-        ("u1", datetime(2026, 7, 1, 10, 0, 10)),   # same turn (gap 10s < 30s)
-        ("u1", datetime(2026, 7, 1, 10, 5, 0)),    # new turn (gap 4m50s)
-        ("u2", datetime(2026, 7, 1, 10, 0, 5)),
-    ]
-    df = spark.createDataFrame(rows, "url string, warc_ts timestamp")
-    out = session_window_turns(df, gap="30 seconds").toPandas()
-    u1 = out[out["url"] == "u1"].sort_values("turn_start")
-    assert len(u1) == 2 and list(u1["n_events"]) == [2, 1]
-    assert len(out[out["url"] == "u2"]) == 1
-
-    # same plan as a real stream. Append mode emits a session only once the
-    # WATERMARK passes its end — a far-future flush event advances it past
-    # every real session (its own session stays pending, by design).
-    flush = spark.createDataFrame([("flush", datetime(2026, 7, 1, 11, 0, 0))], df.schema)
-    src = str(tmp_path / "turns_src")
-    df.unionByName(flush).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(df.schema).parquet(src)
-    got = []
-    q = (
-        session_window_turns(stream, gap="30 seconds")
-        .writeStream.foreachBatch(lambda b, i: got.append(b.toPandas()))
-        .option("checkpointLocation", str(tmp_path / "turns_ck"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    total = sum(len(p) for p in got)
-    # append mode emits only watermark-finalized sessions; with a bounded
-    # source every session closes by stream end
-    assert total == 3
 
 
 def test_turn_lifecycle_partial_then_finalized(tmp_path, spark):
@@ -384,45 +281,3 @@ def test_quality_filter_chain_streams(docs_small, tmp_path, spark):
     )
     assert len(got) == len(want) > 0
     assert got.reset_index(drop=True).equals(want.reset_index(drop=True))
-
-
-def test_stream_dedup_within_watermark(tmp_path, spark):
-    """Redelivered urls inside the watermark window are dropped across
-    micro-batches; state is bounded by the window."""
-    import datetime as dt
-
-    from slower_whisper_spark.streaming.validate import stream_dedup
-
-    t0 = dt.datetime(2026, 1, 1, 12, 0, 0)
-    rows_b1 = [("u1", t0, "a"), ("u2", t0 + dt.timedelta(seconds=30), "b")]
-    rows_b2 = [
-        ("u1", t0 + dt.timedelta(minutes=2), "a-redelivered"),  # dup within window
-        ("u3", t0 + dt.timedelta(minutes=3), "c"),
-    ]
-    src = str(tmp_path / "dd_src")
-    schema = "url string, warc_ts timestamp, text string"
-    df1 = spark.createDataFrame(rows_b1, schema)
-    # two parquet files; maxFilesPerTrigger=1 makes availableNow process
-    # them as SEQUENTIAL micro-batches, so the dedup state must carry over
-    df1.coalesce(1).write.mode("overwrite").parquet(src)
-    spark.createDataFrame(rows_b2, schema).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(df1.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        stream_dedup(stream, delay="10 minutes")
-        .writeStream.format("memory")
-        .queryName("dd_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "dd_ck"))
-        .start()
-    )
-    q.awaitTermination(120)
-    batches = [p.numInputRows for p in q.recentProgress if p.numInputRows]
-    got = {r.url: r.text for r in spark.table("dd_out").collect()}
-    assert got == {"u1": "a", "u2": "b", "u3": "c"}
-    assert len(batches) >= 2, batches  # state genuinely crossed micro-batches

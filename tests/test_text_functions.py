@@ -15,13 +15,6 @@ def test_token_count_edges(spark):
     assert [r["n"] for r in got] == [3, 0, 0, 1, None]
 
 
-def test_bpe_ish_counts_punct_separately(spark):
-    df = spark.createDataFrame([("hello, world!",), ("a.b",)], "t string")
-    got = [r[0] for r in df.select(X.bpe_ish_token_count("t")).collect()]
-    assert got[0] == 4  # hello , world !
-    assert got[1] == 3  # a . b
-
-
 def test_normalize_and_fingerprint_invariance(spark):
     df = spark.createDataFrame(
         [("Hello,   WORLD!", "hello world"), ("a  b", "A B.")], "a string, b string"
@@ -35,10 +28,11 @@ def test_normalize_and_fingerprint_invariance(spark):
 
 
 def test_shingles(spark):
-    df = spark.createDataFrame([("the quick brown fox",), ("hi",)], "t string")
-    got = [r[0] for r in df.select(X.shingles("t", 3)).collect()]
-    assert got[0] == ["the quick brown", "quick brown fox"]
-    assert got[1] == ["hi"]  # shorter than n → whole text
+    df = spark.createDataFrame([(1, "the quick brown fox"), (2, "hi")], "id int, t string")
+    rows = X.shingle_rows(df, "id", "t", 3).collect()
+    got = {i: [r.shingle for r in rows if r.id == i] for i in (1, 2)}
+    assert got[1] == ["the quick brown", "quick brown fox"]
+    assert got[2] == ["hi"]  # shorter than n → whole text
 
 
 def test_lang_id_votes(spark):
@@ -54,14 +48,6 @@ def test_lang_id_votes(spark):
     )
     got = [r[0] for r in df.select(X.lang_id("t")).collect()]
     assert got == ["en", "es", "fr", "de", "und"]
-
-
-def test_quality_score_ordering(spark):
-    good = " ".join(["the quick brown fox jumps over the lazy dog it was good and"] * 12)
-    junk = "@@@@ ???? !!!! ;;;; %%%%"
-    df = spark.createDataFrame([(good,), (junk,)], "t string")
-    got = [r[0] for r in df.select(X.quality_score("t")).collect()]
-    assert 0.0 <= got[1] < got[0] <= 1.0
 
 
 def test_stopword_punct_ratios(spark):

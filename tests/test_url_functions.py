@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from slower_whisper_spark.functions import url as U
 
 
@@ -16,14 +14,11 @@ def test_host_path_scheme_depth(spark):
     df = spark.createDataFrame(rows, "u string")
     got = df.select(
         U.url_host("u").alias("h"),
-        U.url_scheme("u").alias("s"),
         U.path_depth("u").alias("d"),
-        U.url_query_param("u", "x").alias("qx"),
     ).collect()
-    assert got[0]["h"] == "www.example.com"
-    assert got[0]["s"] == "https" and got[0]["d"] == 3 and got[0]["qx"] == "1"
+    assert got[0]["h"] == "www.example.com" and got[0]["d"] == 3
     assert got[1]["h"] == "h00001.example.org" and got[1]["d"] == 2
-    assert got[2]["h"] is None and got[2]["s"] == "" and got[2]["d"] == 0
+    assert got[2]["h"] is None and got[2]["d"] == 0
 
 
 def test_registered_domain(spark):
@@ -65,26 +60,3 @@ def test_surt_key(spark):
     df = spark.createDataFrame(rows, "u string, want string")
     for r in df.select("want", U.surt_key("u").alias("got")).collect():
         assert r["got"] == r["want"], (r["got"], r["want"])
-
-
-def test_url_stats_rollup(spark, docs_small):
-    docs, _, _ = docs_small
-    st = U.url_stats(docs).toPandas()
-    # datagen hosts are hNNNNN.example.org -> one registered domain
-    assert set(st["domain"]) == {"example.org"}
-    assert int(st["n_pages"].iloc[0]) == docs.count()
-    assert int(st["n_hosts"].iloc[0]) > 1
-    assert 0 < float(st["mean_path_depth"].iloc[0]) <= 2.0
-
-
-def test_url_stats_approx_path(spark, docs_small):
-    docs, _, _ = docs_small
-    st = U.url_stats(docs, approx=True).toPandas()
-    exact = U.url_stats(docs).toPandas()
-    assert set(st["domain"]) == set(exact["domain"])
-    # HLL within its documented ~2% rsd at this cardinality
-    a, e = int(st["n_hosts"].iloc[0]), int(exact["n_hosts"].iloc[0])
-    assert abs(a - e) <= max(3, int(0.1 * e))
-    # the approx plan must not contain the exact-distinct expand
-    plan = U.url_stats(docs, approx=True)._jdf.queryExecution().executedPlan().toString()
-    assert "Expand" not in plan

@@ -10,7 +10,6 @@ from slower_whisper_spark.operators.video import (
     encode_avi_mjpeg,
     parse_avi_mjpeg,
     sample_video_frames,
-    video_header_meta,
 )
 
 
@@ -39,14 +38,6 @@ def test_avi_rejects_non_avi():
     assert parse_avi_mjpeg(b"") is None
     assert parse_avi_mjpeg(b"RIFF\x04\x00\x00\x00WAVE") is None
     assert parse_avi_mjpeg(b"RIFF\x04\x00\x00\x00AVI ") is None  # no frames
-
-
-def test_video_header_meta_duration():
-    avi = encode_avi_mjpeg(_frames(50), fps_num=25, fps_den=1, width=10, height=8)
-    meta = video_header_meta(avi)
-    assert meta["n_frames"] == 50
-    assert meta["duration_sec"] == pytest.approx(2.0)
-    assert meta["media_type"] == "video"
 
 
 def test_sample_video_frames_distributed(spark):
