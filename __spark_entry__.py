@@ -1182,7 +1182,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         docs = _t(spark, sf, "documents")
         res = ConstraintSuite("p", [Pattern("lang", LANG_RE)]).validate(
-            docs, key_col="doc_id", violation_limit=10**9, always_collect_violations=True
+            docs, key_col="doc_id", violation_limit=10**9, pass2_prune=False
         )
         return res.violations.select(
             F.col("key").cast("long").alias("doc_id"), "rule_id", "observed"
@@ -1197,7 +1197,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ev = _t(spark, sf, "events")
         res = ConstraintSuite(
             "e", [Enum("event_type", ["click", "view", "purchase", "signup"], rule_id="etype")]
-        ).validate(ev, key_col="event_id", violation_limit=10**9, always_collect_violations=True)
+        ).validate(ev, key_col="event_id", violation_limit=10**9, pass2_prune=False)
         return res.violations.select(
             F.col("key").cast("long").alias("event_id"), F.col("observed").alias("event_type")
         ).orderBy("event_id")
@@ -2076,7 +2076,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         docs = _t(spark, sf, "documents")
         res = ConstraintSuite("vx", [Vectorized("text", min_five_tokens, rule_id="min5tok")]).validate(
-            docs, key_col="doc_id", violation_limit=10**9, always_collect_violations=True
+            docs, key_col="doc_id", violation_limit=10**9, pass2_prune=False
         )
         return res.violations.select(F.col("key").cast("long").alias("doc_id")).orderBy("doc_id")
 
@@ -2690,7 +2690,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .alias("v_str"),
         )
         res = ConstraintSuite("tc", [TypeCheck("v_str", "double", rule_id="vtype")]).validate(
-            mixed, key_col="event_id", violation_limit=10**9, always_collect_violations=True
+            mixed, key_col="event_id", violation_limit=10**9, pass2_prune=False
         )
         return res.violations.select(
             F.col("key").cast("long").alias("event_id"), F.col("observed").alias("v_str")

@@ -38,7 +38,6 @@ from typing import Any
 STATUS_SUCCESS = "success"
 STATUS_PARTIAL = "partial"
 STATUS_ERROR = "error"
-STATUS_SKIPPED = "skipped"
 
 
 def new_run_id() -> str:

@@ -8,7 +8,6 @@ These are the engine's only Python-side execution paths, and all of them are
 numpy-vectorized over Arrow batches (north rule: zero per-row Python).
 """
 
-import numpy as np
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
 
@@ -81,26 +80,6 @@ def make_ivf_assign(centroids, n_probe=1):
         return pd.Series(list(top))
 
     return ivf_assign
-
-
-def make_bloom_might_contain(bc):
-    """Vectorized Bloom membership test over xxhash64-hashed keys.
-
-    ``bc`` is a Spark broadcast of (bits: uint8 array, m: int, k: int).
-    """
-    from slower_whisper_spark.rules.refint import _bloom_hashes
-
-    @pandas_udf("boolean")
-    def might_contain(h: pd.Series) -> pd.Series:
-        bits, m, k = bc.value
-        vals = h.to_numpy(dtype=np.int64).astype(np.uint64)
-        if len(vals) == 0:
-            return pd.Series([], dtype=bool)
-        pos = _bloom_hashes(vals, m, k)
-        hit = (bits[(pos >> 3)] & (1 << (pos & 7)).astype(np.uint8)) != 0
-        return pd.Series(hit.all(axis=1))
-
-    return might_contain
 
 
 def make_cosine_pair(compute_dtype: str = "float64"):

@@ -25,8 +25,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-VERDICTS = ("added", "removed", "changed", "unchanged")
-
 
 def snapshot_delta(
     old: DataFrame,

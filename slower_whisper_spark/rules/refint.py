@@ -11,46 +11,40 @@ Physical strategy:
     is broadcast to every executor; violations = fact rows with no match.
     Never shuffles the fact table.
   * **Bloom filter** (``mode="bloom"``): for dimensions too large to
-    broadcast raw but whose Bloom fits in memory. Bits are built once on the
-    driver (streamed, never a full collect of the fact side), broadcast, and
-    membership-tested in a vectorized Arrow-batch pandas UDF (numpy, no
-    per-row Python). False-positive rate p means a violating row escapes
-    with probability p; false negatives are impossible, so every reported
-    violation is real.
+    broadcast raw but whose Bloom fits in a plan literal. Spark's own filter
+    (``DataFrameStatFunctions.bloomFilter`` over ``xxhash64(dim_col)``) is
+    built once per rule by a distributed aggregate and probed by Spark's
+    ``might_contain`` expression, so membership runs inside whole-stage
+    codegen with no Python worker. False-positive rate p means a violating
+    row escapes with probability p; false negatives are impossible, so
+    every reported violation is real. A dimension past Spark's runtime
+    Bloom-filter bound (``spark.sql.optimizer.runtime.bloomFilter.maxNumBits``,
+    8 MiB by default) is refused at build time: use the broadcast mode.
 """
 
 from __future__ import annotations
 
 from typing import Any
 
-import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from slower_whisper_spark.rules.base import TableRule, _str, content_fingerprint, failure_result
 
-
-def _bloom_params(n_items: int, fp_rate: float) -> tuple[int, int]:
-    """Standard Bloom sizing: m bits, k hashes."""
-    n = max(1, n_items)
-    m = int(np.ceil(-n * np.log(fp_rate) / (np.log(2) ** 2)))
-    k = max(1, int(round((m / n) * np.log(2))))
-    return m, k
+# Spark's bound on its own runtime Bloom filters (default 8 MiB of bits)
+_MAX_BITS = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
+_MAX_ITEMS = "spark.sql.optimizer.runtime.bloomFilter.maxNumItems"
 
 
-def _bloom_hashes(vals: np.ndarray, m: int, k: int) -> np.ndarray:
-    """Double hashing: h_i = h1 + i*h2 mod m over uint64 key hashes.
-
-    vals: uint64 array of pre-hashed keys. Returns (len(vals), k) positions.
-    """
-    h1 = vals
-    # splitmix64-style second hash, vectorized
-    z = (vals + np.uint64(0x9E3779B97F4A7C15)).astype(np.uint64)
-    z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-    z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-    h2 = (z ^ (z >> np.uint64(31))) | np.uint64(1)
-    i = np.arange(k, dtype=np.uint64)
-    return ((h1[:, None] + i[None, :] * h2[:, None]) % np.uint64(m)).astype(np.int64)
+def _might_contain(spark, bloom: bytes, value: Column) -> Column:
+    """Spark's ``might_contain(bloom, value)`` expression as a Column.
+    PySpark has no wrapper for it, so it is built from the catalyst classes
+    through the JVM gateway (``tests/test_plans.py`` pins that path)."""
+    jvm = spark._jvm
+    expr = jvm.org.apache.spark.sql.catalyst.expressions
+    utils = jvm.org.apache.spark.sql.classic.ExpressionUtils
+    bits = expr.Literal.create(bloom, jvm.org.apache.spark.sql.types.DataTypes.BinaryType)
+    return Column(utils.column(expr.BloomFilterMightContain(bits, utils.expression(value._jc))))
 
 
 class ForeignKey(TableRule):
@@ -84,7 +78,7 @@ class ForeignKey(TableRule):
         self.fp_rate = fp_rate
         self.allow_null = allow_null
         self.rule_id = rule_id or f"fk({fk_expr})"
-        self._cached_bloom_udf = None
+        self._bloom_bytes: bytes | None = None
         if dim_version is None:
             dim_version = content_fingerprint(dim_df, [dim_col])
         self._dim_version = dim_version
@@ -107,37 +101,43 @@ class ForeignKey(TableRule):
         into the single pass-1 scan (no separate job)."""
         return self.mode == "bloom"
 
-    def _build_bloom_udf(self, spark):
-        """Build Bloom bits from the dimension (driver-side stream, never a
-        full collect of the fact side) → vectorized membership UDF. Cached
-        per rule instance: the dimension is fixed, so repeated validations
-        (multi-partition runs, resume) pay the build once — rule compilation
-        is planning-time work, like codegen."""
-        if self._cached_bloom_udf is not None:
-            return self._cached_bloom_udf
-        dim_hashed = self.dim_df.select(F.xxhash64(F.col(self.dim_col)).alias("h")).distinct()
-        n = dim_hashed.count()
-        m, k = _bloom_params(n, self.fp_rate)
-        bits = np.zeros((m + 7) // 8, dtype=np.uint8)
-        for batch in dim_hashed.toArrow().to_batches():
-            vals = batch.column(0).to_numpy(zero_copy_only=False).astype(np.uint64)
-            pos = _bloom_hashes(vals, m, k).ravel()
-            np.bitwise_or.at(bits, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
-        bc = spark.sparkContext.broadcast((bits, m, k))
+    def _bloom(self) -> bytes:
+        """Spark's serialized Bloom filter over ``xxhash64(dim_col)``, built by
+        a distributed aggregate that collects only the bits. Cached per
+        rule instance: the dimension is fixed, so repeated validations
+        (multi-partition runs, resume) pay the build once.
 
-        from slower_whisper_spark.functions.vectorized import make_bloom_might_contain
-
-        self._cached_bloom_udf = make_bloom_might_contain(bc)
-        return self._cached_bloom_udf
+        The bits travel in the plan and every task binary, so they are held
+        to Spark's own runtime-filter bound. Past it Spark would silently
+        shrink the filter and raise its false-positive rate, so this
+        refuses instead."""
+        if self._bloom_bytes is not None:
+            return self._bloom_bytes
+        spark = self.dim_df.sparkSession
+        sketch = spark._jvm.org.apache.spark.util.sketch.BloomFilter
+        hashed = self.dim_df.select(F.xxhash64(F.col(self.dim_col)).alias("h"))
+        n = hashed.distinct().count()
+        bits = sketch.optimalNumOfBits(n, self.fp_rate)
+        max_bits = int(spark.conf.get(_MAX_BITS))
+        max_items = int(spark.conf.get(_MAX_ITEMS))
+        if bits > max_bits or n > max_items:
+            raise ValueError(
+                f"{self.rule_id}: a Bloom filter of {n} keys at fp_rate={self.fp_rate} "
+                f"needs {bits} bits; Spark caps it at {_MAX_BITS}={max_bits} and "
+                f"{_MAX_ITEMS}={max_items}. Use mode=\"broadcast\" for this dimension."
+            )
+        # an empty dimension aggregates to NULL, not a filter; a fresh filter rejects every key
+        filt = hashed._jdf.stat().bloomFilter("h", n, self.fp_rate) if n else sketch.create(1, self.fp_rate)
+        out = spark._jvm.java.io.ByteArrayOutputStream()
+        filt.writeTo(out)
+        self._bloom_bytes = bytes(out.toByteArray())
+        return self._bloom_bytes
 
     def row_predicate(self, df: DataFrame):
         """Boolean pass-predicate Column for bloom mode (fold-into-scan)."""
-        might_contain = self._build_bloom_udf(df.sparkSession)
         fk = F.expr(self.fk_expr)
-        ok = might_contain(F.xxhash64(fk))
-        if self.allow_null:
-            return F.when(fk.isNull(), F.lit(True)).otherwise(ok)
-        return F.when(fk.isNull(), F.lit(False)).otherwise(ok)
+        ok = _might_contain(df.sparkSession, self._bloom(), F.xxhash64(fk))
+        return F.when(fk.isNull(), F.lit(self.allow_null)).otherwise(ok)
 
     def fold_observed(self):
         return _str(F.expr(self.fk_expr))

@@ -163,7 +163,6 @@ class ConstraintSuite:
         key_col: str = "url",
         partition_col: str | None = None,
         violation_limit: int = 100,
-        always_collect_violations: bool = False,
         stats_columns: list[str] | None = None,
         global_df: DataFrame | None = None,
         pass2_prune: bool = True,
@@ -183,11 +182,6 @@ class ConstraintSuite:
         geometry: sparse violations → prune (skip the data); violations
         everywhere (dense-failure benches, ingest quarantines) → False
         (skip the barrier).
-
-        ``always_collect_violations`` (default False): True means the same
-        as ``pass2_prune=False`` — pass 2 always runs, over every partition,
-        and validate() stays lazy. It is the name used by callers that want
-        every violation row (with ``violation_limit=10**9``).
 
         ``stats_columns``: fold a column-stats profile into the pass-1 scan
         (count/null-rate/min/max/mean/stddev/quantiles/HLL) — the result
@@ -225,8 +219,9 @@ class ConstraintSuite:
             else:
                 standalone.append(rule)
 
-        # bloom-FK rules compile to per-row predicates (pandas-UDF membership
-        # tests) and join the row-rule family for BOTH passes
+        # bloom-FK rules compile to per-row predicates (Spark's might_contain
+        # over the rule's Bloom bits) and join the row-rule family for BOTH
+        # passes
         fk_compiled = [(rule, rule.row_predicate(df)) for rule in folded_fk]
 
         # ---- pass 1: ONE wide agg — rule fail counts + drift histograms
@@ -283,7 +278,7 @@ class ConstraintSuite:
                 lambda a, b: a | b, [F.col(sql_ident(f"viol__{rid}")) > 0 for rid in counted_ids]
             )
             scan: DataFrame | None = df
-            if pass2_prune and not always_collect_violations:
+            if pass2_prune:
                 # ONE collect decides the prune AND yields the partition
                 # total (a second wide.count() job would be pure overhead)
                 flags = wide.select("partition", any_fail.alias("__fail")).collect()

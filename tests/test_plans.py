@@ -320,6 +320,62 @@ def test_drift_evaluate_is_one_aggregate(spark):
             assert node not in plan, plan
 
 
+def test_bloom_suite_passes_run_might_contain_without_python(docs_small):
+    """A Bloom ForeignKey folds into both suite scans as Spark's own
+    might_contain expression: pass 1's aggregate and pass 2's violation
+    scan carry it, and neither crosses into a Python worker."""
+    import datetime
+
+    from slower_whisper_spark import Expr, HashInvariant, Length, Range, Unique
+    from slower_whisper_spark.rules.drift import Baseline, Drift
+
+    docs, expected, ref = docs_small
+    docs = docs.withColumn("text_len", F.length("text"))
+    base = Baseline(column="text_len", kind="hist", counts=[1] * 22, lo=100.0, hi=500.0, n_buckets=20)
+    suite = ConstraintSuite("bloom-plan", [
+        NotNull("url"),
+        NotNull("lang", rule_id="not_null(lang)"),
+        Pattern("lang", r"^[a-z]{2}(-[A-Z]{2})?$"),
+        Range("warc_ts", min=datetime.datetime(2026, 7, 1), max=datetime.datetime(2026, 7, 31)),
+        Length("text", min=1),
+        Expr("length(html) >= 16", rule_id="html_min_bytes"),
+        Unique("url"),
+        ForeignKey("parse_url(url, 'HOST')", ref, "host", rule_id="host_known", mode="bloom"),
+        HashInvariant("text", expected, rule_id="text_bytes"),
+        Drift("text_len", base, metric="psi", threshold=10.0, rule_id="drift(text_len)"),
+    ])
+    res = suite.validate(docs, key_col="url", partition_col="warc_day", stats_columns=["url", "lang"])
+    # stats is a projection of the cached pass-1 row, so its plan prints pass 1
+    for name, df in (("pass 1", res.stats), ("pass 2", res.violations)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        # Spark's expression prints its bits literal; the old UDF of the same name did not
+        assert "might_contain(0x" in plan, (name, plan)
+        for node in ("ArrowEvalPython", "BatchEvalPython"):
+            assert node not in plan, (name, plan)
+    res.unpersist()
+
+
+def test_might_contain_internal_api_resolves(spark):
+    """PySpark has no might_contain wrapper; the engine builds it through
+    ExpressionUtils.column(BloomFilterMightContain(...)). Pin that path."""
+    from slower_whisper_spark.rules.refint import _might_contain
+
+    try:
+        filt = spark._jvm.org.apache.spark.util.sketch.BloomFilter.create(10, 0.01)
+        filt.putLong(7)
+        out = spark._jvm.java.io.ByteArrayOutputStream()
+        filt.writeTo(out)
+        col = _might_contain(spark, bytes(out.toByteArray()), F.col("id"))
+        got = {r["id"]: r["hit"] for r in spark.range(5, 9).select("id", col.alias("hit")).collect()}
+    except Exception as e:  # noqa: BLE001 - any failure here means the path moved
+        pytest.fail(
+            "a Spark upgrade moved the internal API behind Bloom ForeignKey: "
+            "org.apache.spark.sql.classic.ExpressionUtils.column("
+            f"catalyst.expressions.BloomFilterMightContain(...)) no longer resolves: {e}"
+        )
+    assert got[7] is True, got
+
+
 def test_quality_filter_chain_is_shuffle_free(docs_parquet):
     """The whole filter chain must fold into the scan: no Exchange, no
     Python eval, and only the referenced columns read from parquet."""

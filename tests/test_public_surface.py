@@ -1,11 +1,13 @@
 """Guard against engine surface that only tests call.
 
-Every public top-level function or class in ``slower_whisper_spark/`` must be
-referenced by a Python file outside ``tests/`` (the engine itself, the CLI,
-``__spark_entry__.py``, ``bench*.py``, ``scripts/``, ``perfbench/``), or be
-listed in ``KEEP`` with the reason it stays.  A package ``__init__.py``
-re-export is not a reference, and neither is a definition naming itself.
-Run this after adding a public engine function.
+Every public top-level function, class or UPPER_CASE constant in
+``slower_whisper_spark/`` must be referenced by a Python file outside
+``tests/`` (the engine itself, the CLI, ``__spark_entry__.py``, ``bench*.py``,
+``scripts/``, ``perfbench/``), or be listed in ``KEEP`` with the reason it
+stays.  A package ``__init__.py`` re-export is not a reference, and neither
+is a definition naming itself.  Every engine name those non-test files import
+must resolve, private ones included.  Run this after adding or removing a
+public engine function.
 """
 
 import ast
@@ -46,7 +48,7 @@ def _sources():
         yield path, ast.parse(path.read_text(), filename=str(path))
 
 
-def _names(node, skip=None):
+def _names(node, skip=()):
     out = set()
     for n in ast.walk(node):
         if isinstance(n, ast.Name):
@@ -55,8 +57,18 @@ def _names(node, skip=None):
             out.add(n.attr)
         elif isinstance(n, ast.alias):
             out.add(n.name.rsplit(".", 1)[-1])
-    out.discard(skip)
-    return out
+    return out - set(skip)
+
+
+def _defined(node):
+    """Names a top-level statement defines: a def, a class, or UPPER_CASE
+    constants."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [node.name]
+    if isinstance(node, (ast.Assign, ast.AnnAssign)):
+        targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+        return [t.id for t in targets if isinstance(t, ast.Name) and t.id.isupper()]
+    return []
 
 
 def _public_defs_and_references():
@@ -65,10 +77,12 @@ def _public_defs_and_references():
         in_pkg = PKG in path.parents
         reexports = in_pkg and path.name == "__init__.py"
         for node in tree.body:
-            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                if in_pkg and not node.name.startswith("_"):
-                    defs[node.name] = path.relative_to(ROOT).as_posix()
-                refs |= _names(node, skip=node.name)
+            defined = _defined(node)
+            if defined:
+                for name in defined:
+                    if in_pkg and not name.startswith("_"):
+                        defs[name] = path.relative_to(ROOT).as_posix()
+                refs |= _names(node, skip=defined)
             elif not (reexports and isinstance(node, ast.ImportFrom)):
                 refs |= _names(node)
     return defs, refs
@@ -78,7 +92,7 @@ def test_every_public_engine_def_has_a_caller_outside_tests():
     defs, refs = _public_defs_and_references()
     orphans = sorted(f"{path}: {name}" for name, path in defs.items()
                      if name not in refs and name not in KEEP)
-    assert not orphans, ("public engine defs called only from tests; delete "
+    assert not orphans, ("public engine names used only by tests; delete "
                          "them or list them in KEEP with a reason:\n  "
                          + "\n  ".join(orphans))
 
@@ -107,3 +121,33 @@ def test_every_all_name_imports():
         module = importlib.import_module(".".join(parts))
         missing += [f"{module.__name__}.{n}" for n in exported if not hasattr(module, n)]
     assert not missing, f"__all__ names that do not import: {missing}"
+
+
+def test_engine_names_imported_outside_tests_resolve():
+    """``__spark_entry__.py``, the bench scripts, ``scripts/`` and
+    ``perfbench/`` import engine names, private ones among them (the
+    ``ann_lsh`` and IVF oracles build on ``similarity._hyperplanes`` and
+    ``_ivf_centroids``); renaming or deleting one must fail here, not when
+    that query runs."""
+    missing = []
+    for path, tree in _sources():
+        if PKG in path.parents:
+            continue
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                pairs = [(a.name, None) for a in node.names]
+            elif isinstance(node, ast.ImportFrom) and node.module:
+                pairs = [(node.module, a.name) for a in node.names]
+            else:
+                continue
+            for mod, name in pairs:
+                if mod.split(".")[0] != PKG.name:
+                    continue
+                where = f"{path.relative_to(ROOT).as_posix()}:{node.lineno}"
+                try:
+                    module = importlib.import_module(mod)
+                    if name is not None and not hasattr(module, name):
+                        importlib.import_module(f"{mod}.{name}")
+                except ImportError:
+                    missing.append(f"{where}: {mod}{'' if name is None else '.' + name}")
+    assert not missing, "engine names imported outside tests that do not resolve:\n  " + "\n  ".join(missing)

@@ -193,8 +193,7 @@ def test_vectorized_rule_batch_escape_hatch(spark):
 
 
 def test_overlapped_materialize_matches_sequential(docs_small):
-    """The scaling-path form — validate(pass2_prune=False), or its other
-    name always_collect_violations=True, returning fully lazy +
+    """The scaling-path form — validate(pass2_prune=False), returning fully lazy +
     materialize(parallel=True) running verdicts/violations/stats as
     concurrent jobs — must produce exactly the rows of the default pruned
     sequential path (same verdicts, same violation set, same stats)."""
@@ -210,19 +209,18 @@ def test_overlapped_materialize_matches_sequential(docs_small):
     def vset(rows):
         return {tuple(r) for r in rows}
 
-    for unpruned in ({"pass2_prune": False}, {"always_collect_violations": True}):
-        par = suite.validate(
-            docs, key_col="url", partition_col="warc_day", violation_limit=1000,
-            stats_columns=["url", "lang"], **unpruned,
-        )
-        par_out = par.materialize(parallel=True)
+    par = suite.validate(
+        docs, key_col="url", partition_col="warc_day", violation_limit=1000,
+        stats_columns=["url", "lang"], pass2_prune=False,
+    )
+    par_out = par.materialize(parallel=True)
 
-        assert vset(par_out["verdicts"]) == vset(seq_out["verdicts"]), unpruned
-        assert par_out["n_violations"] == seq_out["n_violations"] > 0, unpruned
-        assert vset(par_out["stats"]) == vset(seq_out["stats"]), unpruned
-        # violation ROW sets equal too (limit high enough to be inert here)
-        assert vset(par.violations.collect()) == vset(seq.violations.collect()), unpruned
-        par.unpersist()
+    assert vset(par_out["verdicts"]) == vset(seq_out["verdicts"])
+    assert par_out["n_violations"] == seq_out["n_violations"] > 0
+    assert vset(par_out["stats"]) == vset(seq_out["stats"])
+    # violation ROW sets equal too (limit high enough to be inert here)
+    assert vset(par.violations.collect()) == vset(seq.violations.collect())
+    par.unpersist()
     seq.unpersist()
 
 

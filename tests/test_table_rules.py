@@ -6,6 +6,8 @@ uniqueness == naive dropDuplicates; Bloom refint ⊆ exact anti-join refint.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -121,6 +123,33 @@ def test_fk_bloom_evaluate_matches_suite_fold(docs_small):
     }
     assert ev and ev == folded
     assert "no-host-row" in {r["key"] for r in ev_rows.collect()}
+
+
+def test_fk_bloom_refuses_a_filter_past_sparks_bound(spark, docs_small):
+    """The Bloom bits ride in the plan, so the build is held to Spark's own
+    runtime-filter bound and points at the broadcast mode past it."""
+    docs, _, ref = docs_small
+    rule = ForeignKey(HOST_EXPR, ref, "host", rule_id="fk_big", mode="bloom")
+    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.maxNumBits", "64")
+    try:
+        with pytest.raises(ValueError, match=re.escape('mode="broadcast"')):
+            rule.row_predicate(docs)
+    finally:
+        spark.conf.unset("spark.sql.optimizer.runtime.bloomFilter.maxNumBits")
+
+
+def test_fk_bloom_empty_dimension_fails_every_key(spark):
+    """Spark's Bloom aggregate over no rows yields no filter; an empty
+    dimension must still fail every non-NULL key, as the broadcast mode does."""
+    fact = spark.createDataFrame(
+        [("u1", "a", "p"), ("u2", "b", "p"), ("u3", None, "p")], "url string, fk string, part string"
+    )
+    dim = spark.createDataFrame([], "host string")
+    for mode in ("broadcast", "bloom"):
+        rule = ForeignKey("fk", dim, "host", rule_id=f"fk_{mode}", mode=mode)
+        verdicts, rows = rule.evaluate(fact, key_col="url", partition_col="part", violation_limit=10)
+        assert [r["violations"] for r in verdicts.collect()] == [2], mode
+        assert sorted(r["key"] for r in rows.collect()) == ["u1", "u2"], mode
 
 
 # --------------------------------------------------------------------- #
