@@ -1,9 +1,10 @@
 """Run named driver queries on Spark and on their DuckDB oracle, and compare.
 
-    SF=<testdata tier dir> PYTHONPATH=. python scripts/debug_oracle.py <query>...
+    SF=<testdata tier dir> PYTHONPATH=. python scripts/debug_oracle.py [<query>...]
 
-Prints match / MISMATCH / an error per query and exits 1 unless every named
-query matched its oracle.
+With no query names it checks every ``queries()`` entry (the full board).
+Prints match / MISMATCH / an error per query and exits 1 unless every
+checked query matched its oracle.
 """
 
 import math
@@ -27,8 +28,8 @@ for t in ["region","nation","customer","supplier","part","orders","lineitem","ev
 spark = get_spark(shuffle_partitions=8)
 spark.sparkContext.setLogLevel("ERROR")
 
-names = sys.argv[1:]
 Q, O = em.queries(), em.oracle_sql()
+names = sys.argv[1:] or list(Q)
 
 def norm(df):
     df = df[sorted(df.columns)]

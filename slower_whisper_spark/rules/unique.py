@@ -12,23 +12,26 @@ aggregation:
            input splits) is collapsed to one row per task BEFORE the
            shuffle. The (partition_value, key) composite acts as the salt:
            phase-1 output is at most |partitions| rows per key.
-  phase 2: re-aggregate per key to a global count; keys with count > 1 are
-           duplicates. This shuffles only the phase-1 partials (≈ distinct
-           keys), never the raw rows.
+  phase 2: the per-key total sits beside the partials as
+           ``sum(__cnt_part) OVER (PARTITION BY __key)``; rows whose key
+           totals more than 1 are the duplicates. This shuffles only the
+           phase-1 partials (≈ distinct keys), never the raw rows.
 
-Attribution back to table partitions joins the (small, duplicate-only) key
-set against the phase-1 partials — not against the raw table — so the
-verdict pass adds no second full scan.
+Only the duplicate partials are persisted, and both outputs come from them:
+per-partition verdict counts sum the partials, violation rows keep one
+partial per key. The table is scanned once. A NULL key is grouped like any
+other value: a duplicated NULL key is listed as a violation row, but the
+per-partition verdict counts skip it.
 
 At small scale this is provably equivalent to naive
-``dropDuplicates``/``count`` (asserted in tests/test_unique.py).
+``dropDuplicates``/``count`` (asserted in tests/test_table_rules.py).
 """
 
 from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from slower_whisper_spark.rules.base import TableRule, failure_result
@@ -79,20 +82,27 @@ class Unique(TableRule):
         # phase 1: per-(partition, key) partial counts (map-side combine)
         per_part = df.groupBy(*group_cols).agg(F.count(F.lit(1)).alias("__cnt_part"))
 
-        # phase 2: global per-key totals from the partials
-        global_cnt = per_part.groupBy("__key").agg(F.sum("__cnt_part").alias("__cnt"))
-        dup_keys = global_cnt.filter(F.col("__cnt") > 1)
-
-        # attribute duplicated keys back to partitions via the partials;
-        # duplicates are rare → persist so verdicts and violations share one
-        # computation of the two-phase aggregation
-        dup_keys = dup_keys.persist()
+        # phase 2: the global per-key total beside each partial; duplicates
+        # are rare → persist them so verdicts and violations share one scan
+        by_key = Window.partitionBy("__key")
+        dups = (
+            per_part.withColumn("__cnt", F.sum("__cnt_part").over(by_key))
+            .filter(F.col("__cnt") > 1)
+            .withColumn("__nth", F.row_number().over(by_key.orderBy("__part")))
+            .persist()
+        )
         if persisted is not None:
-            persisted.append(dup_keys)
-        attributed = per_part.join(dup_keys, "__key")
+            persisted.append(dups)
 
-        counts = attributed.groupBy("__part").agg(F.sum("__cnt_part").alias("violations"))
-        rows = dup_keys.select(
+        # a duplicated NULL key stays out of the partition counts but is
+        # listed below: these are the rule's declared outputs, kept as they are
+        counts = (
+            dups.filter(F.col("__key").isNotNull())
+            .groupBy("__part")
+            .agg(F.sum("__cnt_part").alias("violations"))
+        )
+        # one violation row per key, whatever the partitions it spans
+        rows = dups.filter(F.col("__nth") == 1).select(
             F.col("__key").cast("string").alias("key"),
             F.concat(F.lit("count="), F.col("__cnt").cast("string")).alias("observed"),
             F.lit("count=1").alias("expected"),

@@ -25,6 +25,16 @@ def get_spark(
     rule demands. ``spark.sql.shuffle.partitions`` defaults to 2x cores
     locally; on a real cluster it should be set to ~2-3x total cores and
     AQE coalescing will trim empty partitions.
+
+    ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` is set
+    to ``true`` so that coalescing also reaches cached plans. Spark's
+    default (``false``) keeps every ``.cache()``/``.persist()`` result at
+    ``spark.sql.shuffle.partitions``, and ``validate()`` caches several
+    small results: the pass-1 row (one row per table partition), the
+    pass-2 violation rows, and the table rules' duplicate/violation sets.
+    Each later read of one of them then runs a task per shuffle partition
+    over almost no data. A session built elsewhere should set the same
+    conf; ``validate()`` itself never changes the caller's session.
     """
     master = master or os.environ.get("SPARK_GRAFT_MASTER")
     under_submit = "PYSPARK_GATEWAY_PORT" in os.environ
@@ -59,6 +69,7 @@ def get_spark(
         builder.config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # wide aggs (64-min minhash signatures, multi-column stats profiles)
         # must stay in whole-stage codegen; default maxFields=100 silently

@@ -12,7 +12,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from slower_whisper_spark import ConstraintSuite, ForeignKey, NotNull, Pattern
+from slower_whisper_spark import ConstraintSuite, ForeignKey, NotNull, Pattern, Unique
 from slower_whisper_spark.plans import (
     has_broadcast_join,
     pushed_filters,
@@ -326,7 +326,7 @@ def test_bloom_suite_passes_run_might_contain_without_python(docs_small):
     scan carry it, and neither crosses into a Python worker."""
     import datetime
 
-    from slower_whisper_spark import Expr, HashInvariant, Length, Range, Unique
+    from slower_whisper_spark import Expr, HashInvariant, Length, Range
     from slower_whisper_spark.rules.drift import Baseline, Drift
 
     docs, expected, ref = docs_small
@@ -374,6 +374,47 @@ def test_might_contain_internal_api_resolves(spark):
             f"catalyst.expressions.BloomFilterMightContain(...)) no longer resolves: {e}"
         )
     assert got[7] is True, got
+
+
+def test_get_spark_lets_aqe_size_cached_plans(spark):
+    """Without this conf Spark keeps every cached plan at
+    spark.sql.shuffle.partitions, so AQE cannot coalesce the last stage of
+    anything validate() caches."""
+    assert spark.conf.get("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "true"
+
+
+def test_cached_pass1_row_is_coalesced(docs_small, spark):
+    """The cached pass-1 row (one row per table partition) holds fewer
+    partitions than the shuffle default, so each read of it runs fewer
+    tasks than a full shuffle width."""
+    docs, _, _ = docs_small
+    suite = ConstraintSuite("sized", [NotNull("url"), Pattern("lang", "^[a-z]{2}$")])
+    res = suite.validate(docs, key_col="url", partition_col="warc_day", pass2_prune=False)
+    res.materialize()
+    try:
+        n_parts = res.persisted[0].rdd.getNumPartitions()
+        assert n_parts < int(spark.conf.get("spark.sql.shuffle.partitions")), n_parts
+    finally:
+        res.unpersist()
+
+
+def test_unique_scans_its_input_once(docs_parquet):
+    """Unique takes per-key totals from a window over the (partition, key)
+    partials: no join back to them, so the table is read once, under the
+    persisted duplicate set."""
+    persisted = []
+    verdicts, _ = Unique("url").evaluate(
+        docs_parquet, key_col="url", partition_col="warc_day", violation_limit=10,
+        persisted=persisted,
+    )
+    try:
+        plan = verdicts._jdf.queryExecution().optimizedPlan().toString()
+        assert "Join" not in plan, plan
+        assert plan.count("InMemoryRelation") == 1, plan
+        assert len(re.findall(r"FileScan parquet|(?<!InMemory)Relation \[", plan)) == 1, plan
+    finally:
+        for df in persisted:
+            df.unpersist()
 
 
 def test_quality_filter_chain_is_shuffle_free(docs_parquet):

@@ -451,6 +451,26 @@ def test_unique_rendered_rows(spark):
     assert violations == [("u1", "unique(url)", "count=2", "count=1")]
 
 
+def test_unique_null_key_rows(spark):
+    """A duplicated NULL key is listed among the violation rows, but the
+    per-partition verdicts count only the duplicated non-NULL keys."""
+    df = spark.createDataFrame(
+        [("a", "d1"), ("a", "d2"), (None, "d1"), (None, "d1"), (None, "d2"), ("b", "d2"),
+         ("c", "d2"), ("c", "d2")],
+        "url string, day string",
+    )
+    verdicts, violations = _render(Unique("url"), df)
+    assert verdicts == [
+        ("d1", "unique(url)", False, 1, "1 rows with duplicated key", "url unique"),
+        ("d2", "unique(url)", False, 3, "3 rows with duplicated key", "url unique"),
+    ]
+    assert violations == [
+        (None, "unique(url)", "count=3", "count=1"),
+        ("a", "unique(url)", "count=2", "count=1"),
+        ("c", "unique(url)", "count=2", "count=1"),
+    ]
+
+
 def test_hash_invariant_rendered_rows(spark):
     import hashlib
 
