@@ -21,6 +21,12 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def _every_row(df: DataFrame) -> int:
+    """A ``violation_limit`` that keeps every violation row of ``df``: its
+    row count (``validate()`` refuses a limit below 1 or above 100,000)."""
+    return max(df.count(), 1)
+
+
 # --------------------------------------------------------------------- #
 # KLL-drift baseline: local single-threaded replay of the distributed
 # sketch path, used by the kll_drift_psi ORACLE. The deterministic
@@ -1182,7 +1188,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         docs = _t(spark, sf, "documents")
         res = ConstraintSuite("p", [Pattern("lang", LANG_RE)]).validate(
-            docs, key_col="doc_id", violation_limit=10**9, pass2_prune=False
+            docs, key_col="doc_id", violation_limit=_every_row(docs)
         )
         return res.violations.select(
             F.col("key").cast("long").alias("doc_id"), "rule_id", "observed"
@@ -1197,7 +1203,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ev = _t(spark, sf, "events")
         res = ConstraintSuite(
             "e", [Enum("event_type", ["click", "view", "purchase", "signup"], rule_id="etype")]
-        ).validate(ev, key_col="event_id", violation_limit=10**9, pass2_prune=False)
+        ).validate(ev, key_col="event_id", violation_limit=_every_row(ev))
         return res.violations.select(
             F.col("key").cast("long").alias("event_id"), F.col("observed").alias("event_type")
         ).orderBy("event_id")
@@ -2076,7 +2082,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         docs = _t(spark, sf, "documents")
         res = ConstraintSuite("vx", [Vectorized("text", min_five_tokens, rule_id="min5tok")]).validate(
-            docs, key_col="doc_id", violation_limit=10**9, pass2_prune=False
+            docs, key_col="doc_id", violation_limit=_every_row(docs)
         )
         return res.violations.select(F.col("key").cast("long").alias("doc_id")).orderBy("doc_id")
 
@@ -2690,7 +2696,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .alias("v_str"),
         )
         res = ConstraintSuite("tc", [TypeCheck("v_str", "double", rule_id="vtype")]).validate(
-            mixed, key_col="event_id", violation_limit=10**9, pass2_prune=False
+            mixed, key_col="event_id", violation_limit=_every_row(mixed)
         )
         return res.violations.select(
             F.col("key").cast("long").alias("event_id"), F.col("observed").alias("v_str")

@@ -111,6 +111,11 @@ def main(argv: list[str] | None = None) -> int:
         p.error("--sketch-col requires --manifest (sketches persist into the checkpoint manifest)")
     if args.cmd == "validate" and args.drift_col and not args.manifest:
         p.error("--drift-col requires --manifest (the baseline merges from the manifest's sketches)")
+    if args.cmd == "validate":
+        from slower_whisper_spark.suite import MAX_VIOLATION_LIMIT
+
+        if not 1 <= args.violation_limit <= MAX_VIOLATION_LIMIT:
+            p.error(f"--violation-limit must be between 1 and {MAX_VIOLATION_LIMIT}")
 
     if args.cmd == "registry":
         return _registry_main(args)

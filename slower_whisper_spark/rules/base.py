@@ -4,11 +4,11 @@ Two rule families:
 
 * **RowRule** — compiles to a boolean pass-predicate ``Column`` plus
   observed/expected projection Columns. All row rules in a suite are
-  evaluated in a SINGLE scan (one wide ``groupBy(partition).agg(...)`` for
-  counts, one filtered scan for violation rows). This is the vectorized
-  analog of the reference's collect-all-errors validator
-  (ref: transcription/schema/validator.py:77-212 — `iter_errors` does not
-  stop at the first error; neither do we).
+  evaluated in a SINGLE scan: one wide ``groupBy(partition).agg(...)``
+  yields both the failure counts and each partition's first violation
+  rows. This is the vectorized analog of the reference's collect-all-errors
+  validator (ref: transcription/schema/validator.py:77-212 — `iter_errors`
+  does not stop at the first error; neither do we).
 
 * **TableRule** — whole-table checks that need their own (still declarative)
   Spark job: uniqueness (shuffle on key), referential integrity (broadcast
@@ -61,13 +61,6 @@ class RowRule(Rule):
     @abstractmethod
     def expected(self) -> Column:
         """String Column: what the rule wanted (for the violation row)."""
-
-    def fail_count_expr(self) -> Column:
-        """Aggregate expression counting failing rows — used in the single
-        wide agg of pass 1."""
-        return F.sum(F.when(~self.predicate(), F.lit(1)).otherwise(F.lit(0))).alias(
-            f"viol__{self.rule_id}"
-        )
 
 
 class TableRule(Rule):
@@ -145,9 +138,11 @@ def _str(col: Column) -> Column:
 
 
 def content_fingerprint(df: DataFrame, cols: list[str]) -> str:
-    """Cheap content identity of a reference-side table: row count + an
-    order-independent XOR of xxhash64 over the projected columns (count
-    disambiguates XOR's pair-cancellation). One aggregate-only job.
+    """Cheap content identity of a reference-side table: row count, an
+    order-independent XOR of xxhash64 over the projected columns, and the
+    exact (decimal) sum of the same hashes. XOR alone cancels equal hashes
+    in pairs, so ``[x, x, y]`` and ``[z, z, y]`` would agree; the sum does
+    not cancel. One aggregate-only job.
 
     Rules whose verdict depends on a second table (ForeignKey.dim_df,
     HashInvariant.expected_df) fold this into spec() so the suite hash — and
@@ -156,6 +151,8 @@ def content_fingerprint(df: DataFrame, cols: list[str]) -> str:
     actual content (ref: transcription/schema/integrity.py:222-335)."""
     hashed = df.select(F.xxhash64(*[F.col(c) for c in cols]).alias("__h"))
     row = hashed.agg(
-        F.count(F.lit(1)).alias("n"), F.expr("bit_xor(__h)").alias("x")
+        F.count(F.lit(1)).alias("n"),
+        F.expr("bit_xor(__h)").alias("x"),
+        F.expr("sum(cast(__h as decimal(38,0)))").alias("s"),
     ).first()
-    return f"{row['n']}:{row['x']}"
+    return f"{row['n']}:{row['x']}:{row['s']}"

@@ -18,7 +18,7 @@ ingest-time enforcement:
 
 All predicates are Spark SQL expressions (zero per-row Python); each rule is
 a ``RowRule``, so it folds into the suite's single wide pass-1 aggregate next
-to NotNull/Pattern/... and shares pass-2 violation extraction.
+to NotNull/Pattern/..., which also yields its violation rows.
 """
 
 from __future__ import annotations

@@ -49,7 +49,7 @@ class RunResult:
     planned_partitions: list[str]
     skipped_partitions: list[str]
     processed_partitions: list[str]
-    result: SuiteResult | None
+    result: SuiteResult | None  # already unpersisted: its frames recompute when read
     wall_sec: float
     rows_validated: int
     docs_per_sec: float
@@ -174,6 +174,9 @@ class ValidationRunner:
                 global_df=df if pruned else None,
             )
             status_rows = result.partition_status().collect()
+            # the manifest needs nothing more from the cached results; a
+            # caller that reads ``RunResult.result`` recomputes its frames
+            result.unpersist()
             wall = time.monotonic() - t0
             rows_total = int(sum(r["rows"] for r in status_rows))
             dps = rows_total / wall if wall > 0 else 0.0

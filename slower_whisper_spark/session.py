@@ -30,8 +30,8 @@ def get_spark(
     to ``true`` so that coalescing also reaches cached plans. Spark's
     default (``false``) keeps every ``.cache()``/``.persist()`` result at
     ``spark.sql.shuffle.partitions``, and ``validate()`` caches several
-    small results: the pass-1 row (one row per table partition), the
-    pass-2 violation rows, and the table rules' duplicate/violation sets.
+    small results: the pass-1 row (one row per table partition, with its
+    bounded violation rows), and the table rules' duplicate/violation sets.
     Each later read of one of them then runs a task per shuffle partition
     over almost no data. A session built elsewhere should set the same
     conf; ``validate()`` itself never changes the caller's session.

@@ -274,3 +274,15 @@ def test_incremental_empty_snapshots_refuses_silent_green(spark, docs_small, tmp
     )
     with _pytest.raises(ValueError, match="no partitions"):
         runner.run(docs, partition_snapshots={})
+
+
+def test_runner_releases_its_cached_results(docs_small, tmp_path):
+    """run() has collected what the manifest needs, so it leaves nothing in
+    Spark's storage; the returned frames recompute when read."""
+    docs, _, _ = docs_small
+    runner = ValidationRunner(_suite(strict=True), str(tmp_path / "m"), partition_col="warc_day")
+    rr = runner.run(docs)
+    assert rr.result.persisted, "validate() should track its cached intermediates"
+    for df in rr.result.persisted:
+        assert df.storageLevel.useMemory is False and df.storageLevel.useDisk is False
+    assert rr.result.violations.count() > 0

@@ -208,3 +208,9 @@ def test_cli_missing_paths_fail_fast(capsys):
         main(["validate", "/tmp", "--suite", "no_such_suite"])
     assert e2.value.code == 2
     assert "--registry" in capsys.readouterr().err
+
+    # validate() refuses a violation_limit past its bound; the CLI says so up front
+    with _pytest.raises(SystemExit) as e3:
+        main(["validate", "/tmp", "--suite", "/tmp/vtab/suite.json", "--violation-limit", "100001"])
+    assert e3.value.code == 2
+    assert "--violation-limit" in capsys.readouterr().err

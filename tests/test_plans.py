@@ -29,6 +29,11 @@ def docs_parquet(spark, docs_small, tmp_path_factory):
     return spark.read.parquet(path)
 
 
+def _fail_count(rule):
+    """A row rule's failure count, as the suite's pass-1 aggregate sums it."""
+    return F.sum(F.when(~rule.predicate(), F.lit(1)).otherwise(F.lit(0)))
+
+
 def test_filter_pushdown_reaches_scan(docs_parquet):
     q = docs_parquet.filter(F.col("lang") == "en").select("url")
     pf = pushed_filters(q)
@@ -40,7 +45,7 @@ def test_column_pruning_narrow_scan(docs_parquet):
     suite = ConstraintSuite("narrow", [NotNull("url"), Pattern("lang", "^[a-z]{2}$")])
     wide = docs_parquet.groupBy("warc_day").agg(
         F.count(F.lit(1)).alias("rows"),
-        *[r.fail_count_expr() for r in suite.row_rules],
+        *[_fail_count(r) for r in suite.row_rules],
     )
     cols = read_schema_columns(wide)
     assert "html" not in cols and "text" not in cols, cols
@@ -70,7 +75,7 @@ def test_row_rules_stay_in_codegen(docs_parquet, spark):
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         wide = docs_parquet.groupBy("warc_day").agg(
-            F.count(F.lit(1)).alias("rows"), *[r.fail_count_expr() for r in suite.row_rules]
+            F.count(F.lit(1)).alias("rows"), *[_fail_count(r) for r in suite.row_rules]
         )
         assert len(wholestage_codegen_ids(wide)) >= 1
     finally:
@@ -321,9 +326,10 @@ def test_drift_evaluate_is_one_aggregate(spark):
 
 
 def test_bloom_suite_passes_run_might_contain_without_python(docs_small):
-    """A Bloom ForeignKey folds into both suite scans as Spark's own
-    might_contain expression: pass 1's aggregate and pass 2's violation
-    scan carry it, and neither crosses into a Python worker."""
+    """A Bloom ForeignKey folds into the suite's one scan as Spark's own
+    might_contain expression: pass 1's aggregate carries it, the violation
+    rows are read from that aggregate's cached row, and neither plan
+    crosses into a Python worker."""
     import datetime
 
     from slower_whisper_spark import Expr, HashInvariant, Length, Range
@@ -345,8 +351,8 @@ def test_bloom_suite_passes_run_might_contain_without_python(docs_small):
         Drift("text_len", base, metric="psi", threshold=10.0, rule_id="drift(text_len)"),
     ])
     res = suite.validate(docs, key_col="url", partition_col="warc_day", stats_columns=["url", "lang"])
-    # stats is a projection of the cached pass-1 row, so its plan prints pass 1
-    for name, df in (("pass 1", res.stats), ("pass 2", res.violations)):
+    # stats and violations are projections of the cached pass-1 row, so their plans print pass 1
+    for name, df in (("stats", res.stats), ("violations", res.violations)):
         plan = df._jdf.queryExecution().executedPlan().toString()
         # Spark's expression prints its bits literal; the old UDF of the same name did not
         assert "might_contain(0x" in plan, (name, plan)
@@ -376,6 +382,53 @@ def test_might_contain_internal_api_resolves(spark):
     assert got[7] is True, got
 
 
+def test_row_rule_suite_reads_its_input_once(docs_parquet, docs_small):
+    """Row rules and a Bloom ForeignKey compile to the cached pass-1
+    aggregate alone: verdicts and violation rows both read that cached row,
+    no leg scans the table outside it, and validate() runs no Spark job."""
+    _, _, ref = docs_small
+    fk = ForeignKey("parse_url(url, 'HOST')", ref, "host", rule_id="host_known", mode="bloom")
+    fk.row_predicate(docs_parquet)  # the Bloom build is the rule's own job, done once per rule
+    suite = ConstraintSuite("once", [NotNull("url"), Pattern("lang", "^[a-z]{2}$"), fk])
+    sc = docs_parquet.sparkSession.sparkContext
+    sc.setJobGroup("validate-plan-only", "validate() builds plans only")
+    try:
+        res = suite.validate(docs_parquet, key_col="url", partition_col="warc_day")
+        assert list(sc.statusTracker().getJobIdsForGroup("validate-plan-only")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    try:
+        assert len(res.persisted) == 1, res.persisted
+        both = res.verdicts.select("rule_id").unionByName(res.violations.select("rule_id"))
+        plan = both._jdf.queryExecution().optimizedPlan().toString()
+        # each leg reads the one cached pass-1 row, which printed its own scan
+        assert plan.count("InMemoryRelation") == 2, plan
+        assert not re.search(r"(?<!InMemory)Relation \[", plan), plan
+        assert len(re.findall(r"FileScan parquet", plan)) == 2, plan
+        assert both.count() > 0
+    finally:
+        res.unpersist()
+
+
+def test_collect_top_k_internal_api_resolves(spark):
+    """Spark registers no SQL function for its CollectTopK aggregate; the
+    suite builds it through ExpressionUtils.column(CollectTopK(...)). Pin
+    that path and its order: the smallest non-NULL values, ascending."""
+    from slower_whisper_spark.suite import _collect_top_k
+
+    try:
+        (col,) = _collect_top_k(spark, [F.when(F.col("id") % 3 != 0, F.col("id"))], 3)
+        got = spark.range(20).repartition(4).agg(col.alias("top")).first()["top"]
+    except Exception as e:  # noqa: BLE001 - any failure here means the path moved
+        pytest.fail(
+            "a Spark upgrade moved the internal API behind the suite's violation rows: "
+            "org.apache.spark.sql.classic.ExpressionUtils.column("
+            f"catalyst.expressions.aggregate.CollectTopK(...)) no longer resolves: {e}"
+        )
+    assert list(got) == [1, 2, 4], got
+
+
 def test_get_spark_lets_aqe_size_cached_plans(spark):
     """Without this conf Spark keeps every cached plan at
     spark.sql.shuffle.partitions, so AQE cannot coalesce the last stage of
@@ -389,7 +442,7 @@ def test_cached_pass1_row_is_coalesced(docs_small, spark):
     tasks than a full shuffle width."""
     docs, _, _ = docs_small
     suite = ConstraintSuite("sized", [NotNull("url"), Pattern("lang", "^[a-z]{2}$")])
-    res = suite.validate(docs, key_col="url", partition_col="warc_day", pass2_prune=False)
+    res = suite.validate(docs, key_col="url", partition_col="warc_day")
     res.materialize()
     try:
         n_parts = res.persisted[0].rdd.getNumPartitions()

@@ -9,9 +9,11 @@ from __future__ import annotations
 
 import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from slower_whisper_spark import (
+    Conditional,
     ConstraintSuite,
     Enum,
     Expr,
@@ -110,6 +112,40 @@ def test_violation_limit_per_rule(docs_small):
     assert (counts["count"] <= 5).all()
 
 
+@pytest.mark.parametrize("shuffle_partitions", [8, 64])
+@pytest.mark.parametrize("partition_col", ["part", None])
+def test_violation_limit_ties_keep_smallest_rows(spark, shuffle_partitions, partition_col):
+    """Rows whose keys tie at the limit boundary are kept in (key, observed,
+    expected) order, wherever the table partitions and tasks split them."""
+    rows = [("a", "x1", 0), ("b", "x2", 1), ("c", "z", 0), ("c", "m", 1), ("c", "b", 2), ("c", "y", 3)]
+    rows += [(f"k{i}", "ok", i % 4) for i in range(40)]
+    df = spark.createDataFrame(rows, "key string, val string, part int").repartition(4)
+    rule = Conditional("true", "val = 'ok'", rule_id="ok", observed_expr="val")
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    try:
+        res = ConstraintSuite("ties", [rule]).validate(
+            df, key_col="key", partition_col=partition_col, violation_limit=3
+        )
+        got = sorted((r["key"], r["observed"]) for r in res.violations.collect())
+        n_failed = res.verdicts.agg(F.sum("violations")).first()[0]
+        res.unpersist()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert n_failed == 6
+    assert got == [("a", "x1"), ("b", "x2"), ("c", "b")]
+
+
+@pytest.mark.parametrize("limit", [0, 100_001, 10**9])
+def test_violation_limit_is_bounded(spark, limit):
+    """Pass 1 allocates violation_limit slots per (table partition, rule)
+    buffer up front, so validate() refuses a limit past its bound."""
+    df = spark.createDataFrame([("a", None)], "url string, lang string")
+    with pytest.raises(ValueError, match="violation_limit"):
+        ConstraintSuite("bound", [NotNull("lang")]).validate(df, violation_limit=limit)
+    ConstraintSuite("bound", [NotNull("lang")]).validate(df, violation_limit=100_000).unpersist()
+
+
 def test_partition_status_vocabulary(docs_small):
     docs, _, _ = docs_small
     suite = _std_suite()
@@ -141,8 +177,6 @@ def test_unpartitioned_validation(docs_small):
 
 
 def test_conditional_rule(spark):
-    from slower_whisper_spark import Conditional
-
     df = spark.createDataFrame(
         [("a", "purchase", 5.0), ("b", "purchase", -1.0), ("c", "view", -9.0)],
         "id string, etype string, value double",
@@ -193,10 +227,10 @@ def test_vectorized_rule_batch_escape_hatch(spark):
 
 
 def test_overlapped_materialize_matches_sequential(docs_small):
-    """The scaling-path form — validate(pass2_prune=False), returning fully lazy +
-    materialize(parallel=True) running verdicts/violations/stats as
-    concurrent jobs — must produce exactly the rows of the default pruned
-    sequential path (same verdicts, same violation set, same stats)."""
+    """The scaling-path form — materialize(parallel=True) running
+    verdicts/violations/stats as concurrent jobs — must produce exactly the
+    rows of the sequential form (same verdicts, same violation set, same
+    stats). ``pass2_prune=False`` is still accepted and changes nothing."""
     docs, _, _ = docs_small
     suite = _std_suite()
 

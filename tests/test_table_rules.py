@@ -265,6 +265,18 @@ def test_fk_dim_content_change_changes_suite_hash(spark):
     assert s3.suite_hash != s1.suite_hash
 
 
+def test_content_fingerprint_sees_changes_among_duplicated_rows(spark):
+    """Equal xxhash64 values cancel under bit_xor, so a fingerprint of count
+    and XOR alone gives [x, x, y] and [z, z, y] the same identity."""
+    from slower_whisper_spark.rules.base import content_fingerprint
+
+    def fp(values):
+        return content_fingerprint(spark.createDataFrame([(v,) for v in values], "c string"), ["c"])
+
+    assert fp(["x", "x", "y"]) != fp(["z", "z", "y"])
+    assert fp(["x", "y", "x"]) == fp(["x", "x", "y"])  # row order is irrelevant
+
+
 def test_hash_invariant_expected_content_in_suite_hash(spark):
     e1 = spark.createDataFrame([("u1", "h1")], "url string, text_sha256 string")
     e2 = spark.createDataFrame([("u1", "h2")], "url string, text_sha256 string")
