@@ -21,12 +21,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _every_row(df: DataFrame) -> int:
-    """A ``violation_limit`` that keeps every violation row of ``df``: its
-    row count (``validate()`` refuses a limit below 1 or above 100,000)."""
-    return max(df.count(), 1)
-
-
 # --------------------------------------------------------------------- #
 # KLL-drift baseline: local single-threaded replay of the distributed
 # sketch path, used by the kll_drift_psi ORACLE. The deterministic
@@ -1187,10 +1181,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from slower_whisper_spark import ConstraintSuite, Pattern
 
         docs = _t(spark, sf, "documents")
-        res = ConstraintSuite("p", [Pattern("lang", LANG_RE)]).validate(
-            docs, key_col="doc_id", violation_limit=_every_row(docs)
-        )
-        return res.violations.select(
+        rows = ConstraintSuite("p", [Pattern("lang", LANG_RE)]).row_violations(docs, key_col="doc_id")
+        return rows.select(
             F.col("key").cast("long").alias("doc_id"), "rule_id", "observed"
         ).orderBy("doc_id")
 
@@ -1201,10 +1193,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from slower_whisper_spark import ConstraintSuite, Enum
 
         ev = _t(spark, sf, "events")
-        res = ConstraintSuite(
+        rows = ConstraintSuite(
             "e", [Enum("event_type", ["click", "view", "purchase", "signup"], rule_id="etype")]
-        ).validate(ev, key_col="event_id", violation_limit=_every_row(ev))
-        return res.violations.select(
+        ).row_violations(ev, key_col="event_id")
+        return rows.select(
             F.col("key").cast("long").alias("event_id"), F.col("observed").alias("event_type")
         ).orderBy("event_id")
 
@@ -2081,10 +2073,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             return (s.str.split().str.len() >= 5).fillna(False)
 
         docs = _t(spark, sf, "documents")
-        res = ConstraintSuite("vx", [Vectorized("text", min_five_tokens, rule_id="min5tok")]).validate(
-            docs, key_col="doc_id", violation_limit=_every_row(docs)
+        rows = ConstraintSuite("vx", [Vectorized("text", min_five_tokens, rule_id="min5tok")]).row_violations(
+            docs, key_col="doc_id"
         )
-        return res.violations.select(F.col("key").cast("long").alias("doc_id")).orderBy("doc_id")
+        return rows.select(F.col("key").cast("long").alias("doc_id")).orderBy("doc_id")
 
     q["vectorized_rule"] = q_vectorized_rule
 
@@ -2695,10 +2687,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .otherwise(F.col("value").cast("string"))
             .alias("v_str"),
         )
-        res = ConstraintSuite("tc", [TypeCheck("v_str", "double", rule_id="vtype")]).validate(
-            mixed, key_col="event_id", violation_limit=_every_row(mixed)
+        rows = ConstraintSuite("tc", [TypeCheck("v_str", "double", rule_id="vtype")]).row_violations(
+            mixed, key_col="event_id"
         )
-        return res.violations.select(
+        return rows.select(
             F.col("key").cast("long").alias("event_id"), F.col("observed").alias("v_str")
         ).orderBy("event_id")
 

@@ -113,14 +113,12 @@ def run_suite_bench(spark, paths) -> dict:
     workers, and the Bloom bits are one-time planning costs that amortize to
     nothing over a long multi-partition run, exactly like on a real cluster.
 
-    The job runs in OVERLAPPED form (``pass2_prune=False`` +
-    ``materialize(parallel=True)``): the bench table fails in every
-    partition, so the failing-partition prune would scan everything anyway —
-    skipping its driver barrier lets pass 1, the table-rule jobs (salted
-    unique, hash-invariant join), and the pass-2 violation scan run as
-    concurrent jobs that fill each other's straggler-wave idle slots. Set
+    The job runs in OVERLAPPED form (``materialize(parallel=True)``): pass
+    1, the table-rule jobs (salted unique, hash-invariant join) and the read
+    of the violation rows from the cached pass-1 row run as concurrent jobs
+    that fill each other's straggler-wave idle slots. Set
     ``SWS_BENCH_SEQ=1`` for the serialized form (the per-phase timings then
-    measure each barrier in isolation — the Amdahl breakdown the scaling
+    measure each action in isolation — the Amdahl breakdown the scaling
     analysis uses)."""
     from pyspark.sql import functions as F
 
@@ -137,7 +135,6 @@ def run_suite_bench(spark, paths) -> dict:
             partition_col="warc_day",
             violation_limit=100,
             stats_columns=["url", "warc_ts", "html", "text", "lang"],
-            pass2_prune=sequential,
         )
         ph["plan_build"] = round(time.monotonic() - t0, 3)
         if sequential:
@@ -728,8 +725,8 @@ sha ceiling is the hardware's string-churn penalty, not a shuffle defect
             rows_md.append(f"| {k} | {a} | {b} | {e:.2f} |")
         phase_md = (
             f"\n## Per-phase Amdahl breakdown (one sequential-mode run per level)\n\n"
-            f"Each driver barrier timed in isolation (``SWS_BENCH_SEQ=1``:\n"
-            f"pass-2 prune collect restored, no job overlap), so a phase that\n"
+            f"Each action timed in isolation (``SWS_BENCH_SEQ=1``: no job\n"
+            f"overlap), so a phase that\n"
             f"stops scaling is visible instead of averaged away. The headline\n"
             f"rows above use the overlapped production form — plan build\n"
             f"returns lazily and all three materializations run as concurrent\n"
@@ -737,7 +734,7 @@ sha ceiling is the hardware's string-churn penalty, not a shuffle defect
             f"| phase | local[{lo}] (s) | local[{hi}] (s) | efficiency |\n|---|---|---|---|\n"
             + "\n".join(rows_md)
             + "\n\n(single unrepeated runs — indicative, not medians; "
-            f"plan_build in sequential mode contains pass 1 + the prune collect)\n"
+            f"plan_build is the lazy plan construction, plus a Bloom filter build)\n"
         )
 
     # render the full measurement history into BENCH.md itself — the file is

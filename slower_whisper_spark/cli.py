@@ -112,10 +112,12 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "validate" and args.drift_col and not args.manifest:
         p.error("--drift-col requires --manifest (the baseline merges from the manifest's sketches)")
     if args.cmd == "validate":
-        from slower_whisper_spark.suite import MAX_VIOLATION_LIMIT
+        from slower_whisper_spark.suite import check_violation_limit
 
-        if not 1 <= args.violation_limit <= MAX_VIOLATION_LIMIT:
-            p.error(f"--violation-limit must be between 1 and {MAX_VIOLATION_LIMIT}")
+        try:  # the suite's own rule count is checked again once it loads
+            check_violation_limit(args.violation_limit)
+        except ValueError as e:
+            p.error(f"--violation-limit: {e}")
 
     if args.cmd == "registry":
         return _registry_main(args)
@@ -138,6 +140,10 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = get_spark(app_name="sws-cli", master=args.master)
     suite = _resolve_suite(args.suite, args.registry)
+    try:
+        check_violation_limit(args.violation_limit, len(suite.counted_rules))
+    except ValueError as e:
+        p.error(f"--violation-limit: {e}")
     if getattr(args, "format", "parquet") == "warc":
         if args.incremental:
             p.error("--incremental needs a hive-partitioned parquet table; WARC input has no partition snapshots")
@@ -277,8 +283,8 @@ def main(argv: list[str] | None = None) -> int:
                 }
             )
         )
-        if rr.result is not None and not rr.overall_passed:
-            for row in rr.result.violations.limit(args.violation_limit).collect():
+        if not rr.overall_passed:
+            for row in rr.violations[: args.violation_limit]:
                 print(f"[viol] {row['rule_id']}: key={row['key']} observed={row['observed']} expected={row['expected']}", file=sys.stderr)
         return 0
 

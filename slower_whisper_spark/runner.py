@@ -13,7 +13,9 @@ gate raises if any rule failed.
 
 from __future__ import annotations
 
+import base64
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
@@ -28,7 +30,7 @@ from slower_whisper_spark.checkpoint import (
     ManifestEntry,
     new_run_id,
 )
-from slower_whisper_spark.suite import ConstraintSuite, SuiteResult
+from slower_whisper_spark.suite import ConstraintSuite, SuiteResult, check_violation_limit
 
 
 # an error entry keeps the head of the exception message: a Spark error can
@@ -55,6 +57,9 @@ class RunResult:
     docs_per_sec: float
     overall_passed: bool
     metrics: dict[str, float] = field(default_factory=dict)
+    # rows of ``result.violations`` (violation_limit per rule at most),
+    # collected with the status rows
+    violations: list = field(default_factory=list)
 
 
 class ValidationRunner:
@@ -75,6 +80,7 @@ class ValidationRunner:
         mergeable distribution baseline for those columns
         (``rules.drift.kll_baseline_from_manifest``) with no rescan of
         history."""
+        check_violation_limit(violation_limit, len(suite.counted_rules))
         self.suite = suite
         self.manifest = CheckpointManifest(manifest_path)
         self.key_col = key_col
@@ -173,27 +179,30 @@ class ValidationRunner:
                 violation_limit=self.violation_limit,
                 global_df=df if pruned else None,
             )
-            status_rows = result.partition_status().collect()
-            # the manifest needs nothing more from the cached results; a
-            # caller that reads ``RunResult.result`` recomputes its frames
+            # the violation rows behind the verdicts are read while the
+            # results are cached, by a job concurrent with the status rows
+            # and the sketch passes; a later read of ``RunResult.result``
+            # recomputes its frames and can see data appended since
+            with ThreadPoolExecutor(max_workers=1) as ex:
+                fv = ex.submit(result.violations.collect)
+                status_rows = result.partition_status().collect()
+                wall = time.monotonic() - t0
+                rows_total = int(sum(r["rows"] for r in status_rows))
+                dps = rows_total / wall if wall > 0 else 0.0
+
+                # mergeable per-partition KLL sketches for the manifest baseline
+                # store: one grouped-Arrow pass per column over PENDING partitions
+                sketches_by_part: dict[str, dict[str, str]] = {}
+                if self.sketch_columns:
+                    from slower_whisper_spark.functions.kll import kll_profile
+
+                    for col in self.sketch_columns:
+                        for sr in kll_profile(scoped, col, partition_col=self.partition_col).collect():
+                            sketches_by_part.setdefault(sr["partition"], {})[col] = base64.b64encode(
+                                bytes(sr["sketch"])
+                            ).decode("ascii")
+                violation_rows = fv.result()
             result.unpersist()
-            wall = time.monotonic() - t0
-            rows_total = int(sum(r["rows"] for r in status_rows))
-            dps = rows_total / wall if wall > 0 else 0.0
-
-            # mergeable per-partition KLL sketches for the manifest baseline
-            # store: one grouped-Arrow pass per column over PENDING partitions
-            sketches_by_part: dict[str, dict[str, str]] = {}
-            if self.sketch_columns:
-                import base64
-
-                from slower_whisper_spark.functions.kll import kll_profile
-
-                for col in self.sketch_columns:
-                    for sr in kll_profile(scoped, col, partition_col=self.partition_col).collect():
-                        sketches_by_part.setdefault(sr["partition"], {})[col] = base64.b64encode(
-                            bytes(sr["sketch"])
-                        ).decode("ascii")
         except Exception as exc:
             # a crashed run leaves a record: one error entry per pending
             # partition (resume treats non-success entries as pending)
@@ -257,6 +266,7 @@ class ValidationRunner:
             docs_per_sec=dps,
             overall_passed=not any_failed,
             metrics={"wall_sec": wall, "docs_per_sec": dps, "rows": float(rows_total)},
+            violations=violation_rows,
         )
         if mode == "gate" and any_failed:
             raise GateFailure(

@@ -21,6 +21,7 @@ Evaluation plan (one scan of the input, fully declarative):
            first ``violation_limit`` over at most partitions × limit rows.
            The per-rule limit mirrors the reference's first-N-errors
            truncation (ref: transcription/transcript_io.py:27-30).
+           ``ConstraintSuite.row_violations`` reads every row, unlimited.
 
 Table rules (unique / fk / hash-invariant / drift) contribute their own jobs
 and are unioned into the same verdict/violation shapes
@@ -40,8 +41,9 @@ from slower_whisper_spark.functions.hashing import canonical_hash, spec_hash
 from slower_whisper_spark.rules.base import RowRule, Rule, TableRule
 from slower_whisper_spark.sqltext import sql_ident, sql_str
 
-# Largest violation_limit validate() accepts (see its docstring for the cost)
-MAX_VIOLATION_LIMIT = 100_000
+# Most top-k slots pass 1 may allocate per table partition: violation_limit
+# times the counted rules (see check_violation_limit for the memory cost)
+MAX_TOP_K_SLOTS = 100_000
 
 VERDICT_COLS = ["partition", "rule_id", "passed", "rows", "violations", "observed", "expected"]
 VIOLATION_COLS = ["key", "rule_id", "observed", "expected"]
@@ -140,6 +142,11 @@ class ConstraintSuite:
     def table_rules(self) -> list[TableRule]:
         return [r for r in self.rules if isinstance(r, TableRule)]
 
+    @property
+    def counted_rules(self) -> list[Rule]:
+        """Rules pass 1 counts and keeps failing rows of: row rules, Bloom FKs."""
+        return self.row_rules + [r for r in self.table_rules if getattr(r, "foldable", False)]
+
     def spec(self) -> dict[str, Any]:
         return {
             "name": self.name,
@@ -177,19 +184,9 @@ class ConstraintSuite:
         table-rule jobs and the stats read as concurrent jobs.
 
         ``violation_limit``: violation rows kept per rule, the first by
-        (key, observed, expected); at most ``MAX_VIOLATION_LIMIT``
-        (100,000), else ``ValueError``. Each row rule and Bloom ForeignKey
-        keeps them in a top-k buffer per (table partition, task) inside
-        pass 1's aggregate, and Spark allocates every buffer's
-        ``violation_limit`` slots up front: 4-8 bytes a slot (0.4-0.8 MB at
-        the bound) plus the failing (key, observed, expected) structs it
-        holds. A task holds one buffer per counted rule for each table
-        partition it aggregates (up to Spark's sort-based fallback
-        threshold, 128 partitions by default). The allocation costs time
-        too: on a 4-CPU host a 200k-row table with 10^4 failing partitions
-        and 4 row rules validated in 3.1 s at limit 100 and 15.4 s at the
-        bound. Size the limit to the rows a caller reads, not to "all of
-        them".
+        (key, observed, expected); times the counted rules (row rules, Bloom
+        ForeignKeys) at most ``MAX_TOP_K_SLOTS``, else ``ValueError``: see
+        ``check_violation_limit`` for the cost. ``row_violations`` has no limit.
 
         ``pass2_prune`` is accepted and has no effect: violation rows come
         from the pass-1 aggregate, so there is no second scan to prune.
@@ -206,11 +203,7 @@ class ConstraintSuite:
         part_rows join. Row rules and per-partition table rules stay on the
         pruned ``df`` (their verdicts are partition-local by construction).
         """
-        if not 1 <= violation_limit <= MAX_VIOLATION_LIMIT:
-            raise ValueError(
-                f"violation_limit={violation_limit}: must be between 1 and {MAX_VIOLATION_LIMIT}; "
-                "pass 1 allocates that many slots per (table partition, rule) buffer"
-            )
+        check_violation_limit(violation_limit, len(self.counted_rules))
         spark = df.sparkSession
         pcol = partition_col or "__all"
         if partition_col is None:
@@ -222,25 +215,15 @@ class ConstraintSuite:
         violation_parts: list[DataFrame] = []
         persisted: list[DataFrame] = []
 
-        # ---- classify rules: row / folded-into-scan / standalone -------- #
-        folded_fk: list = []
+        # ---- classify rules: counted / folded drift / standalone -------- #
+        counted = self._failing(df, key_col)
         folded_drift: list = []
         standalone: list = []
         for rule in self.table_rules:
-            if getattr(rule, "foldable", False):
-                folded_fk.append(rule)
-            elif hasattr(rule, "fold_agg_exprs"):
+            if hasattr(rule, "fold_agg_exprs"):
                 folded_drift.append(rule)
-            else:
+            elif not getattr(rule, "foldable", False):
                 standalone.append(rule)
-
-        # (rule_id, pass-predicate, observed, expected) per counted rule;
-        # bloom-FK rules compile to per-row predicates (Spark's might_contain
-        # over the rule's Bloom bits) and join the row-rule family
-        counted = [(r.rule_id, r.predicate(), r.observed(), r.expected()) for r in self.row_rules] + [
-            (rule.rule_id, rule.row_predicate(df), rule.fold_observed(), rule.fold_expected())
-            for rule in folded_fk
-        ]
 
         # ---- pass 1: ONE wide agg — per counted rule a fail count and the
         #      first violation_limit failing (key, observed, expected)
@@ -248,15 +231,11 @@ class ConstraintSuite:
         #      Each rule's failing struct (NULL when the row passes) is
         #      projected once below the aggregate, so its predicate runs
         #      once per row, in whole-stage codegen ------------------------ #
-        key = F.col(key_col).cast("string").alias("key")
         names = [f"__fail__{i}" for i in range(len(counted))]
-        failing = [
-            F.when(~pred, F.struct(key, observed.alias("observed"), expected.alias("expected"))).alias(name)
-            for name, (_, pred, observed, expected) in zip(names, counted)
-        ]
+        failing = [fail.alias(name) for name, (_, fail) in zip(names, counted)]
         tops = _collect_top_k(spark, [F.col(name) for name in names], violation_limit)
         agg_exprs = [F.count(F.lit(1)).alias("rows")]
-        for name, (rid, *_), top in zip(names, counted, tops):
+        for name, (rid, _), top in zip(names, counted, tops):
             agg_exprs += [F.count(name).alias(f"viol__{rid}"), top.alias(f"top__{rid}")]
         for rule in folded_drift:
             agg_exprs += rule.fold_agg_exprs()
@@ -274,12 +253,10 @@ class ConstraintSuite:
         part_rows = wide.select("partition", "rows")
 
         if counted:
-
-            def stack(prefix: str, name: str) -> Column:
-                pairs = ", ".join(f"{sql_str(rid)}, {sql_ident(prefix + rid)}" for rid, *_ in counted)
-                return F.expr(f"stack({len(counted)}, {pairs}) as (rule_id, {name})")
-
-            row_verdicts = wide.select("partition", "rows", stack("viol__", "violations")).select(
+            rids = [rid for rid, _ in counted]
+            row_verdicts = wide.select(
+                "partition", "rows", _stack(rids, [f"viol__{rid}" for rid in rids], "violations")
+            ).select(
                 "partition",
                 "rule_id",
                 (F.col("violations") == 0).alias("passed"),
@@ -294,7 +271,9 @@ class ConstraintSuite:
             #      violation_limit failures per rule came out of pass 1;
             #      keep the first violation_limit over all partitions
             #      (ref first-N-errors: transcript_io.py:27-30) --------------- #
-            found = wide.select(stack("top__", "top")).select("rule_id", F.explode("top").alias("v"))
+            found = wide.select(_stack(rids, [f"top__{rid}" for rid in rids], "top")).select(
+                "rule_id", F.explode("top").alias("v")
+            )
             w = Window.partitionBy("rule_id").orderBy("v")
             violation_parts.append(
                 found.withColumn("__rn", F.row_number().over(w))
@@ -342,9 +321,7 @@ class ConstraintSuite:
         if "rows" not in verdicts.columns:  # pragma: no cover
             verdicts = verdicts.join(part_rows, "partition", "left")
         violations = (
-            reduce(lambda a, b: a.unionByName(b), violation_parts)
-            if violation_parts
-            else spark.createDataFrame([], "key string, rule_id string, observed string, expected string")
+            reduce(lambda a, b: a.unionByName(b), violation_parts) if violation_parts else _empty_violations(spark)
         )
 
         stats_df = None
@@ -363,6 +340,57 @@ class ConstraintSuite:
             persisted=persisted,
         )
 
+    def row_violations(self, df: DataFrame, *, key_col: str = "url") -> DataFrame:
+        """Every violation row of the counted rules, unlimited: the rows
+        ``validate()`` keeps the first ``violation_limit`` of, with no top-k
+        buffer. Lazy, one scan of ``df`` a read; no table rules' rows."""
+        failing = self._failing(df, key_col)
+        if not failing:
+            return _empty_violations(df.sparkSession)
+        rids = [rid for rid, _ in failing]
+        names = [f"__fail__{i}" for i in range(len(failing))]
+        return (
+            df.select(*[fail.alias(name) for name, (_, fail) in zip(names, failing)])
+            .select(_stack(rids, names, "v"))
+            .filter(F.col("v").isNotNull())
+            .select("v.key", "rule_id", "v.observed", "v.expected")
+        )
+
+    def _failing(self, df: DataFrame, key_col: str) -> list[tuple[str, Column]]:
+        """(rule_id, struct(key, observed, expected) of a failing row, NULL
+        for a passing one) per counted rule; a Bloom FK builds its bits here."""
+        key = F.col(key_col).cast("string").alias("key")
+        out = []
+        for r in self.counted_rules:
+            row = isinstance(r, RowRule)
+            pred = r.predicate() if row else r.row_predicate(df)
+            observed, expected = (r.observed(), r.expected()) if row else (r.fold_observed(), r.fold_expected())
+            out.append((r.rule_id, F.when(~pred, F.struct(key, observed.alias("observed"), expected.alias("expected")))))
+        return out
+
+
+def check_violation_limit(violation_limit: int, counted_rules: int = 1) -> None:
+    """``ValueError`` unless 1 <= ``violation_limit`` and ``violation_limit``
+    × ``counted_rules`` <= ``MAX_TOP_K_SLOTS``. Pass 1's top-k buffer per
+    (table partition, counted rule, task) allocates its slots up front, 4-8
+    bytes each, and a task holds up to 128 table partitions in memory
+    (Spark's sort-based fallback threshold): at the bound, 128 × 100,000 ×
+    8 B ≈ 100 MB a task. It costs time too: on a 4-CPU host, 200k rows in
+    10^4 failing partitions, 4 row rules, took 2.3 s at limit 100 and 5.2 s
+    at 25,000 (their bound), where a scan with no top-k took 2.0 and 2.2 s."""
+    slots = violation_limit * max(counted_rules, 1)
+    if violation_limit < 1 or slots > MAX_TOP_K_SLOTS:
+        raise ValueError(
+            f"violation_limit={violation_limit} x {counted_rules} counted rule(s) = {slots} top-k slots: the limit "
+            f"must be >= 1 and the slots <= {MAX_TOP_K_SLOTS} (ConstraintSuite.row_violations has no limit)"
+        )
+
+
+def _stack(rule_ids: list[str], cols: list[str], name: str) -> Column:
+    """One row per rule: ``(rule_id, <name>)`` from each rule's column."""
+    pairs = ", ".join(f"{sql_str(rid)}, {sql_ident(c)}" for rid, c in zip(rule_ids, cols))
+    return F.expr(f"stack({len(cols)}, {pairs}) as (rule_id, {name})")
+
 
 def _collect_top_k(spark, values: list[Column], num: int) -> list[Column]:
     """Spark's ``collect_top_k`` aggregate over each of ``values``: the
@@ -375,6 +403,10 @@ def _collect_top_k(spark, values: list[Column], num: int) -> list[Column]:
     top_k = jvm.org.apache.spark.sql.catalyst.expressions.aggregate.CollectTopK
     # reverse=True: keep the smallest, not the largest
     return [Column(utils.column(top_k(utils.expression(v._jc), num, True, 0, 0))) for v in values]
+
+
+def _empty_violations(spark) -> DataFrame:
+    return spark.createDataFrame([], "key string, rule_id string, observed string, expected string")
 
 
 def _empty_verdicts(spark) -> DataFrame:

@@ -285,4 +285,17 @@ def test_runner_releases_its_cached_results(docs_small, tmp_path):
     assert rr.result.persisted, "validate() should track its cached intermediates"
     for df in rr.result.persisted:
         assert df.storageLevel.useMemory is False and df.storageLevel.useDisk is False
-    assert rr.result.violations.count() > 0
+    # the violation rows behind the verdicts were collected before release
+    assert rr.violations
+    assert sorted(map(tuple, rr.violations)) == sorted(map(tuple, rr.result.violations.collect()))
+
+
+def test_runner_checks_violation_limit_before_running(docs_small, tmp_path):
+    """An out-of-range limit fails at construction: no Spark job and no
+    error entries in the manifest."""
+    import pytest
+
+    with pytest.raises(ValueError, match="violation_limit"):
+        ValidationRunner(_suite(strict=True), str(tmp_path / "m"), violation_limit=50_001)
+    assert CheckpointManifest(str(tmp_path / "m")).completed_partitions(_suite(strict=True).suite_hash) == set()
+    ValidationRunner(_suite(strict=True), str(tmp_path / "m"), violation_limit=50_000)

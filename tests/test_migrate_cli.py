@@ -65,7 +65,7 @@ def test_migrated_suite_runs_same_as_native(spark):
     assert migrated.suite_hash == native.suite_hash
 
 
-def test_cli_validate_roundtrip(tmp_path, docs_small, spark):
+def test_cli_validate_roundtrip(tmp_path, docs_small, spark, capsys):
     from slower_whisper_spark.cli import main
 
     docs, _, _ = docs_small
@@ -94,9 +94,17 @@ def test_cli_validate_roundtrip(tmp_path, docs_small, spark):
     assert main(["validate", table, "--suite", str(suite_path)]) == 0
     # gate mode: violations → exit 1
     assert main(["validate", table, "--suite", str(suite_path), "--gate"]) == 1
-    # manifest mode with resume
+    # manifest mode with resume: the violation rows print from the run's own
+    # collect, at most --violation-limit of them
     mdir = str(tmp_path / "manifest")
-    assert main(["validate", table, "--suite", str(suite_path), "--manifest", mdir]) == 0
+    capsys.readouterr()
+    assert main(["validate", table, "--suite", str(suite_path), "--manifest", mdir, "--violation-limit", "3"]) == 0
+    viol = [line for line in capsys.readouterr().err.splitlines() if line.startswith("[viol]")]
+    assert len(viol) == 3 and all("pattern(lang)" in line for line in viol)
+    # a limit within the CLI's range but past the bound for this suite's two rules
+    with pytest.raises(SystemExit) as e:
+        main(["validate", table, "--suite", str(suite_path), "--violation-limit", "60000"])
+    assert e.value.code == 2 and "--violation-limit" in capsys.readouterr().err
 
 
 def test_detect_version_explicit_spec_format():

@@ -10,6 +10,7 @@ from __future__ import annotations
 import datetime
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from slower_whisper_spark import (
@@ -22,6 +23,7 @@ from slower_whisper_spark import (
     Pattern,
     Range,
 )
+from slower_whisper_spark.suite import MAX_TOP_K_SLOTS
 
 LANG_RE = r"^[a-z]{2}(-[A-Z]{2})?$"
 WINDOW_LO = datetime.datetime(2026, 7, 1)
@@ -136,14 +138,41 @@ def test_violation_limit_ties_keep_smallest_rows(spark, shuffle_partitions, part
     assert got == [("a", "x1"), ("b", "x2"), ("c", "b")]
 
 
-@pytest.mark.parametrize("limit", [0, 100_001, 10**9])
-def test_violation_limit_is_bounded(spark, limit):
-    """Pass 1 allocates violation_limit slots per (table partition, rule)
-    buffer up front, so validate() refuses a limit past its bound."""
+@pytest.mark.parametrize("n_rules,limit", [(1, 0), (1, 100_001), (1, 10**9), (2, 50_001)])
+def test_violation_limit_is_bounded(spark, n_rules, limit):
+    """Pass 1 allocates violation_limit slots per (table partition, counted
+    rule) buffer up front, so validate() refuses a limit whose slots, the
+    limit times the counted rules, pass its bound."""
     df = spark.createDataFrame([("a", None)], "url string, lang string")
+    suite = ConstraintSuite("bound", [NotNull("lang"), NotNull("url")][:n_rules])
     with pytest.raises(ValueError, match="violation_limit"):
-        ConstraintSuite("bound", [NotNull("lang")]).validate(df, violation_limit=limit)
-    ConstraintSuite("bound", [NotNull("lang")]).validate(df, violation_limit=100_000).unpersist()
+        suite.validate(df, violation_limit=limit)
+    suite.validate(df, violation_limit=MAX_TOP_K_SLOTS // n_rules).unpersist()
+
+
+def test_row_violations_has_no_limit(spark):
+    """row_violations returns every violation row, past the top-k bound too,
+    and validate() keeps the first violation_limit of them per rule."""
+    n = 2 * MAX_TOP_K_SLOTS + 2
+    df = spark.range(n).select(
+        F.format_string("k%07d", "id").alias("url"),
+        F.when(F.col("id") % 2 == 0, F.lit(None)).otherwise(F.lit("en")).alias("lang"),
+        (F.col("id") % 3).alias("part"),
+    )
+    suite = ConstraintSuite("all", [NotNull("lang"), Expr("part < 2", rule_id="part")])
+    rows = suite.row_violations(df, key_col="url")
+    counts = {r["rule_id"]: r["count"] for r in rows.groupBy("rule_id").count().collect()}
+    assert counts == {"not_null(lang)": MAX_TOP_K_SLOTS + 1, "part": n // 3}
+    res = suite.validate(df, key_col="url", partition_col="part", violation_limit=7)
+    kept = sorted(tuple(r) for r in res.violations.collect())
+    res.unpersist()
+    first = (
+        rows.withColumn("rn", F.row_number().over(Window.partitionBy("rule_id").orderBy("key", "observed", "expected")))
+        .filter("rn <= 7")
+        .drop("rn")
+    )
+    assert kept == sorted(tuple(r) for r in first.collect())
+    assert ConstraintSuite("none", []).row_violations(df, key_col="url").count() == 0
 
 
 def test_partition_status_vocabulary(docs_small):
