@@ -23,8 +23,8 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 # --------------------------------------------------------------------- #
 # KLL-drift baseline: local single-threaded replay of the distributed
-# sketch path, used by the kll_drift_psi ORACLE. The deterministic
-# (sorted-input, seeded) KLL build makes the per-partition sketch a pure
+# sketch path, used by the kll_drift_psi ORACLE. kll_profile's
+# sorted-input, seeded KLL build makes the per-partition sketch a pure
 # function of the partition's value multiset, so a duckdb fetch + the same
 # KLLSketch code + the same lang-sorted merge reproduce the distributed
 # baseline EXACTLY — the oracle then replays the merged sketch's quantile
@@ -1283,7 +1283,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # ---- uniqueness (SO2) ------------------------------------------------ #
     def q_unique_violations(spark, sf):
-        """Two-phase salted uniqueness on lineitem (l_orderkey,l_linenumber)
+        """Two-phase uniqueness on lineitem (l_orderkey,l_linenumber)
         composite — emits duplicate keys w/ counts (none expected: clean)."""
         from slower_whisper_spark.rules.unique import Unique
         from slower_whisper_spark import ConstraintSuite
@@ -1394,7 +1394,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # ---- drift: PSI against a manifest-merged KLL baseline (A8/V7) --------- #
     def q_kll_drift_psi(spark, sf):
         """The 100-TB drift story end to end, driver-checked: per-partition
-        KLL sketches (deterministic build) over the BASELINE half of
+        KLL sketches (sorted-input build) over the BASELINE half of
         documents (doc_id % 2 = 0, partitioned by lang) → persisted b64 into
         a real CheckpointManifest → kll_baseline_from_manifest merges them
         into equi-depth quantile edges WITHOUT rescanning data → PSI of the
@@ -1422,9 +1422,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         docs = _t(spark, sf, "documents").filter(F.col("lang").isNotNull())
         base_half = docs.filter(F.col("doc_id") % 2 == 0)
         rows = sorted(
-            kll_profile(
-                base_half, "n_chars", partition_col="lang", deterministic=True
-            ).collect(),
+            kll_profile(base_half, "n_chars", partition_col="lang").collect(),
             key=lambda r: r["partition"],
         )
         mdir = tempfile.mkdtemp(prefix="sws_kll_manifest_")

@@ -12,6 +12,9 @@ pure numpy:
 
   * per-partition build via ``applyInPandas`` (Arrow batches, zero per-row
     Python) → one (partition, n, sketch binary) row per partition;
+  * each partition's values are sorted before the build, so its sketch
+    bytes depend only on the partition's values, not on their order or on
+    the table's partitioning;
   * sketches SERIALIZE to a compact little-endian byte string → base64 in
     the manifest;
   * MERGE is associative/commutative: union per-run partition sketches into
@@ -156,7 +159,6 @@ def kll_profile(
     *,
     partition_col: str | None = None,
     k: int = 200,
-    deterministic: bool = False,
 ) -> DataFrame:
     """(partition, n, sketch binary) — one KLL sketch per partition, built
     in a single grouped Arrow pass (``applyInPandas``; numpy inside, zero
@@ -166,13 +168,12 @@ def kll_profile(
     (e.g. by spark_partition_id) and merge — merging is lossless-associative
     by construction.
 
-    ``deterministic``: sort each group's values before sketching. KLL is
-    input-order-sensitive (compaction offsets follow a seeded LCG over the
-    insertion sequence); group rows arrive in shuffle order, so two runs over
-    the same data can otherwise yield byte-different (equally valid) sketches.
-    Sorting makes the sketch a pure function of the partition's value
-    MULTISET — required when sketches feed content-addressed stores or
-    replayed-literal oracles. Cost: one numpy sort per group, O(n log n) on
+    Each group's values are sorted before sketching, so the sketch is a pure
+    function of the partition's value MULTISET: group rows arrive in shuffle
+    order, and a partition with at most ``k`` values is stored as its raw
+    level-0 buffer, in arrival order unless sorted. The manifest and the
+    replayed-literal oracles rely on these bytes not depending on the
+    partitioning or the run. Cost: one numpy sort per group, O(n log n) on
     data already resident in the Arrow batch."""
     from pyspark.sql import functions as F
 
@@ -190,10 +191,8 @@ def kll_profile(
         import pandas as pd
 
         sk = KLLSketch(k=k, seed=1)
-        v = pdf["__v"].to_numpy(dtype=np.float64, na_value=np.nan)
-        if deterministic:
-            v = np.sort(v)  # NaNs sort last; update_batch drops them either way
-        sk.update_batch(v)
+        # NaNs sort last; update_batch drops them either way
+        sk.update_batch(np.sort(pdf["__v"].to_numpy(dtype=np.float64, na_value=np.nan)))
         return pd.DataFrame(
             {"partition": [pdf["partition"].iloc[0]], "n": [sk.n], "sketch": [sk.serialize()]}
         )

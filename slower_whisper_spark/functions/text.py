@@ -203,9 +203,10 @@ def redact_pii(c: Column | str, kinds: list[str] | None = None) -> Column:
     return out
 
 
-def vocab_topk(df, text_col: str = "text", k: int = 100, normalize: bool = True):
-    """Corpus word-frequency top-k — the tokenizer-training precursor
-    (BPE/unigram trainers start from exactly this table).
+def vocab_topk(df, text_col: str = "text", k: int = 100):
+    """Corpus word-frequency top-k over normalized text — the
+    tokenizer-training precursor (BPE/unigram trainers start from exactly
+    this table).
 
     Scale shape: explode → hash aggregate with map-side partial combine
     (the Zipf head collapses before the shuffle, so the exchange carries
@@ -213,10 +214,8 @@ def vocab_topk(df, text_col: str = "text", k: int = 100, normalize: bool = True)
     ``orderBy().limit(k)``, which Spark executes as TakeOrderedAndProject:
     per-partition heaps of k, no global sort materialization. Ties break
     deterministically by word."""
-    c = F.col(text_col)
-    words = tokens(normalize_text(c) if normalize else c)
     return (
-        df.select(F.explode(words).alias("word"))
+        df.select(F.explode(tokens(normalize_text(F.col(text_col)))).alias("word"))
         .where(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))

@@ -130,7 +130,8 @@ def auto_migrate(spec: dict[str, Any], to_version: int = 2) -> dict[str, Any]:
 def _build_unique(r: dict[str, Any]):
     from slower_whisper_spark.rules import Unique
 
-    return Unique(r["column"], rule_id=r.get("rule_id"), salt_buckets=r.get("salt_buckets", 0))
+    # a stored salt is ignored: it never changed the groups
+    return Unique(r["column"], rule_id=r.get("rule_id"))
 
 
 def _build_drift(r: dict[str, Any]):

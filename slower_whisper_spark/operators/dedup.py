@@ -558,14 +558,13 @@ def paragraph_dedup(
     text_col: str = "text",
     sep: str = "\n",
     min_docs: int = 2,
-    normalize: bool = True,
-    broadcast_boilerplate: bool = True,
 ) -> DataFrame:
     """CCNet/RefinedWeb-style boilerplate-paragraph removal: drop every
-    paragraph whose (normalized) hash occurs in >= ``min_docs`` DISTINCT
-    documents, and reconstruct each document from its surviving paragraphs
-    in original order (ref dedup ancestry: the reference's segment-level
-    duplicate handling, transcription/models.py segment identity).
+    paragraph whose normalized (trimmed, lower-cased) hash occurs in >=
+    ``min_docs`` DISTINCT documents, and reconstruct each document from its
+    surviving paragraphs in original order (ref dedup ancestry: the
+    reference's segment-level duplicate handling, transcription/models.py
+    segment identity).
 
     Output: ``(id, text_dedup, n_paras, n_kept, n_removed)`` — one row per
     input row; a document whose every paragraph is boilerplate survives
@@ -574,20 +573,17 @@ def paragraph_dedup(
 
     Scale: paragraphs shuffle once on the 16-byte hash (explode -> count
     distinct docs). The boilerplate set is the high-document-frequency
-    tail — tiny by Zipf — so the removal join BROADCASTS it by default and
-    paragraph text never shuffles; set ``broadcast_boilerplate=False`` for
-    the shuffle anti-join when the set is adversarially large. The final
-    per-doc regroup shuffles (id, surviving paragraph) pairs only.
+    tail — tiny by Zipf — so the removal join BROADCASTS it and paragraph
+    text never shuffles. The final per-doc regroup shuffles (id, surviving
+    paragraph) pairs only.
     """
-    para_raw = F.col("_para")
-    key_src = F.trim(F.lower(para_raw)) if normalize else para_raw
     paras = (
         df.select(
             F.col(id_col).alias("_id"),
             F.posexplode(F.split(F.col(text_col), sep)).alias("_idx", "_para"),
         )
         .where(F.trim("_para") != "")
-        .withColumn("_h", F.md5(key_src))
+        .withColumn("_h", F.md5(F.trim(F.lower("_para"))))
     )
     boiler = (
         paras.groupBy("_h")
@@ -595,9 +591,7 @@ def paragraph_dedup(
         .where(F.col("_nd") >= int(min_docs))
         .select("_h")
     )
-    if broadcast_boilerplate:
-        boiler = F.broadcast(boiler)
-    kept = paras.join(boiler, "_h", "left_anti")
+    kept = paras.join(F.broadcast(boiler), "_h", "left_anti")
     rebuilt = kept.groupBy("_id").agg(
         F.array_join(
             F.transform(
@@ -631,7 +625,6 @@ def contamination_pairs(
     train_id_col: str = "doc_id",
     eval_id_col: str = "eval_id",
     text_col: str = "text",
-    eval_text_col: str | None = None,
     shingle_n: int = 5,
     min_containment: float = 0.8,
 ) -> DataFrame:
@@ -655,7 +648,6 @@ def contamination_pairs(
     """
     from slower_whisper_spark.functions.text import _hashed_token_grams
 
-    e_text = eval_text_col or text_col
     # per-doc DISTINCT shingle sets built ROW-LOCALLY (array_distinct before
     # the explode) — the corpus side reaches the broadcast-join filter
     # without any shuffle at all. Both explodes consume the gram EXPRESSION
@@ -673,8 +665,8 @@ def contamination_pairs(
         F.explode(F.array_distinct(t_grams)).alias("sh"),
     )
     e_th, e_grams = _hashed_token_grams(
-        eval_df.select(F.col(eval_id_col).alias("eval_id"), F.col(e_text)),
-        "eval_id", e_text, n=shingle_n,
+        eval_df.select(F.col(eval_id_col).alias("eval_id"), F.col(text_col)),
+        "eval_id", text_col, n=shingle_n,
     )
     e_sets = e_th.select(
         F.col("id").alias("eval_id"),

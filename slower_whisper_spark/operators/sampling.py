@@ -75,7 +75,6 @@ def domain_cap(
     cap: int,
     order_col: str,
     tiebreak_col: str,
-    descending: bool = True,
 ) -> DataFrame:
     """Keep at most ``cap`` rows per domain, preferring high ``order_col``
     (quality score, typically), ties broken deterministically — the
@@ -86,8 +85,7 @@ def domain_cap(
     ``deterministic_sample`` per hot domain or a two-phase salted cap
     (cap within (domain, salt) then re-rank the ≤ salt·cap survivors) —
     at cap ≪ bucket size the second phase is driver-trivial."""
-    ordc = F.desc(order_col) if descending else F.asc(order_col)
-    w = Window.partitionBy(domain_col).orderBy(ordc, F.asc(tiebreak_col))
+    w = Window.partitionBy(domain_col).orderBy(F.desc(order_col), F.asc(tiebreak_col))
     return (
         df.withColumn("domain_rank", F.row_number().over(w))
         .where(F.col("domain_rank") <= int(cap))

@@ -33,20 +33,16 @@ def sessionize(
     key_col: str,
     ts_col: str,
     gap_seconds: float,
-    extra_break_col: str | None = None,
 ) -> DataFrame:
     """Adds ``session_id`` (per-key 1-based) — new session when the gap from
-    the previous event ≥ gap_seconds, or when extra_break_col changes
-    (the reference's speaker-change OR pause-threshold split)."""
+    the previous event ≥ gap_seconds (the reference's pause-threshold
+    split)."""
     w = Window.partitionBy(key_col).orderBy(ts_col)
     prev_ts = F.lag(F.col(ts_col)).over(w)
     gap = _ts_sec(F.col(ts_col)) - _ts_sec(prev_ts)
     is_new = F.when(prev_ts.isNull(), F.lit(1)).otherwise(
         F.when(gap >= F.lit(gap_seconds), F.lit(1)).otherwise(F.lit(0))
     )
-    if extra_break_col is not None:
-        changed = F.lag(F.col(extra_break_col)).over(w) != F.col(extra_break_col)
-        is_new = F.greatest(is_new, F.when(F.coalesce(changed, F.lit(False)), 1).otherwise(0))
     running = Window.partitionBy(key_col).orderBy(ts_col).rowsBetween(Window.unboundedPreceding, 0)
     return df.withColumn("session_id", F.sum(is_new).over(running))
 
@@ -90,10 +86,9 @@ def asof_join(
     left_ts: str,
     right_ts: str,
     right_cols: list[str],
-    direction: str = "backward",
 ) -> DataFrame:
     """As-of join: for each left row, the latest right row with
-    right_ts <= left_ts (backward; forward = earliest >=) per key.
+    right_ts <= left_ts per key (a backward as-of join).
 
     Implemented as the union-tag-window pattern (one shuffle on key, no
     range self-join): tag sides, sort by (key, ts, side), carry the last
@@ -101,9 +96,6 @@ def asof_join(
     idiomatic distributed as-of — equivalent to DuckDB/pandas ASOF joins
     (asserted in tests against duckdb's ASOF JOIN).
     """
-    if direction not in ("backward", "forward"):
-        raise ValueError(direction)
-
     lcols = left.columns
     tagged_l = left.select(
         F.col(key_col).alias("__k"),
@@ -125,19 +117,12 @@ def asof_join(
     )
     unioned = tagged_l.unionByName(tagged_r)
 
-    if direction == "backward":
-        # right rows sort before left rows at equal ts → right@t matches left@t
-        w = (
-            Window.partitionBy("__k")
-            .orderBy(F.col("__ts").asc(), F.col("__side").asc())
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-    else:
-        w = (
-            Window.partitionBy("__k")
-            .orderBy(F.col("__ts").desc(), F.col("__side").asc())
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
+    # right rows sort before left rows at equal ts → right@t matches left@t
+    w = (
+        Window.partitionBy("__k")
+        .orderBy(F.col("__ts").asc(), F.col("__side").asc())
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
     matched = unioned.withColumn("__match", F.last("__rrow", ignorenulls=True).over(w))
     out = matched.filter(F.col("__side") == 1).select(
         *[F.col("__lrow")[c].alias(c) for c in lcols],

@@ -10,8 +10,10 @@ aggregation:
            map-side partial aggregation, so a hot key (one url duplicated
            millions of times, or a mega-host's rows concentrated in a few
            input splits) is collapsed to one row per task BEFORE the
-           shuffle. The (partition_value, key) composite acts as the salt:
-           phase-1 output is at most |partitions| rows per key.
+           shuffle. That partial aggregate is what defuses the skew: phase-1
+           output is at most |partitions| rows per key. (A salt that is a
+           function of the key, such as ``pmod(xxhash64(key), b)``, would
+           leave the groups unchanged and spread nothing.)
   phase 2: the per-key total sits beside the partials as
            ``sum(__cnt_part) OVER (PARTITION BY __key)``; rows whose key
            totals more than 1 are the duplicates. This shuffles only the
@@ -19,9 +21,9 @@ aggregation:
 
 Only the duplicate partials are persisted, and both outputs come from them:
 per-partition verdict counts sum the partials, violation rows keep one
-partial per key. The table is scanned once. A NULL key is grouped like any
-other value: a duplicated NULL key is listed as a violation row, but the
-per-partition verdict counts skip it.
+partial per key. The table is scanned once. NULL keys are exempt, as under
+SQL ``UNIQUE``: they are filtered out before phase 1, so they are neither
+counted nor listed.
 
 At small scale this is provably equivalent to naive
 ``dropDuplicates``/``count`` (asserted in tests/test_table_rules.py).
@@ -42,21 +44,17 @@ class Unique(TableRule):
     # point: on resumed/pruned runs the suite must feed it the full table
     cross_partition = True
 
-    def __init__(self, column: str, rule_id: str | None = None, salt_buckets: int = 0):
-        """salt_buckets > 0 adds an explicit random-free salt (hash of the
-        key modulo buckets) as an extra phase-1 grouping term. With a real
-        partition column present this is redundant (the partition value
-        already salts phase 1); it engages for unpartitioned tables (the
-        suite passes the synthetic '__all' constant there)."""
+    def __init__(self, column: str, rule_id: str | None = None):
         self.column = column
-        self.salt_buckets = salt_buckets
         self.rule_id = rule_id or f"unique({column})"
 
     def spec(self) -> dict[str, Any]:
         return {
             "type": "unique",
             "column": self.column,
-            "salt_buckets": self.salt_buckets,
+            # a constant: stored specs, suite hashes and manifests written
+            # while the rule took a salt stay valid
+            "salt_buckets": 0,
             "rule_id": self.rule_id,
         }
 
@@ -70,17 +68,13 @@ class Unique(TableRule):
         persisted: list[DataFrame] | None = None,
     ) -> tuple[DataFrame, DataFrame | None]:
         key = F.col(self.column)
-        group_cols = [F.col(partition_col).cast("string").alias("__part"), key.alias("__key")]
-        if self.salt_buckets > 0 and (partition_col is None or partition_col == "__all"):
-            # unpartitioned table: the suite passes the synthetic '__all'
-            # constant, which contributes nothing to phase-1 spreading —
-            # the explicit hash salt takes over
-            group_cols.append(
-                F.pmod(F.xxhash64(key), F.lit(self.salt_buckets)).alias("__salt")
-            )
 
         # phase 1: per-(partition, key) partial counts (map-side combine)
-        per_part = df.groupBy(*group_cols).agg(F.count(F.lit(1)).alias("__cnt_part"))
+        per_part = (
+            df.filter(key.isNotNull())
+            .groupBy(F.col(partition_col).cast("string").alias("__part"), key.alias("__key"))
+            .agg(F.count(F.lit(1)).alias("__cnt_part"))
+        )
 
         # phase 2: the global per-key total beside each partial; duplicates
         # are rare → persist them so verdicts and violations share one scan
@@ -94,13 +88,7 @@ class Unique(TableRule):
         if persisted is not None:
             persisted.append(dups)
 
-        # a duplicated NULL key stays out of the partition counts but is
-        # listed below: these are the rule's declared outputs, kept as they are
-        counts = (
-            dups.filter(F.col("__key").isNotNull())
-            .groupBy("__part")
-            .agg(F.sum("__cnt_part").alias("violations"))
-        )
+        counts = dups.groupBy("__part").agg(F.sum("__cnt_part").alias("violations"))
         # one violation row per key, whatever the partitions it spans
         rows = dups.filter(F.col("__nth") == 1).select(
             F.col("__key").cast("string").alias("key"),

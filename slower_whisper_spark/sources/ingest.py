@@ -67,7 +67,6 @@ def ingest_guards(
     binary_col: str = "payload",
     size_cap: int = 1 << 20,
     allowed_formats: tuple[str, ...] = ("png", "jpeg", "gif", "wav", "avi"),
-    deep_probe: bool = True,
 ) -> DataFrame:
     """Two-tier ingest guard → one verdict row per payload.
 
@@ -95,15 +94,6 @@ def ingest_guards(
         F.lit(None).cast("double").alias("duration_sec"),
     )
     survivors = base.where(size_ok & fmt_ok)
-    if not deep_probe:
-        probed = survivors.select(
-            "item_id", "n_bytes", "fmt",
-            F.lit("accepted").alias("verdict"),
-            F.lit(None).cast("long").alias("width"),
-            F.lit(None).cast("long").alias("height"),
-            F.lit(None).cast("double").alias("duration_sec"),
-        )
-        return probed.unionByName(rejected)
 
     def probe_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from slower_whisper_spark.operators.multimodal import parse_media_header

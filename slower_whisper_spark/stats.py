@@ -1,22 +1,22 @@
-"""Single-pass per-partition column statistics.
+"""Per-partition column statistics, folded into the suite's pass-1 scan.
 
 The north star's "column stats via a single vectorized pass": count,
-null-rate, min/max, mean/stddev, quantiles, approximate distinct — ALL
-columns, ALL partitions, ONE ``groupBy(partition).agg(...)`` job. Catalyst
-prunes the Parquet scan to the profiled columns and whole-stage codegen
-fuses every aggregate into one loop.
+null-rate, min/max, mean/stddev, quantiles, approximate distinct — every
+profiled column, every partition, inside the ONE
+``groupBy(partition).agg(...)`` job that ``ConstraintSuite.validate``
+runs for its rules (``stats_columns=[...]``; the long-format table lands
+in ``SuiteResult.stats``). Catalyst prunes the Parquet scan to the
+referenced columns and whole-stage codegen fuses every aggregate into one
+loop.
 
 Reference ancestors: per-speaker stats rollups
 (ref: transcription/speaker_stats.py:26-102 — sums, medians, categorical
 ratios) and the batch verdict rollup (ref: transcription/models.py:384-429).
 
-Distinct counts use Spark's built-in Apache DataSketches HLL
-(``hll_sketch_agg``) so the per-partition sketches are MERGEABLE: the same
-binary sketches we surface per partition can be unioned (``hll_union_agg``)
-into table-level stats, or persisted in the checkpoint manifest and merged
-across runs — the property SURVEY §4.2 calls out as missing from plain
-``approx_count_distinct``. Quantiles use ``percentile_approx``
-(Greenwald-Khanna) in-pass.
+Distinct counts come from Spark's built-in Apache DataSketches HLL
+(``hll_sketch_agg``, read back with ``hll_sketch_estimate``); quantiles use
+``percentile_approx`` (Greenwald-Khanna) in-pass. Mergeable, persistable
+quantile sketches are ``functions/kll.py``.
 """
 
 from __future__ import annotations
@@ -33,14 +33,15 @@ NUMERIC_TYPES = (
     T.ByteType, T.ShortType, T.IntegerType, T.LongType,
     T.FloatType, T.DoubleType, T.DecimalType,
 )
+# the p50/p95 columns of the stats table, and percentile_approx's accuracy
+_QUANTILES = (0.5, 0.95)
+_QUANTILE_ACCURACY = 1000
 
 
 @dataclass
 class ColumnProfile:
     column: str
     dtype: str
-    quantiles: tuple[float, ...] = (0.5, 0.95)
-    distinct: bool = True
 
 
 def _profiles_for(df: DataFrame, columns: list[str] | None) -> list[ColumnProfile]:
@@ -54,21 +55,21 @@ def _profiles_for(df: DataFrame, columns: list[str] | None) -> list[ColumnProfil
     return out
 
 
-def stat_agg_exprs(
-    df: DataFrame,
-    profiles: list[ColumnProfile],
-    quantiles: tuple[float, ...] = (0.5, 0.95),
-    quantile_accuracy: int = 1000,
-) -> list:
-    """Aggregate expressions for a stats profile — exposed separately so
-    ConstraintSuite can fold them into its pass-1 scan (ONE scan computes
-    rule fail-counts AND column stats).
+def stat_agg_exprs(df: DataFrame, profiles: list[ColumnProfile]) -> list:
+    """Aggregate expressions for a stats profile, which ConstraintSuite
+    folds into its pass-1 scan (ONE scan computes rule fail-counts AND
+    column stats).
 
     Built as SQL text (one parsed F.expr per aggregate): profiling 5
     columns is ~35 py4j round-trips instead of several hundred Column
     calls — plan construction is driver-serial at both ends of a scaling
-    run, so it is sized like any other phase."""
+    run, so it is sized like any other phase.
+
+    String/binary columns are profiled on their LENGTH for the numeric
+    moments (the webtext table's text/html stats are length distributions);
+    min/max of strings stay lexical."""
     by_type = {f.name: f.dataType for f in df.schema.fields}
+    qs = ", ".join(sql_double(q) for q in _QUANTILES)
     aggs = []
     for p in profiles:
         dt = by_type[p.column]
@@ -86,7 +87,11 @@ def stat_agg_exprs(
         n = p.column
         # binary min/max as raw bytes would produce non-UTF8 strings; use lengths
         ordered = f"length({c})" if isinstance(dt, T.BinaryType) else c
-        qs = ", ".join(sql_double(q) for q in quantiles)
+        # hll_sketch_agg accepts int/bigint/string/binary only
+        if isinstance(dt, (T.StringType, T.BinaryType, T.IntegerType, T.LongType)):
+            sk_src = c
+        else:
+            sk_src = f"CAST({c} AS STRING)"
         aggs += [
             F.expr(f"sum(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END) AS {sql_ident(f'nulls__{n}')}"),
             F.expr(f"CAST(min({ordered}) AS STRING) AS {sql_ident(f'min__{n}')}"),
@@ -94,38 +99,28 @@ def stat_agg_exprs(
             F.expr(f"avg({num}) AS {sql_ident(f'mean__{n}')}"),
             F.expr(f"stddev_samp({num}) AS {sql_ident(f'stddev__{n}')}"),
             F.expr(
-                f"percentile_approx({num}, array({qs}), {int(quantile_accuracy)})"
+                f"percentile_approx({num}, array({qs}), {_QUANTILE_ACCURACY})"
                 f" AS {sql_ident(f'q__{n}')}"
             ),
+            F.expr(f"hll_sketch_agg({sk_src}, 14) AS {sql_ident(f'hll__{n}')}"),
         ]
-        if p.distinct:
-            # hll_sketch_agg accepts int/bigint/string/binary only
-            if isinstance(dt, (T.StringType, T.BinaryType, T.IntegerType, T.LongType)):
-                sk_src = c
-            else:
-                sk_src = f"CAST({c} AS STRING)"
-            aggs.append(F.expr(f"hll_sketch_agg({sk_src}, 14) AS {sql_ident(f'hll__{n}')}"))
     return aggs
 
 
-def unpivot_stats(
-    wide: DataFrame,
-    profiles: list[ColumnProfile],
-    quantiles: tuple[float, ...] = (0.5, 0.95),
-    include_sketches: bool = False,
-) -> DataFrame:
+def unpivot_stats(wide: DataFrame, profiles: list[ColumnProfile]) -> DataFrame:
     """Long-format stats from a (cached) wide agg row. Pure projections —
     no extra scan of the source table.
+
+    Output: (partition, column, dtype, rows, nulls, null_rate, min, max,
+    mean, stddev, p50, p95, approx_distinct).
 
     ONE ``stack`` generator unpivots every profiled column in a single
     projection: no per-column select + unionByName chain (which re-analyzed
     a growing plan per column — O(n²) driver time) and no Union node at
     runtime."""
     names = ["column", "dtype", "nulls", "null_rate", "min", "max", "mean", "stddev"]
-    names += [f"p{int(q * 100)}" for q in quantiles]
+    names += [f"p{int(q * 100)}" for q in _QUANTILES]
     names.append("approx_distinct")
-    if include_sketches:
-        names.append("hll_sketch_b64")
 
     tuples = []
     for p in profiles:
@@ -141,10 +136,8 @@ def unpivot_stats(
             sql_ident(f"mean__{n}"),
             sql_ident(f"stddev__{n}"),
         ]
-        row += [f"{q_arr}[{i}]" for i in range(len(quantiles))]
+        row += [f"{q_arr}[{i}]" for i in range(len(_QUANTILES))]
         row.append(f"CAST(hll_sketch_estimate({hll}) AS BIGINT)")
-        if include_sketches:
-            row.append(f"base64({hll})")
         tuples.append(", ".join(row))
 
     stacked = wide.selectExpr(
@@ -153,36 +146,3 @@ def unpivot_stats(
         f"stack({len(profiles)}, {', '.join(tuples)}) AS ({', '.join(names)})",
     )
     return stacked.select("partition", *names[:2], "rows", *names[2:])
-
-
-def profile(
-    df: DataFrame,
-    *,
-    partition_col: str | None = None,
-    columns: list[str] | None = None,
-    quantiles: tuple[float, ...] = (0.5, 0.95),
-    include_sketches: bool = False,
-    quantile_accuracy: int = 1000,
-) -> DataFrame:
-    """One wide agg → long-format stats table.
-
-    Output: (partition, column, dtype, rows, nulls, null_rate, min, max,
-    mean, stddev, p50.., approx_distinct[, hll_sketch_b64]).
-
-    String/binary columns are profiled on their LENGTH for the numeric
-    moments (the webtext table's text/html stats are length distributions);
-    min/max of strings stay lexical.
-    """
-    profiles = _profiles_for(df, columns)
-    if not profiles:
-        raise ValueError("no columns to profile")
-
-    pcol = partition_col or "__all"
-    if partition_col is None:
-        df = df.withColumn("__all", F.lit("ALL"))
-
-    aggs = [F.count(F.lit(1)).alias("rows")] + stat_agg_exprs(
-        df, profiles, quantiles, quantile_accuracy=quantile_accuracy
-    )
-    wide = df.groupBy(F.col(pcol).cast("string").alias("partition")).agg(*aggs).cache()
-    return unpivot_stats(wide, profiles, quantiles, include_sketches)

@@ -45,9 +45,7 @@ def test_sniff_is_jvm_only(spark):
     from slower_whisper_spark.plans import explain_str
 
     df = spark.createDataFrame([(1, bytearray(b"x"))], "item_id long, payload binary")
-    plan = explain_str(
-        ingest_guards(df, deep_probe=False)
-    )
+    plan = explain_str(df.select("item_id", sniff_format(F.col("payload")).alias("fmt")))
     assert "pythonudf" not in plan.lower()
     assert "mapinpandas" not in plan.lower()
 

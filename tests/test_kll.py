@@ -107,6 +107,28 @@ def test_kll_profile_spark_and_manifest_roundtrip(docs_small, tmp_path):
         assert _rank_err(data, merged, q) <= EPS, q
 
 
+def test_kll_profile_bytes_independent_of_row_order(spark):
+    """The same rows in another order or partitioning give byte-identical
+    sketches: each group's values are sorted before the build. A group of
+    at most k values is stored as its raw level-0 buffer (p1 here), so
+    without the sort its bytes would follow the arrival order."""
+    rng = np.random.RandomState(3)
+    rows = [("p1", float(v)) for v in rng.normal(0, 1, 150)]
+    rows += [("p2", float(v)) for v in rng.exponential(2, 1000)]
+    rows += [("p2", None)]
+
+    def sketches(data, n_parts):
+        df = spark.createDataFrame(data, "part string, v double").repartition(n_parts)
+        return sorted(
+            (r["partition"], r["n"], bytes(r["sketch"]))
+            for r in kll_profile(df, "v", partition_col="part").collect()
+        )
+
+    forward = sketches(rows, 1)
+    assert [(p, n) for p, n, _ in forward] == [("p1", 150), ("p2", 1000)]
+    assert sketches(rows[::-1], 1) == forward
+    assert sketches(rows, 4) == forward
+
 def test_old_manifest_entries_still_load(tmp_path):
     """Entries written before the sketches field existed must deserialize."""
     import json, os

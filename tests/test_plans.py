@@ -53,9 +53,9 @@ def test_column_pruning_narrow_scan(docs_parquet):
 
 
 def test_stats_profile_prunes_to_profiled_columns(docs_parquet):
-    from slower_whisper_spark.stats import profile
-
-    st = profile(docs_parquet, partition_col="warc_day", columns=["lang"])
+    st = ConstraintSuite("st", []).validate(
+        docs_parquet, partition_col="warc_day", stats_columns=["lang"]
+    ).stats
     cols = read_schema_columns(st)
     assert "html" not in cols and "text" not in cols, cols
 
@@ -262,12 +262,10 @@ def test_stats_unpivot_single_generate_no_union(docs_parquet):
     per profiled column (O(n^2) driver time) and leave a Union node at
     runtime. Generate appears exactly once; Union not at all."""
     from slower_whisper_spark.plans import explain_str
-    from slower_whisper_spark.stats import profile
 
-    st = profile(
-        docs_parquet, partition_col="warc_day", columns=["url", "lang", "text"]
-    )
-    import re
+    st = ConstraintSuite("st", []).validate(
+        docs_parquet, partition_col="warc_day", stats_columns=["url", "lang", "text"]
+    ).stats
 
     plan = explain_str(st)
     assert "Union" not in plan, plan

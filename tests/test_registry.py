@@ -161,11 +161,12 @@ def test_cli_registry_subcommands(tmp_path, capsys):
 
 
 def test_registry_roundtrips_unique_and_drift(tmp_path):
+    from slower_whisper_spark.migrate import suite_from_spec
     from slower_whisper_spark.rules.drift import Baseline, Drift
 
     base = Baseline(column="text_len", kind="hist", counts=[1] * 22, lo=0.0, hi=100.0, n_buckets=20)
     s = ConstraintSuite(
-        "full", [NotNull("url"), Unique("url", salt_buckets=8), Drift("text_len", base, threshold=0.3)],
+        "full", [NotNull("url"), Unique("url"), Drift("text_len", base, threshold=0.3)],
         version=3,
     )
     reg = SuiteRegistry(str(tmp_path / "reg"))
@@ -173,4 +174,7 @@ def test_registry_roundtrips_unique_and_drift(tmp_path):
     back = reg.load("full", 3)
     assert back.suite_hash == s.suite_hash
     assert {type(r).__name__ for r in back.rules} == {"NotNull", "Unique", "Drift"}
-    assert back.rules[1].salt_buckets == 8
+    # a spec stored while Unique took a salt still loads; the salt is dropped
+    old = json.loads(json.dumps(s.spec()))
+    old["rules"][1]["salt_buckets"] = 8
+    assert suite_from_spec(old).rules[1].spec() == Unique("url").spec()

@@ -1,17 +1,21 @@
-"""Single-pass stats profile + mergeable HLL sketches."""
+"""Single-pass column stats, folded into the suite's pass-1 scan."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from slower_whisper_spark.stats import profile
+from slower_whisper_spark import ConstraintSuite, NotNull
+
+
+def _stats(df, partition_col, columns):
+    return ConstraintSuite("stats", []).validate(
+        df, partition_col=partition_col, stats_columns=columns
+    ).stats
 
 
 def test_profile_shapes_and_exactness(docs_small):
     docs, _, _ = docs_small
-    st = profile(
-        docs.drop("warc_day"), partition_col=None, columns=["url", "lang", "text", "warc_ts"]
-    ).toPandas()
+    st = _stats(docs.drop("warc_day"), None, ["url", "lang", "text", "warc_ts"]).toPandas()
     assert set(st["column"]) == {"url", "lang", "text", "warc_ts"}
     row = st[st["column"] == "lang"].iloc[0]
     n_null = docs.filter(F.col("lang").isNull()).count()
@@ -34,37 +38,22 @@ def test_profile_shapes_and_exactness(docs_small):
 
 def test_profile_per_partition(docs_small):
     docs, _, _ = docs_small
-    st = profile(docs, partition_col="warc_day", columns=["url", "lang"])
-    pdf = st.toPandas()
+    pdf = _stats(docs, "warc_day", ["url", "lang"]).toPandas()
     n_parts = docs.select("warc_day").distinct().count()
     assert len(pdf) == 2 * n_parts
     assert (pdf.groupby("partition")["rows"].max().sum()) == docs.count()
 
 
-def test_hll_sketches_merge_across_partitions(docs_small):
-    docs, _, _ = docs_small
-    st = profile(docs, partition_col="warc_day", columns=["url"], include_sketches=True)
-    merged = st.agg(
-        F.sum("rows").alias("rows"),
-        F.hll_sketch_estimate(F.hll_union_agg(F.unbase64("hll_sketch_b64"))).alias("d"),
-    ).first()
-    true_distinct = docs.select("url").distinct().count()
-    assert abs(merged["d"] - true_distinct) / true_distinct < 0.05
-    assert merged["rows"] == docs.count()
-
-
 def test_profile_binary_column(docs_small):
     docs, _, _ = docs_small
-    st = profile(docs, partition_col=None, columns=["html"]).toPandas()
+    st = _stats(docs, None, ["html"]).toPandas()
     row = st.iloc[0]
     true_mean = docs.select(F.avg(F.length("html"))).first()[0]
     assert abs(row["mean"] - true_mean) < 1e-9
 
 
 def test_stats_folded_into_suite_pass1(docs_small):
-    """stats_columns folds the profile into the suite's single scan."""
-    from slower_whisper_spark import ConstraintSuite, NotNull
-
+    """Folding the stats beside a rule's fail counts leaves them unchanged."""
     docs, _, _ = docs_small
     res = ConstraintSuite("s", [NotNull("url")]).validate(
         docs, key_col="url", partition_col="warc_day", stats_columns=["url", "lang"]
@@ -73,7 +62,7 @@ def test_stats_folded_into_suite_pass1(docs_small):
     pdf = res.stats.toPandas()
     n_parts = docs.select("warc_day").distinct().count()
     assert len(pdf) == 2 * n_parts
-    direct = profile(docs, partition_col="warc_day", columns=["url", "lang"]).toPandas()
+    alone = _stats(docs, "warc_day", ["url", "lang"]).toPandas()
     a = pdf.sort_values(["partition", "column"]).reset_index(drop=True)
-    b = direct.sort_values(["partition", "column"]).reset_index(drop=True)
+    b = alone.sort_values(["partition", "column"]).reset_index(drop=True)
     assert (a["nulls"] == b["nulls"]).all() and (a["rows"] == b["rows"]).all()

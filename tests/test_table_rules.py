@@ -1,6 +1,6 @@
 """Unique / ForeignKey / HashInvariant / Drift table rules.
 
-Includes the equivalence proofs SURVEY §7.2 requires: salted two-phase
+Includes the equivalence proofs SURVEY §7.2 requires: two-phase
 uniqueness == naive dropDuplicates; Bloom refint ⊆ exact anti-join refint.
 """
 
@@ -32,6 +32,9 @@ def test_unique_matches_naive_dedup(docs_small):
 
     verd = res.verdicts.toPandas()
     assert verd["violations"].sum() == naive_dup_rows
+    # unpartitioned: the suite groups by its synthetic '__all' constant
+    whole = suite.validate(docs, key_col="url").verdicts.collect()
+    assert [(r["partition"], r["violations"]) for r in whole] == [("ALL", naive_dup_rows)]
 
     viol = res.violations.toPandas()
     dup_keys_naive = {
@@ -48,17 +51,6 @@ def test_unique_clean_column_passes(docs_small):
         uniq, key_col="rid", partition_col="warc_day"
     )
     assert res.overall_passed()
-
-
-def test_unique_salted_equivalence_unpartitioned(docs_small):
-    docs, _, _ = docs_small
-    res_plain = ConstraintSuite("u3", [Unique("url")]).validate(docs, key_col="url")
-    res_salted = ConstraintSuite("u4", [Unique("url", salt_buckets=16)]).validate(
-        docs, key_col="url"
-    )
-    v1 = res_plain.verdicts.agg(F.sum("violations")).first()[0]
-    v2 = res_salted.verdicts.agg(F.sum("violations")).first()[0]
-    assert v1 == v2
 
 
 # --------------------------------------------------------------------- #
@@ -285,26 +277,6 @@ def test_hash_invariant_expected_content_in_suite_hash(spark):
     assert s1.suite_hash != s2.suite_hash
 
 
-def test_unique_salt_engages_when_unpartitioned(docs_small):
-    """The salt_buckets knob must actually appear in the phase-1 plan when
-    the table is unpartitioned (suite passes the synthetic '__all')."""
-    docs, _, _ = docs_small
-    rule = Unique("url", salt_buckets=16)
-    verd, _ = rule.evaluate(
-        docs.withColumn("__all", F.lit("ALL")),
-        key_col="url", partition_col="__all", violation_limit=10,
-    )
-    plan = verd._jdf.queryExecution().optimizedPlan().toString()
-    # the optimizer renames the __salt alias to _groupingexpression; the
-    # pmod(xxhash64(...)) salt expression itself is the stable marker
-    assert "pmod(xxhash64" in plan
-    # and with a real partition column it stays out of the grouping
-    verd2, _ = rule.evaluate(
-        docs, key_col="url", partition_col="warc_day", violation_limit=10
-    )
-    assert "pmod(xxhash64" not in verd2._jdf.queryExecution().optimizedPlan().toString()
-
-
 def test_suite_unpersist_releases_storage(docs_small, spark):
     docs, _, _ = docs_small
     suite = ConstraintSuite("up", [Unique("url")])
@@ -464,11 +436,12 @@ def test_unique_rendered_rows(spark):
 
 
 def test_unique_null_key_rows(spark):
-    """A duplicated NULL key is listed among the violation rows, but the
-    per-partition verdicts count only the duplicated non-NULL keys."""
+    """NULL keys are exempt, as under SQL UNIQUE: a duplicated NULL key is
+    neither counted nor listed, so a partition whose only repeats are NULL
+    keys (d3) passes and the verdicts agree with the violation rows."""
     df = spark.createDataFrame(
         [("a", "d1"), ("a", "d2"), (None, "d1"), (None, "d1"), (None, "d2"), ("b", "d2"),
-         ("c", "d2"), ("c", "d2")],
+         ("c", "d2"), ("c", "d2"), (None, "d3"), (None, "d3")],
         "url string, day string",
     )
     verdicts, violations = _render(Unique("url"), df)
@@ -477,7 +450,6 @@ def test_unique_null_key_rows(spark):
         ("d2", "unique(url)", False, 3, "3 rows with duplicated key", "url unique"),
     ]
     assert violations == [
-        (None, "unique(url)", "count=3", "count=1"),
         ("a", "unique(url)", "count=2", "count=1"),
         ("c", "unique(url)", "count=2", "count=1"),
     ]
