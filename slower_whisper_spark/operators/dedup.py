@@ -117,7 +117,6 @@ def minhash_lsh_candidates(
     bands: int = 16,
     shingle_n: int = 3,
     max_bucket_size: int = 200,
-    persisted: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Candidate pairs (id_a < id_b, n_shared_bands) that share ≥1 LSH band
     bucket. rows_per_band = num_hashes/bands sets the similarity knee:
@@ -130,12 +129,7 @@ def minhash_lsh_candidates(
     one exchange partitioned exactly on the self-join keys. Both join sides
     are then the identical subtree and Catalyst's ReusedExchange computes the
     signature aggregation + shuffle ONCE, with no persist/cache write at all:
-    total band-row shuffles = 1 (previously: cache write + 3 shuffles).
-
-    ``persisted``: pass a list to receive any internally persisted
-    DataFrames for caller-controlled unpersist (the SuiteResult.unpersist
-    pattern). The current plan caches nothing, so the list stays empty —
-    kept for interface stability."""
+    total band-row shuffles = 1 (previously: cache write + 3 shuffles)."""
     if num_hashes % bands:
         raise ValueError("bands must divide num_hashes")
     r = num_hashes // bands
@@ -325,12 +319,8 @@ def jaccard_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
     )
-    if prune_stats is not None:
-        if stats_out is not None:
-            stats_out.update(prune_stats)
-        # best-effort convenience only — a monkey-patched attribute does not
-        # survive downstream transformations; stats_out is the durable channel
-        out.stop_shingle_stats = prune_stats
+    if prune_stats is not None and stats_out is not None:
+        stats_out.update(prune_stats)
     return out
 
 

@@ -1,16 +1,22 @@
 """Similarity search over embedding columns (array<float>).
 
-  * ``cosine_topk``        — brute-force exact top-k: broadcast the (small)
-    query set against the corpus, cosine via one numpy einsum per Arrow
-    batch, rank per query. The exactness baseline.
+  * ``cosine_topk``        — brute-force exact top-k: collect the (small)
+    query set into a driver matrix, cosine via one numpy matmul per Arrow
+    batch of the corpus, rank per query. The exactness baseline.
   * ``lsh_bucketed_topk``  — random-hyperplane LSH scale path: seeded
     hyperplanes → sign-bit bucket key → candidates share a bucket in ≥1
     table → exact cosine re-rank on the (much smaller) candidate set.
     Recall < 1.0 by design; tested against the brute-force oracle.
+  * ``ivf_topk`` / ``ivf_topk_partitioned`` — IVF scale path: corpus
+    vectors route to one centroid cell, queries probe ``n_probe`` cells,
+    exact cosine re-ranks the probed candidates.
   * ``embedding_near_duplicates`` — pairs above a cosine threshold.
 
 At 100 TB the corpus side streams (no shuffle: the query set/hyperplanes are
-broadcast literals) and only candidates hit the re-rank join.
+broadcast literals) and only candidates hit the re-rank join. The ANN
+operators re-rank with the pair kernel (``make_cosine_pair``), which scores
+only the candidate pairs; the matrix kernel of ``cosine_topk`` scores every
+corpus row against every query.
 """
 
 from __future__ import annotations
@@ -30,9 +36,16 @@ def _pair_cos(a, b, compute_dtype: str = "float64") -> F.Column:
     return make_cosine_pair(compute_dtype)(a, b)
 
 
-# queries larger than this fall back to the pair-wise cross-join path: the
-# matrix kernel collects the query set to the driver (bounded collect — the
-# same pattern as the stop-shingle set), and 10^4 × 64-dim float64 is ~5 MB
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """The first ``k`` rows per ``query_id`` of (query_id, neighbor_id, cos)
+    in the operators' one total order, (cos DESC NULLS LAST, neighbor_id
+    ASC), numbered in ``rank``."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+# the matrix kernel collects the query set to the driver (bounded collect —
+# the same pattern as the stop-shingle set): 10^4 × 64-dim float64 is ~5 MB
 _QUERY_MATRIX_CAP = 10_000
 
 
@@ -48,32 +61,35 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact top-k neighbours per query: (query_id, neighbor_id, cos, rank).
 
-    queries is expected to be small (broadcast); corpus streams.
+    queries is expected to be small; corpus streams. A query set of more
+    than ``_QUERY_MATRIX_CAP`` (10,000) rows raises ``ValueError``: exact
+    scoring of that many queries is |corpus| × |queries| work, the shape
+    ``lsh_bucketed_topk`` and ``ivf_topk`` exist for.
 
     Eager: the query set is collected to the Spark driver when this
     function is CALLED (one Spark job before the returned DataFrame runs),
     and the cap bounds it in rows, not bytes — wide vectors make it
     proportionally larger.
 
-    Plan shape (guide §4.1/§2.3): the query set is collected once (bounded —
-    ≤ ``_QUERY_MATRIX_CAP`` rows, the broadcast-dimension pattern) into a
+    Plan shape (guide §4.1/§2.3): the query set is collected once into a
     numpy matrix captured by a ``mapInPandas`` kernel over the CORPUS alone,
-    so each corpus vector crosses the Arrow boundary exactly ONCE instead of
-    once per query (the previous crossJoin shipped |corpus| × |queries|
-    vector PAIRS through Python), and one dgemm per batch scores every
-    query. The kernel also pre-reduces to an exact per-batch top-k per query
-    under the same total order the window uses — (cos DESC NULLS LAST,
-    neighbor_id ASC) — so the global window ranks batches × queries × k rows
-    instead of |corpus| × |queries|. Zero-norm vectors keep the NULL-cos
-    semantics of the pair kernel (sort last, never rank above a number).
+    so each corpus vector crosses the Arrow boundary exactly ONCE, and one
+    dgemm per batch scores every query. The kernel also pre-reduces to an
+    exact per-batch top-k per query under the same total order the window
+    uses — (cos DESC NULLS LAST, neighbor_id ASC) — so the global window
+    ranks batches × queries × k rows instead of |corpus| × |queries|.
+    Zero-norm vectors keep the NULL-cos semantics of the pair kernel (sort
+    last, never rank above a number).
     """
     q_probe = queries.select(
         F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__qv")
     )
     q_rows = q_probe.limit(_QUERY_MATRIX_CAP + 1).collect()
-    if len(q_rows) > _QUERY_MATRIX_CAP:  # pragma: no cover - scale fallback
-        return _cosine_topk_pairs(corpus, queries, id_col=id_col, vec_col=vec_col,
-                                  query_id_col=query_id_col, k=k, exclude_self=exclude_self)
+    if len(q_rows) > _QUERY_MATRIX_CAP:
+        raise ValueError(
+            f"cosine_topk: more than {_QUERY_MATRIX_CAP} query rows; exact "
+            "top-k is for small query sets — use lsh_bucketed_topk or ivf_topk"
+        )
 
     qid_t = queries.schema[query_id_col].dataType.simpleString()
     nid_t = corpus.schema[id_col].dataType.simpleString()
@@ -124,35 +140,7 @@ def cosine_topk(
                 yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n, "cos": out_c})
 
         scored = narrow.mapInPandas(part_topk, out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def _cosine_topk_pairs(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "vec_id",
-    k: int = 10,
-    exclude_self: bool = True,
-) -> DataFrame:
-    """Pair-wise crossJoin form of ``cosine_topk``: the fallback when the
-    query set exceeds the driver-matrix cap. Ships every (query, corpus)
-    vector pair through the Arrow boundary — correct at any |queries|, but
-    |queries|× the transfer of the matrix kernel."""
-    # native vector type end-to-end: the numpy kernel upcasts to float64
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv"))
-    q = queries.select(F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
-    joined = c.crossJoin(F.broadcast(q))
-    if exclude_self:
-        joined = joined.filter(F.col("neighbor_id") != F.col("query_id"))
-    scored = joined.select(
-        "query_id", "neighbor_id", _pair_cos(F.col("__qv"), F.col("__cv")).alias("cos")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rank_topk(scored, k)
 
 
 def _hyperplanes(dim: int, n_planes: int, n_tables: int, seed: int) -> np.ndarray:
@@ -168,6 +156,17 @@ def _vec_dim(df: DataFrame, vec_col: str, dim: int | None) -> int:
     if dim is not None:
         return dim
     return len(df.select(vec_col).first()[0])
+
+
+def _bucket_rows(df: DataFrame, id_col: str, out_id: str, vec_col: str, bucket_udf) -> DataFrame:
+    """(out_id, table, bucket): one row per LSH table a vector hashes into.
+    Native (float32) vectors go to the UDF — numpy upcasts to float64 INSIDE
+    the kernel (exact widening, identical results to a Spark cast), so the
+    Arrow transfer moves half the bytes."""
+    return df.select(
+        F.col(id_col).alias(out_id),
+        F.posexplode(bucket_udf(F.col(vec_col))).alias("table", "bucket"),
+    )
 
 
 def lsh_bucketed_topk(
@@ -208,18 +207,8 @@ def lsh_bucketed_topk(
 
     tables = _hyperplanes(_vec_dim(corpus, vec_col, dim), n_planes, n_tables, seed)
     bucket_udf = make_lsh_buckets(tables)
-
-    def bucketed(df: DataFrame, idc: str, out_id: str) -> DataFrame:
-        # native (float32) vectors go to the UDF — numpy upcasts to float64
-        # INSIDE the kernel (exact widening, identical results to a Spark
-        # cast) so the Arrow transfer moves half the bytes
-        return df.select(
-            F.col(idc).alias(out_id),
-            F.posexplode(bucket_udf(F.col(vec_col))).alias("table", "bucket"),
-        )
-
-    cb = bucketed(corpus, id_col, "neighbor_id")
-    qb = bucketed(queries, query_id_col, "query_id")
+    cb = _bucket_rows(corpus, id_col, "neighbor_id", vec_col, bucket_udf)
+    qb = _bucket_rows(queries, query_id_col, "query_id", vec_col, bucket_udf)
     cand = cb.join(F.broadcast(qb), ["table", "bucket"]).select("query_id", "neighbor_id").distinct()
     if exclude_self:
         cand = cand.filter(F.col("neighbor_id") != F.col("query_id"))
@@ -234,8 +223,7 @@ def lsh_bucketed_topk(
             _pair_cos(F.col("__qv"), F.col("__cv"), rerank_dtype).alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rank_topk(scored, k)
 
 
 def _ivf_centroids(dim: int, n_centroids: int, seed: int) -> np.ndarray:
@@ -247,6 +235,49 @@ def _ivf_centroids(dim: int, n_centroids: int, seed: int) -> np.ndarray:
     rng = np.random.RandomState(seed)
     c = rng.normal(size=(n_centroids, dim))
     return c / np.linalg.norm(c, axis=1, keepdims=True)
+
+
+def _centroid_source(
+    df: DataFrame, vec_col: str, dim: int | None, n_centroids: int, seed: int,
+    centroids: np.ndarray | None,
+) -> np.ndarray:
+    """The IVF cells: the given ``centroids`` row-normalized, else the
+    seeded ``_ivf_centroids`` at ``df``'s vector dimension."""
+    if centroids is None:
+        return _ivf_centroids(_vec_dim(df, vec_col, dim), n_centroids, seed)
+    cents = np.asarray(centroids, dtype=float)
+    return cents / np.maximum(np.linalg.norm(cents, axis=1, keepdims=True), 1e-12)
+
+
+def _cell(cents: np.ndarray, vec_col: str) -> F.Column:
+    """The one IVF cell a vector routes to (its nearest centroid)."""
+    from slower_whisper_spark.functions.vectorized import make_ivf_assign
+
+    return F.element_at(make_ivf_assign(cents, n_probe=1)(F.col(vec_col)), 1).alias("cell")
+
+
+def _probes(queries: DataFrame, query_id_col: str, vec_col: str, cents: np.ndarray, n_probe: int) -> DataFrame:
+    """(query_id, __qv, cell): one row per cell a query probes."""
+    from slower_whisper_spark.functions.vectorized import make_ivf_assign
+
+    return queries.select(
+        F.col(query_id_col).alias("query_id"),
+        F.col(vec_col).alias("__qv"),
+        F.explode(make_ivf_assign(cents, n_probe=n_probe)(F.col(vec_col))).alias("cell"),
+    )
+
+
+def _ivf_rerank(cells: DataFrame, probes: DataFrame, k: int, exclude_self: bool) -> DataFrame:
+    """Exact top-k over the probed cells: the corpus ``cells``
+    (neighbor_id, __cv, cell) meet the broadcast ``probes`` on their cell,
+    and the pair kernel re-ranks the candidates."""
+    cand = cells.join(F.broadcast(probes), "cell").select("query_id", "neighbor_id", "__qv", "__cv")
+    if exclude_self:
+        cand = cand.filter(F.col("neighbor_id") != F.col("query_id"))
+    scored = cand.select(
+        "query_id", "neighbor_id", _pair_cos(F.col("__qv"), F.col("__cv")).alias("cos")
+    )
+    return _rank_topk(scored, k)
 
 
 def ivf_topk(
@@ -275,34 +306,11 @@ def ivf_topk(
     ``centroids`` swaps in trained cells (see
     ``train_ivf_centroids_distributed``) — the routing plan is identical
     either way."""
-    from slower_whisper_spark.functions.vectorized import make_ivf_assign
-
-    if centroids is not None:
-        cents = np.asarray(centroids, dtype=float)
-        cents = cents / np.maximum(np.linalg.norm(cents, axis=1, keepdims=True), 1e-12)
-    else:
-        cents = _ivf_centroids(_vec_dim(corpus, vec_col, dim), n_centroids, seed)
-    assign1 = make_ivf_assign(cents, n_probe=1)
-    assignp = make_ivf_assign(cents, n_probe=n_probe)
-
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        F.element_at(assign1(F.col(vec_col)), 1).alias("cell"),
+    cents = _centroid_source(corpus, vec_col, dim, n_centroids, seed, centroids)
+    cells = corpus.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv"), _cell(cents, vec_col)
     )
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        F.explode(assignp(F.col(vec_col))).alias("cell"),
-    )
-    cand = c.join(F.broadcast(q), "cell").select("query_id", "neighbor_id", "__qv", "__cv")
-    if exclude_self:
-        cand = cand.filter(F.col("neighbor_id") != F.col("query_id"))
-    scored = cand.select(
-        "query_id", "neighbor_id", _pair_cos(F.col("__qv"), F.col("__cv")).alias("cos")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _ivf_rerank(cells, _probes(queries, query_id_col, vec_col, cents, n_probe), k, exclude_self)
 
 
 def ivf_assign_cells(
@@ -320,18 +328,9 @@ def ivf_assign_cells(
     reads ONLY the probed cells' files (hive partition pruning — proved by a
     PartitionFilters plan test), turning a full-corpus scan into
     n_probe/n_centroids of the data per query batch."""
-    if centroids is not None:
-        cents = np.asarray(centroids, dtype=float)
-        cents = cents / np.maximum(np.linalg.norm(cents, axis=1, keepdims=True), 1e-12)
-    else:
-        cents = _ivf_centroids(_vec_dim(df, vec_col, dim), n_centroids, seed)
-    from slower_whisper_spark.functions.vectorized import make_ivf_assign
-
-    assign1 = make_ivf_assign(cents, n_probe=1)
+    cents = _centroid_source(df, vec_col, dim, n_centroids, seed, centroids)
     return df.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("embedding"),
-        F.element_at(assign1(F.col(vec_col)), 1).alias("cell"),
+        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"), _cell(cents, vec_col)
     )
 
 
@@ -357,33 +356,15 @@ def ivf_topk_partitioned(
     ``ivf_topk`` with the same centroids (asserted in tests); this variant
     exists for corpora big enough that reading 100% of the vectors to route
     them per query batch is the dominant cost."""
-    if centroids is not None:
-        cents = np.asarray(centroids, dtype=float)
-        cents = cents / np.maximum(np.linalg.norm(cents, axis=1, keepdims=True), 1e-12)
-    else:
-        cents = _ivf_centroids(_vec_dim(queries, vec_col, dim), n_centroids, seed)
-    from slower_whisper_spark.functions.vectorized import make_ivf_assign
-
-    assignp = make_ivf_assign(cents, n_probe=n_probe)
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        F.explode(assignp(F.col(vec_col))).alias("cell"),
-    )
+    cents = _centroid_source(queries, vec_col, dim, n_centroids, seed, centroids)
+    probes = _probes(queries, query_id_col, vec_col, cents, n_probe)
     # one tiny job on the query side yields the probe set — the partition
     # filter literal for the corpus scan
-    probed = sorted({r["cell"] for r in q.select("cell").distinct().collect()})
-    c = corpus.filter(F.col("cell").isin(probed)).select(
+    probed = sorted({r["cell"] for r in probes.select("cell").distinct().collect()})
+    cells = corpus.filter(F.col("cell").isin(probed)).select(
         F.col("vec_id").alias("neighbor_id"), F.col(vec_col).alias("__cv"), "cell"
     )
-    cand = c.join(F.broadcast(q), "cell").select("query_id", "neighbor_id", "__qv", "__cv")
-    if exclude_self:
-        cand = cand.filter(F.col("neighbor_id") != F.col("query_id"))
-    scored = cand.select(
-        "query_id", "neighbor_id", _pair_cos(F.col("__qv"), F.col("__cv")).alias("cos")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _ivf_rerank(cells, probes, k, exclude_self)
 
 
 # Fixed-point scale for exact-mode kmeans partials: normalized components
@@ -558,10 +539,7 @@ def embedding_near_duplicates(
 
     tables = _hyperplanes(_vec_dim(df, vec_col, dim), n_planes, n_tables, seed)
     bucket_udf = make_lsh_buckets(tables)
-    b = df.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(bucket_udf(F.col(vec_col))).alias("table", "bucket"),
-    )
+    b = _bucket_rows(df, id_col, "id", vec_col, bucket_udf)
     if max_bucket_size:
         # the cap being ACTIVE is never silent, and the driver-checked
         # oracle replays the cap so its effect is correctness-visible

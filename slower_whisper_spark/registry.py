@@ -20,7 +20,9 @@ Iceberg/DB table is a drop-in swap)::
 Suites rebuilt from a spec cover every metadata-only rule (schema atoms,
 expr/conditional, nested, type_check, unique, drift-with-baseline).
 ForeignKey/HashInvariant carry live reference TABLES — those suites can be
-saved and verified, but ``load`` needs the tables back via ``tables=``.
+saved and verified, but ``load`` cannot rebuild them: a spec with a
+``foreign_key`` or ``hash_invariant`` rule raises ``SuiteVersionError`` in
+``migrate.suite_from_spec``.
 """
 
 from __future__ import annotations

@@ -115,7 +115,9 @@ def failure_result(
     ``counts``: (__part, violations), one row per failing partition →
     verdicts with ``observed`` = "<violations> <noun>" and ``expected``.
     ``rows``: (key, observed, expected), one row per violation → violation
-    rows, the first ``violation_limit`` by key."""
+    rows, the first ``violation_limit`` in (key, observed, expected) order —
+    pass 1's top-k order, so rows that tie on key at the limit are kept the
+    same way whatever the partitioning."""
     verdicts = counts.select(
         F.col("__part").alias("partition"),
         F.lit(rule_id).alias("rule_id"),
@@ -126,7 +128,7 @@ def failure_result(
     )
     violations = (
         rows.select("key", F.lit(rule_id).alias("rule_id"), "observed", "expected")
-        .orderBy("key")
+        .orderBy("key", "observed", "expected")
         .limit(violation_limit)
     )
     return verdicts, violations

@@ -82,6 +82,19 @@ def test_kill_and_resume(docs_small, tmp_path):
     assert r3.result is None
 
 
+def test_resume_false_revalidates_completed_partitions(docs_small, tmp_path):
+    """resume=False re-validates partitions whose latest manifest entry is a
+    success at the same suite hash and snapshot."""
+    docs, _, _ = docs_small
+    clean = docs.filter(F.col("url").isNotNull())
+    runner = ValidationRunner(_suite(), str(tmp_path / "m"), partition_col="warc_day")
+    r1 = runner.run(clean, snapshot_id="snapA")
+    assert r1.overall_passed and r1.processed_partitions
+    r2 = runner.run(clean, snapshot_id="snapA", resume=False)
+    assert r2.skipped_partitions == []
+    assert sorted(r2.processed_partitions) == sorted(r1.processed_partitions)
+
+
 def test_rule_hash_change_invalidates(docs_small, tmp_path):
     docs, _, _ = docs_small
     clean = docs.filter(F.col("url").isNotNull())

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from slower_whisper_spark.functions.html import (
     extract_html_text,
     extract_html_text_sql,
+    extract_links,
     render_html_py,
 )
 
@@ -46,6 +47,20 @@ def test_extract_binary_path(spark):
     df = spark.createDataFrame(rows, "text string, html binary")
     out = df.select("text", extract_html_text("html", from_binary=True).alias("e")).collect()
     assert all(r["e"] == r["text"] for r in out)
+
+
+def test_extract_links_binary_equals_string(spark):
+    html = [
+        '<p><a href="https://a.example/x">x</a> and <a class="c" href="/rel?q=1">y</a></p>',
+        "<p>no links here</p>",
+        '<a href="https://b.example/\u00e9t\u00e9">caf\u00e9</a>',
+    ]
+    df = spark.createDataFrame([(h, h.encode("utf-8")) for h in html], "s string, b binary")
+    out = df.select(
+        extract_links("s").alias("from_str"), extract_links("b", from_binary=True).alias("from_bin")
+    ).collect()
+    assert [r["from_bin"] for r in out] == [r["from_str"] for r in out]
+    assert out[0]["from_str"] == ["https://a.example/x", "/rel?q=1"]
 
 
 def test_duckdb_dialect_agrees():

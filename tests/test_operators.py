@@ -120,6 +120,17 @@ def test_cosine_topk_skips_null_string_ids(spark):
     ]
 
 
+def test_cosine_topk_refuses_query_sets_past_the_cap(spark):
+    """Past _QUERY_MATRIX_CAP (10,000) query rows cosine_topk raises and
+    names the ANN operators, instead of scoring every (query, corpus) pair."""
+    corpus = spark.createDataFrame([(0, [1.0, 0.0])], "vec_id long, embedding array<double>")
+    queries = spark.range(10_001).select(
+        F.col("id").alias("vec_id"), F.array(F.lit(1.0), F.lit(0.0)).alias("embedding")
+    )
+    with pytest.raises(ValueError, match="lsh_bucketed_topk or ivf_topk"):
+        cosine_topk(corpus, queries, k=3)
+
+
 def test_lsh_ann_recall_vs_bruteforce(spark):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").cache()
     queries = emb.filter(F.col("vec_id") < 20)
@@ -358,27 +369,25 @@ def test_distributed_kmeans_exact_mode_bit_identical(spark):
 
 
 def test_jaccard_prune_stats_and_persisted(spark):
-    """'No silent caps': with max_df active the result carries
-    stop_shingle_stats reporting how many shingles pruning removed (and a
-    pruned run still verifies exactly on survivors); the persisted list
-    receives internally cached DataFrames for caller unpersist."""
+    """'No silent caps': with max_df active, stats_out reports how many
+    shingles pruning removed (and a pruned run still verifies exactly on
+    survivors); the persisted list receives internally cached DataFrames
+    for caller unpersist."""
     rows = [(i, f"common shingle words here unique{i} tail{i} more{i}") for i in range(10)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     stats: dict = {}
     out = jaccard_pairs(df, "text", "doc_id", threshold=0.9, max_df=5, stats_out=stats)
     out.collect()
     # 'common shingle words'/'shingle words here' appear in all 10 docs
-    assert out.stop_shingle_stats["stop_shingles_pruned"] >= 1
-    # stats_out is the durable channel (the DataFrame attribute does not
-    # survive downstream transformations)
-    assert stats["stop_shingles_pruned"] == out.stop_shingle_stats["stop_shingles_pruned"]
+    assert stats["stop_shingles_pruned"] >= 1
 
     # no pruning triggered → stats report zero
-    out2 = jaccard_pairs(df, "text", "doc_id", threshold=0.9, max_df=100)
-    assert out2.stop_shingle_stats["stop_shingles_pruned"] == 0
+    stats2: dict = {}
+    jaccard_pairs(df, "text", "doc_id", threshold=0.9, max_df=100, stats_out=stats2)
+    assert stats2["stop_shingles_pruned"] == 0
 
     held: list = []
-    cand = minhash_lsh_candidates(df, "text", "doc_id", num_hashes=16, bands=8, persisted=held)
+    cand = minhash_lsh_candidates(df, "text", "doc_id", num_hashes=16, bands=8)
     verified = jaccard_pairs(df, "text", "doc_id", threshold=0.9, candidates=cand, persisted=held)
     verified.collect()
     # candidate pair set only: the band-rows persist is gone (the windowed

@@ -72,6 +72,22 @@ def test_tampered_spec_fails_strict_verify(tmp_path):
         reg.load("web", 1)  # load is strict by default
 
 
+def test_non_strict_load_accepts_edited_spec(tmp_path):
+    """strict=False loads a spec file edited after it was locked; the
+    default strict load raises on the same file."""
+    reg = SuiteRegistry(str(tmp_path / "reg"))
+    path = reg.save(_v1())
+    spec = json.load(open(path))
+    spec["rules"][0]["column"] = "host"
+    json.dump(spec, open(path, "w"))
+
+    edited = reg.load("web", 1, strict=False)
+    assert edited.rules[0].spec()["column"] == "host"
+    assert edited.suite_hash != _v1().suite_hash
+    with pytest.raises(IntegrityError):
+        reg.load("web", 1, strict=True)
+
+
 def test_legacy_canonical_hash_lock_migrates_lazily(tmp_path):
     """Locks published before spec_hash (when hashes included spec_format)
     must keep verifying: verify() matches the legacy canonical_hash and

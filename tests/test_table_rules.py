@@ -166,6 +166,39 @@ def test_hash_invariant_detects_exact_mutations(docs_small):
     assert (viol["observed"] != viol["expected"]).all()
 
 
+@pytest.mark.parametrize("shuffle_partitions", [1, 8])
+def test_hash_invariant_limit_ties_keep_smallest_rows(spark, shuffle_partitions):
+    """A duplicated key at the violation_limit boundary keeps its smallest
+    (key, observed, expected) rows, whatever the shuffle partitioning."""
+    import hashlib
+
+    texts = ["t1", "t2", "z", "m", "b", "y", "q", "w"]
+    facts = spark.createDataFrame(
+        [("a", texts[0], 0), ("b", texts[1], 1)] + [("c", t, i % 3) for i, t in enumerate(texts[2:])],
+        "url string, text string, part int",
+    ).repartition(4)
+    expected = spark.createDataFrame(
+        [(u, "0" * 64) for u in "abc"], "url string, text_sha256 string"
+    )
+    rule = HashInvariant("text", expected, rule_id="hi", expected_version="v1")
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    try:
+        res = ConstraintSuite("ties", [rule]).validate(
+            facts, key_col="url", partition_col="part", violation_limit=4
+        )
+        got = [(r["key"], r["observed"]) for r in res.violations.orderBy("key", "observed").collect()]
+        res.unpersist()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+    def sha(t):
+        return hashlib.sha256(t.encode()).hexdigest()
+
+    c_rows = sorted(sha(t) for t in texts[2:])[:2]
+    assert got == [("a", sha("t1")), ("b", sha("t2"))] + [("c", h) for h in c_rows]
+
+
 # --------------------------------------------------------------------- #
 # Drift
 # --------------------------------------------------------------------- #
